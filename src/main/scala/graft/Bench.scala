@@ -122,19 +122,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // shared engine optimizer settings — see graft.EngineConf
-      .config("spark.sql.optimizer.excludedRules",
-        graft.EngineConf.ExcludedOptimizerRules)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineConf.session("graft-bench")
 
     // Optional comma-separated query filter for single-query iteration
     // (dev-loop only; the driver never sets it, so round benches stay full).

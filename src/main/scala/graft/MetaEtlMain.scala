@@ -43,15 +43,7 @@ object MetaEtlMain {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, warehouse) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineConf.session("graft-etl")
     val outcomes = runAll(spark, sfDir, warehouse)
     outcomes.toSeq.sortBy(_._1).foreach {
       case (t, None) => println(s"[etl] $t: ok")

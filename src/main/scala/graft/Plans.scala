@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints the formatted physical plan of each query
   * (or the ones named in args) against sf0.001. Used to keep the plans
   * honest: filters/projections pushed into the parquet scan, dims
@@ -11,17 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-plans")
-      .config("spark.sql.shuffle.partitions", "4")
-      // shared engine optimizer settings — see graft.EngineConf
-      .config("spark.sql.optimizer.excludedRules",
-        graft.EngineConf.ExcludedOptimizerRules)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = EngineConf.session("graft-plans", cpus = 4)
     // optional first arg: an sf dir — then each query is also executed
     // against it (noop sink) and timed
     val (dir, time) = args.headOption match {

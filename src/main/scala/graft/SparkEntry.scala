@@ -63,30 +63,6 @@ object SparkEntry {
     p.toString
   }
 
-  /** Run two INDEPENDENT index-building legs concurrently (the guide's
-    * overlap-independent-jobs discipline — same rationale as
-    * Hybrid.dualAppend's leg pool): the hybrid gates build a BM25 index
-    * and an IVF index into different directories before pinning the
-    * pair, and the two builds share nothing — running them serially
-    * pays both builds' fixed per-job overhead back-to-back. Threads
-    * only block on Spark actions whose tasks the scheduler
-    * interleaves; the first failure propagates. */
-  private lazy val gateBuildPool =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(2, r => {
-        val t = new Thread(r, "gate-build")
-        t.setDaemon(true)
-        t
-      }))
-  private def buildConcurrently(a: => Unit, b: => Unit): Unit = {
-    implicit val ec: scala.concurrent.ExecutionContext = gateBuildPool
-    scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(Seq(
-        scala.concurrent.Future(a), scala.concurrent.Future(b))),
-      scala.concurrent.duration.Duration.Inf)
-    ()
-  }
-
   /** The x251/x255 URL fixture: every canonicalization-rule variant
     * (scheme case, default/non-default port, trailing slash, query
     * param order, fragment) derived closed-form from the id, so the
@@ -2833,7 +2809,7 @@ object SparkEntry {
       val docs = T(s, dir, "documents")
       val emb = T(s, dir, "embeddings")
       val base = scratchDir("dualcdc182")
-      buildConcurrently(
+      Concurrently.both(
         graft.ext.TextAnalysis.saveBm25Index(
           docs.filter(col("doc_id") < 300), "doc_id", "text",
           base + "/bm25"),
@@ -4640,7 +4616,7 @@ object SparkEntry {
       val bidx = base + "/bm25"
       val vidx = base + "/ivf"
       val pins = base + "/pins"
-      buildConcurrently(
+      Concurrently.both(
         graft.ext.TextAnalysis.saveBm25Index(
           docs.filter(col("doc_id") < 400), "doc_id", "text", bidx),
         graft.ext.Similarity.saveIvfIndex(
@@ -4714,7 +4690,7 @@ object SparkEntry {
       val bidx = base + "/bm25"
       val vidx = base + "/ivf"
       val pins = base + "/pins"
-      buildConcurrently(
+      Concurrently.both(
         graft.ext.TextAnalysis.saveBm25Index(
           docs.filter(col("doc_id") < 400), "doc_id", "text", bidx),
         graft.ext.Similarity.saveIvfIndex(
@@ -5229,7 +5205,7 @@ object SparkEntry {
       val bidx = base + "/bm25"
       val vidx = base + "/ivf"
       val pins = base + "/pins"
-      buildConcurrently(
+      Concurrently.both(
         graft.ext.TextAnalysis.saveBm25Index(
           docs.filter(col("doc_id") < 400), "doc_id", "text", bidx),
         graft.ext.Similarity.saveIvfIndex(

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Concurrently
 import graft.sinks.PipelinePin
 
 /** Coordinated serving across the hybrid retrieval stack's two
@@ -42,32 +43,6 @@ object Hybrid {
       "bm25" -> latestVersion(spark, bm25Path),
       "ivf" -> latestVersion(spark, ivfPath)))
 
-  /** Daemon pool for overlapping the two INDEPENDENT index legs (the
-    * guide's overlap-independent-jobs discipline — the same rationale
-    * as StreamIndex's cdcApplyPool and TextAnalysis' segmentWritePool):
-    * the legs touch different paths and different manifests, and on an
-    * append batch the fixed per-job overhead — not the data — is the
-    * cost, so running them serially doubles the wall for nothing.
-    * Threads only block on Spark actions whose tasks the scheduler
-    * interleaves. */
-  private lazy val legPool =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(2, r => {
-        val t = new Thread(r, "hybrid-leg")
-        t.setDaemon(true)
-        t
-      }))
-
-  /** Run the two legs concurrently and propagate the first failure. */
-  private def runLegs(ops: Seq[() => Unit]): Unit = {
-    implicit val ec: scala.concurrent.ExecutionContext = legPool
-    scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(
-        ops.map(op => scala.concurrent.Future(op()))),
-      scala.concurrent.duration.Duration.Inf)
-    ()
-  }
-
   /** The dual CDC applier: land `batchId` in BOTH indexes, then commit
     * one pin naming the new pair. Each leg's append is idempotent on
     * its own `applied` record, so a replay (crash between the two
@@ -84,7 +59,7 @@ object Hybrid {
       textCol: String, ivfPath: String, newVecs: DataFrame,
       vecIdCol: String, vecCol: String, batchId: String)
       : PipelinePin.Pin = {
-    runLegs(Seq(
+    Concurrently.all(Seq(
       () => TextAnalysis.appendToBm25Index(spark, bm25Path, newDocs,
         docIdCol, textCol, batchId),
       () => Similarity.appendToIvfIndex(spark, ivfPath, newVecs,
@@ -135,7 +110,7 @@ object Hybrid {
     val pfs = fs(spark, pinRoot)
     // the two leg vacuums are independent (different paths, each
     // reading its own live-pin set) — overlap them like dualAppend
-    runLegs(Seq(
+    Concurrently.all(Seq(
       () => TextAnalysis.vacuumBm25Index(spark, bm25Path, keepVersions,
         PipelinePin.liveLegVersions(pfs, pinRoot, "bm25")),
       () => Similarity.vacuumIvfIndex(spark, ivfPath, keepVersions,

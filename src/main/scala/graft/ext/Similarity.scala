@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Concurrently
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (SURVEY §7.5).
   *
@@ -699,9 +701,8 @@ object Similarity {
     val centroids = Clustering.kmeansCentroids(corpus, idCol, vecCol,
       kCentroids, iters, trainSample)
     // the centroid and corpus writes are independent jobs over the
-    // trained literals — overlap them (fixed per-job overhead, the
-    // segmentWritePool discipline)
-    runTrainings[Unit](Seq(
+    // trained literals — overlap them (fixed per-job overhead)
+    Concurrently.all(Seq(
       () => centroids.toDF("cluster_id", "centroid")
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$path/centroids/base"),
@@ -1414,12 +1415,11 @@ object Similarity {
     // driver-blocking Lloyd's runs — overlap them, and then overlap the
     // three table writes (each internally unchanged; values bit-equal)
     graft.functions.VectorExprs.register(spark)
-    val (centroids, cbs) = runTwoTrainings(
-      () => Clustering.kmeansCentroids(corpus, idCol, vecCol,
+    val (centroids, cbs) = Concurrently.both(
+      Clustering.kmeansCentroids(corpus, idCol, vecCol,
         kCentroids, coarseIters, trainSample),
-      () => pqCodebooks(corpus, idCol, vecCol, m, ks, pqIters,
-        trainSample))
-    runTrainings[Unit](Seq(
+      pqCodebooks(corpus, idCol, vecCol, m, ks, pqIters, trainSample))
+    Concurrently.all(Seq(
       () => centroids.toDF("cluster_id", "centroid")
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$path/centroids/base"),
@@ -1438,17 +1438,6 @@ object Similarity {
         Map("corpus" -> Seq("base"), "centroids" -> Seq("base"),
           "codebooks" -> Seq("base")),
         Seq.empty))
-  }
-
-  /** Two heterogeneous independent trainings, concurrently. */
-  private def runTwoTrainings[A, B](a: () => A, b: () => B): (A, B) = {
-    implicit val ec: scala.concurrent.ExecutionContext = trainPool
-    val fa = scala.concurrent.Future(a())
-    val fb = scala.concurrent.Future(b())
-    (scala.concurrent.Await.result(fa,
-        scala.concurrent.duration.Duration.Inf),
-      scala.concurrent.Await.result(fb,
-        scala.concurrent.duration.Duration.Inf))
   }
 
   /** Reload a [[saveIvfPqIndex]] index's codebooks for one snapshot:
@@ -1608,12 +1597,11 @@ object Similarity {
     // overlap coarse + codebook training, then the three table writes
     // (the saveIvfPqIndex discipline; values bit-equal to serial)
     graft.functions.VectorExprs.register(spark)
-    val (centroids, cbs) = runTwoTrainings(
-      () => Clustering.kmeansCentroids(corpus, idCol, vecCol,
+    val (centroids, cbs) = Concurrently.both(
+      Clustering.kmeansCentroids(corpus, idCol, vecCol,
         kCentroids, coarseIters, trainSample),
-      () => pqCodebooks(corpus, idCol, vecCol, m, ks, pqIters,
-        trainSample))
-    runTrainings[Unit](Seq(
+      pqCodebooks(corpus, idCol, vecCol, m, ks, pqIters, trainSample))
+    Concurrently.all(Seq(
       () => centroids.toDF("cluster_id", "centroid")
         .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$path/centroids/$seg"),
@@ -2067,39 +2055,12 @@ object Similarity {
     // seeds, same per-subspace jobs), so the codebooks are bit-equal to
     // the serial form's.
     graft.functions.VectorExprs.register(corpus.sparkSession)
-    runTrainings((0 until m).map(i => () =>
+    Concurrently.all((0 until m).map(i => () =>
       Clustering.kmeansCentroids(
         training.select(col(idCol),
           slice(asDouble(col(vecCol)), i * sub + 1, sub).as("_sv")),
         idCol, "_sv", ks, iters)))
   }
-
-  /** Daemon pool for overlapping independent driver-blocking training /
-    * segment-write work (PQ subspace trainers, the coarse-vs-codebook
-    * split, an index build's table writes). Cached (unbounded) so
-    * nested fan-outs — saveIvfPqIndex overlapping coarse training with
-    * [[pqCodebooks]], which fans out m trainers of its own — can never
-    * deadlock on pool starvation; threads only block on Spark actions
-    * whose tasks the scheduler interleaves, and die idle. */
-  private lazy val trainPool =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "ivf-train")
-        t.setDaemon(true)
-        t
-      }))
-
-  /** Run independent thunks concurrently on [[trainPool]], preserving
-    * order; propagates the first failure. */
-  private def runTrainings[T](thunks: Seq[() => T]): Seq[T] =
-    if (thunks.length <= 1) thunks.map(_())
-    else {
-      implicit val ec: scala.concurrent.ExecutionContext = trainPool
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          thunks.map(th => scala.concurrent.Future(th()))),
-        scala.concurrent.duration.Duration.Inf)
-    }
 
   /** PQ-encode a corpus against trained [[pqCodebooks]]: each vector
     * becomes `m` codebook slots (`code_0 … code_{m-1}`, 1-based index

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Concurrently
+
 /** Text-analysis operators for a large-scale training-data pipeline
   * (SURVEY §7.5): token statistics, quality scoring, language-ID heuristic,
   * and document fingerprinting.
@@ -1246,20 +1248,6 @@ object TextAnalysis {
     * normal path pays buys nothing. */
   val TinyAppendRows = 65536L
 
-  /** Daemon pool for overlapping a segment triple's three table
-    * writes: each is a small job over the SAME cached base, and on an
-    * append batch the fixed per-job overhead — not the data — is the
-    * cost, so running them serially triples the wall
-    * (micro-benchmarked on x97's micro-batches). Three threads is the
-    * natural width; Spark's scheduler interleaves the jobs' tasks. */
-  private lazy val segmentWritePool =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(3, r => {
-        val t = new Thread(r, "bm25-segment-write")
-        t.setDaemon(true)
-        t
-      }))
-
   /** Write one (postings, termstats, stats) segment triple for `df`'s
     * documents — shared by the base build and every append. Overwrite
     * mode so a crashed attempt's orphan (never referenced by a
@@ -1295,17 +1283,15 @@ object TextAnalysis {
       .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        segmentWritePool
-      val writes = Seq(
-        scala.concurrent.Future {
+      Concurrently.all(Seq(
+        () => {
           (if (tiny) base.coalesce(1) else base.repartition(col("term")))
             .sortWithinPartitions("term", "doc_id")
             .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(s"$path/postings/$seg")
         },
         // df_t from the postings rows — one pass, no second tokenize
-        scala.concurrent.Future {
+        () => {
           val ts = base.groupBy("term").agg(count(lit(1)).as("df_t"))
           (if (tiny) ts.coalesce(1) else ts.repartition(col("term")))
             .sortWithinPartitions("term")
@@ -1317,16 +1303,13 @@ object TextAnalysis {
         // n_docs = countDistinct(doc_id) — bit-identical to
         // aggregating tokenCount over the raw text
         // (tokenCount == size(tokens)).
-        scala.concurrent.Future {
+        () => {
           base.agg(countDistinct(col("doc_id")).as("n_docs"),
               coalesce(sum(col("tf")), lit(0L)).as("total_len"))
             .coalesce(1)
             .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(s"$path/stats/$seg")
-        })
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(writes),
-        scala.concurrent.duration.Duration.Inf)
+        }))
     } finally base.unpersist(blocking = false)
   }
 
@@ -1848,25 +1831,23 @@ object TextAnalysis {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // the three writes run CONCURRENTLY over the shared cached
-      // `doomed` (the writeBm25Segment pool discipline): each is a
+      // `doomed` (as in writeBm25Segment): each is a
       // small job whose fixed per-job overhead, not data, is the cost
-      implicit val ec: scala.concurrent.ExecutionContext =
-        segmentWritePool
-      val writes = Seq(
-        scala.concurrent.Future {
+      Concurrently.all(Seq(
+        () => {
           doomed.select(col("doc_id"), col("_seg").as("seg")).distinct()
             .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(s"$path/deletes/$seg")
         },
         // negative corrections: every statistic the serve path sums
         // nets to the live corpus's exact value
-        scala.concurrent.Future {
+        () => {
           doomed.groupBy("term")
             .agg((lit(0L) - count(lit(1))).as("df_t"))
             .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(s"$path/termstats/$seg")
         },
-        scala.concurrent.Future {
+        () => {
           doomed.agg(
               (lit(0L) - countDistinct(col("doc_id"))).as("n_docs"),
               (lit(0L) - coalesce(sum(col("tf")), lit(0L)))
@@ -1874,10 +1855,7 @@ object TextAnalysis {
             .coalesce(1)
             .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(s"$path/stats/$seg")
-        })
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(writes),
-        scala.concurrent.duration.Duration.Inf)
+        }))
     } finally doomed.unpersist(blocking = false)
     val sawPostings = snap.segs("postings").toSet
     val sawDeletes = snap.segs(Bm25DeletesTable)
@@ -1974,40 +1952,33 @@ object TextAnalysis {
     // live postings only, the summed termstats net out the deletes'
     // negative corrections (terms with no live postings drop), and the
     // tombstone table empties in the same commit. The three table
-    // folds are independent reads — they run CONCURRENTLY (the
-    // writeBm25Segment pool discipline) so the fold's wall cost is
-    // the postings fold, not the sum of three jobs.
-    locally {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        segmentWritePool
-      val writes = Seq(
-        scala.concurrent.Future {
-          livePostings(spark, path, snap)
-            .repartition(col("term"))
-            .sortWithinPartitions("term", "doc_id")
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$path/postings/$seg")
-        },
-        scala.concurrent.Future {
-          readBm25Table(spark, path, snap, "termstats")
-            .groupBy("term").agg(sum(col("df_t")).as("df_t"))
-            .filter(col("df_t") > 0)
-            .repartition(col("term")).sortWithinPartitions("term")
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$path/termstats/$seg")
-        },
-        scala.concurrent.Future {
-          readBm25Table(spark, path, snap, "stats")
-            .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
-              coalesce(sum(col("total_len")), lit(0L)).as("total_len"))
-            .coalesce(1)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$path/stats/$seg")
-        })
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(writes),
-        scala.concurrent.duration.Duration.Inf)
-    }
+    // folds are independent reads — they run CONCURRENTLY (as in
+    // writeBm25Segment), so the fold's wall cost is the postings fold,
+    // not the sum of three jobs.
+    Concurrently.all(Seq(
+      () => {
+        livePostings(spark, path, snap)
+          .repartition(col("term"))
+          .sortWithinPartitions("term", "doc_id")
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$path/postings/$seg")
+      },
+      () => {
+        readBm25Table(spark, path, snap, "termstats")
+          .groupBy("term").agg(sum(col("df_t")).as("df_t"))
+          .filter(col("df_t") > 0)
+          .repartition(col("term")).sortWithinPartitions("term")
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$path/termstats/$seg")
+      },
+      () => {
+        readBm25Table(spark, path, snap, "stats")
+          .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
+            coalesce(sum(col("total_len")), lit(0L)).as("total_len"))
+          .coalesce(1)
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$path/stats/$seg")
+      }))
     val folded = Bm25Tables.map(t => t -> snap.segs(t).toSet).toMap
     val sawDeletes = snap.segs(Bm25DeletesTable)
     graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>

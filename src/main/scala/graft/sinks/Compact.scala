@@ -58,15 +58,20 @@ object Compact {
   def read(spark: SparkSession, out: String): DataFrame =
     spark.read.parquet(out)
 
+  /** Partition jobs [[compactPartitioned]] keeps in flight. Its own
+    * bounded pool, not graft.Concurrently: its job count grows with the
+    * table's partition count. */
+  private val PartitionWindow = 8
+
   /** Per-partition compaction driver — the 100 TB shape the [[compact]]
     * scaladoc promises: a Hive-layout table (`base/col=value/…`)
     * compacts one PARTITION DIRECTORY at a time. Directories come from
     * one Hadoop FS listing (works on local/HDFS/S3A alike); each then
     * runs [[compact]] as an independent BOUNDED job — size its own
     * bytes, one round-robin shuffle, write `ceil(bytes/targetBytes)`
-    * files under `out/<dir>`. At most `concurrency` partition jobs are
-    * in flight at once (Spark's scheduler interleaves concurrent jobs
-    * from driver threads), so peak cluster footprint is `concurrency`
+    * files under `out/<dir>`. At most [[PartitionWindow]] partition jobs
+    * are in flight at once (Spark's scheduler interleaves concurrent
+    * jobs from driver threads), so peak cluster footprint is that many
     * partitions, never the table — a 100 TB × 1000-day table is 1000
     * small jobs draining through a bounded window, and an incremental
     * run compacts only the partitions a streaming sink touched today
@@ -85,12 +90,11 @@ object Compact {
     * into Spark's uncommitted `_temporary` staging, never a committed
     * dir — so a failed run leaves a partial but non-corrupt `out`. */
   def compactPartitioned(spark: SparkSession, base: String, out: String,
-      targetBytes: Long, concurrency: Int = 8): Seq[(String, Int)] = {
+      targetBytes: Long): Seq[(String, Int)] = {
     import org.apache.hadoop.fs.Path
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     require(targetBytes > 0, s"targetBytes must be positive")
-    require(concurrency > 0, s"concurrency must be positive")
     val p = new Path(base)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(p), s"Compact: no such path: $base")
@@ -100,7 +104,7 @@ object Compact {
     require(parts.nonEmpty,
       s"Compact: no Hive-layout partition directories under $base")
     val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(math.min(concurrency, parts.length))
+      .newFixedThreadPool(math.min(PartitionWindow, parts.length))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val inFlight = parts.toSeq

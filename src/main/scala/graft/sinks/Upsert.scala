@@ -73,9 +73,7 @@ object Upsert {
           .distinct()
         val affected = target.join(broadcast(srcParts),
           partitionCols.toIndexedSeq, "left_semi")
-        val kept = affected.join(
-          source.select(keys.map(col).toIndexedSeq: _*).distinct(),
-          keys.toIndexedSeq, "left_anti")
+        val kept = unmatched(affected, source, keys)
         val merged = kept.unionByName(source.select(target.columns.toIndexedSeq
           .map(col): _*))
           // bounded salt from the upsert keys: caps files per table
@@ -105,9 +103,7 @@ object Upsert {
       }
     } else {
       val target = spark.read.parquet(path)
-      val kept = target.join(
-        source.select(keys.map(col).toIndexedSeq: _*).distinct(),
-        keys.toIndexedSeq, "left_anti")
+      val kept = unmatched(target, source, keys)
       val merged = kept.unionByName(
         source.select(target.columns.toIndexedSeq.map(col): _*))
       merged.write.mode(SaveMode.Overwrite)
@@ -127,6 +123,18 @@ object Upsert {
         s"no upsert keys declared for table '$table'"))
     val partCols = if (keys.contains("date_start")) Seq("date_start") else Nil
     upsert(spark, s"$baseDir/$table", source, keys, partCols)
+  }
+
+  /** `target` rows whose key no `source` row carries, matched
+    * NULL-SAFELY (`<=>`): a key component may be null (a lead-insights
+    * row with no age/gender breakdown), and under `=` such a row would
+    * never match its own re-load: every re-run would append it again. */
+  private def unmatched(target: DataFrame, source: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    val srcKeys = source.select(keys.map(col).toIndexedSeq: _*).distinct()
+    target.as("t").join(srcKeys.as("s"),
+      keys.map(k => col(s"t.`$k`") <=> col(s"s.`$k`")).reduce(_ && _),
+      "left_anti")
   }
 
   private def write(df: DataFrame, path: String, keys: Seq[String],

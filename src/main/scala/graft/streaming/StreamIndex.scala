@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.Concurrently
 import graft.ext.{Similarity, TextAnalysis}
 import graft.sinks.IndexManifest
 
@@ -88,36 +89,6 @@ object StreamIndex {
     IndexManifest.latest(fs, indexPath).map(_.segs(table).length)
       .getOrElse(0)
   }
-
-  /** Daemon pool for overlapping a CDC micro-batch's INDEPENDENT index
-    * legs (the guide's overlap-independent-jobs discipline, same
-    * rationale as TextAnalysis.segmentWritePool): per micro-batch the
-    * cost is fixed per-job overhead, not data, so the dual writer
-    * running its two index legs SERIALLY doubles the wall for nothing —
-    * the legs touch different paths and different manifests. Within a
-    * leg the delete-commits-before-append ordering is preserved (see
-    * bm25CdcWriter); these threads only BLOCK on Spark actions whose
-    * tasks the scheduler interleaves. */
-  private lazy val cdcApplyPool =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(4, r => {
-        val t = new Thread(r, "cdc-apply")
-        t.setDaemon(true)
-        t
-      }))
-
-  /** Run the batch's index mutations concurrently and propagate the
-    * first failure. */
-  private def runConcurrently(ops: Seq[() => Unit]): Unit =
-    if (ops.length <= 1) ops.foreach(_())
-    else {
-      implicit val ec: scala.concurrent.ExecutionContext = cdcApplyPool
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          ops.map(op => scala.concurrent.Future(op()))),
-        scala.concurrent.duration.Duration.Inf)
-      ()
-    }
 
   def bm25AppendWriter(spark: SparkSession, docsDir: String,
       schema: StructType, indexPath: String, idCol: String,
@@ -974,7 +945,7 @@ object StreamIndex {
           // below waits for both legs.
           val ids = b.select(col(idCol))
           val ups = b.filter(col(opCol) === "upsert")
-          runConcurrently(Seq(
+          Concurrently.all(Seq(
             () => {
               if (nDel + nUp > 0)
                 TextAnalysis.deleteFromBm25Index(s, bm25Path, ids,

@@ -16,6 +16,16 @@ class EntrySpec extends SparkSpec {
     }
   }
 
+  test("README states the declared query and oracle counts") {
+    val readme = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("README.md")), "UTF-8")
+    val Counts = ("(?s).*driver contract: (\\d+) queries " +
+      "\\((\\d+) DuckDB-oracled.*").r
+    val Counts(queries, oracled) = readme
+    assert(queries.toInt == SparkEntry.queries.size)
+    assert(oracled.toInt == SparkEntry.oracleSql.size)
+  }
+
   test("every oracle key has a matching query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracles without queries: $missing")

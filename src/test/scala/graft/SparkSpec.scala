@@ -3,19 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM-wide session via
-  * getOrCreate; spark.ui disabled, UTC, small shuffle fan-out). */
+/** Shared local session for all suites: the engine's session
+  * ([[EngineConf.session]], one JVM-wide via getOrCreate) pinned to 4
+  * slots, so small shuffle fan-out regardless of the machine. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    // shared engine optimizer settings — see graft.EngineConf
-    .config("spark.sql.optimizer.excludedRules",
-      graft.EngineConf.ExcludedOptimizerRules)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = EngineConf.session("graft-test", cpus = 4)
 
   val Sf0001 = "/root/testdata/sf0.001"
   val Sf001 = "/root/testdata/sf0.01"

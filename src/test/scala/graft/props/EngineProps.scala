@@ -15,17 +15,8 @@ import graft.sinks.Upsert
   * generator sizes — each property materializes Spark jobs. */
 object EngineProps extends Properties("graft") {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-props")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark: SparkSession =
+    graft.EngineConf.session("graft-props", cpus = 4)
 
   override def overrideParameters(p: org.scalacheck.Test.Parameters)
       : org.scalacheck.Test.Parameters =

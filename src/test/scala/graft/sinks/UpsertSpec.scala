@@ -33,6 +33,27 @@ class UpsertSpec extends SparkSpec {
     assert(got == Map(1L -> "a", 2L -> "b"))
   }
 
+  test("a null key component matches itself: load twice ≡ once on both " +
+      "paths") {
+    // the ads_lead_insights shape: (date_start, ad_id, age, gender) with
+    // no breakdown for an ad whose events carried none
+    val src = Seq(("2024-01-01", 1L, Option.empty[String], "a"),
+        ("2024-01-01", 2L, Some("18-24"), "b"))
+      .toDF("date_start", "k", "age", "v")
+    val keys = Seq("date_start", "k", "age")
+    for (parts <- Seq(Nil, Seq("date_start"))) {
+      val p = tmp()
+      Upsert.upsert(spark, p, src, keys, parts)
+      Upsert.upsert(spark, p, src, keys, parts)
+      val got = spark.read.parquet(p)
+        .selectExpr("CAST(date_start AS STRING)", "k", "age", "v")
+        .as[(String, Long, Option[String], String)].collect()
+      assert(got.sortBy(_._2).toSeq == src
+        .as[(String, Long, Option[String], String)].collect().toSeq,
+        s"partitionCols=$parts")
+    }
+  }
+
   test("empty source is a no-op (K6, load.py:29-31)") {
     val p = tmp()
     Upsert.upsert(spark, p, Seq((1L, "a")).toDF("k", "v"), Seq("k"))
