@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sinks.Segments
+
 /** Corpus-management operators for incremental training-data pipelines:
   * admitting new batches against an existing corpus, deterministic split
   * assignment, and sequence-length bucketing for batch packing.
@@ -1044,39 +1046,20 @@ object Corpus {
       .write.mode("errorifexists").parquet(s"$path/regs/base")
     Seq((depth, width)).toDF("depth", "width").coalesce(1)
       .write.mode("errorifexists").parquet(s"$path/params/base")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    graft.sinks.IndexManifest.commitMerge(fs, path)(_ =>
-      graft.sinks.IndexSnapshot(0L,
-        Map("regs" -> Seq("base"), "params" -> Seq("base")),
-        Seq("base")))
+    Segments.create(spark, path,
+      Map("regs" -> Seq("base"), "params" -> Seq("base")), Seq("base"))
   }
 
   /** Append a batch's counters as a new segment; replays no-op. */
   def appendToCmsSketch(spark: org.apache.spark.sql.SparkSession,
       path: String, df: DataFrame, keyCol: Column, batchId: String)
       : Unit = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        !batchId.startsWith("delete_"),
-      s"batchId must be a non-empty token != 'base' and outside the " +
-        s"delete-marker namespace 'delete_*' (got '$batchId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no sketch manifest at $path (not a saveCmsSketch directory)"))
-    if (snap.applied.contains(batchId)) return
-    val (depth, width) = cmsParams(spark, path, snap)
+    val snap = Segments.snapshot(spark, path)
     val seg = s"delta_$batchId"
-    cmsCounters(df, keyCol, depth, width).coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/regs/$seg")
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(batchId)) c
-      else c.copy(
-        tables = c.tables + ("regs" ->
-          (c.segs("regs").filterNot(_ == seg) :+ seg)),
-        applied = c.applied :+ batchId)
+    Segments.append(spark, path, snap, batchId, seg, Seq("regs")) {
+      val (depth, width) = cmsParams(spark, path, snap)
+      cmsCounters(df, keyCol, depth, width).coalesce(1)
+        .write.mode("overwrite").parquet(s"$path/regs/$seg")
     }
   }
 
@@ -1092,36 +1075,19 @@ object Corpus {
   def removeFromCmsSketch(spark: org.apache.spark.sql.SparkSession,
       path: String, df: DataFrame, keyCol: Column, batchId: String)
       : Unit = {
-    require(batchId.nonEmpty && batchId != "base",
-      s"batchId must be a non-empty token != 'base' (got '$batchId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no sketch manifest at $path (not a saveCmsSketch directory)"))
-    val marker = s"delete_$batchId"
-    if (snap.applied.contains(marker)) return
-    val (depth, width) = cmsParams(spark, path, snap)
+    val snap = Segments.snapshot(spark, path)
     val seg = s"delete_$batchId"
-    cmsCounters(df, keyCol, depth, width)
-      .select(col("d"), col("slot"), (-col("c")).as("c"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/regs/$seg")
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(marker)) c
-      else c.copy(
-        tables = c.tables + ("regs" ->
-          (c.segs("regs").filterNot(_ == seg) :+ seg)),
-        applied = c.applied :+ marker)
+    Segments.delete(spark, path, snap, batchId, seg, Seq("regs")) {
+      val (depth, width) = cmsParams(spark, path, snap)
+      cmsCounters(df, keyCol, depth, width)
+        .select(col("d"), col("slot"), (-col("c")).as("c"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/regs/$seg")
     }
   }
 
   private def cmsParams(spark: org.apache.spark.sql.SparkSession,
       path: String, snap: graft.sinks.IndexSnapshot): (Int, Int) = {
-    val segs = snap.segs("params")
-    require(segs.nonEmpty, s"sketch at $path carries no params table")
-    val r = spark.read.parquet(
-      segs.map(seg => s"$path/params/$seg"): _*).head()
+    val r = Segments.scan(spark, path, snap, "params").head()
     (r.getAs[Int]("depth"), r.getAs[Int]("width"))
   }
 
@@ -1130,21 +1096,9 @@ object Corpus {
   def queryCmsSketch(spark: org.apache.spark.sql.SparkSession,
       path: String, probes: DataFrame, probeCol: String,
       asOfVersion: Option[Long] = None): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = asOfVersion
-      .map(v => graft.sinks.IndexManifest.at(fs, path, v).getOrElse(
-        throw new IllegalArgumentException(
-          s"no sketch manifest v$v at $path (vacuumed or never " +
-            "existed)")))
-      .getOrElse(graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-        throw new IllegalArgumentException(
-          s"no sketch manifest at $path")))
+    val snap = Segments.snapshot(spark, path, asOfVersion)
     val (depth, width) = cmsParams(spark, path, snap)
-    val segs = snap.segs("regs")
-    require(segs.nonEmpty, s"snapshot v${snap.version} has no segments")
-    cmsEstimates(spark.read.parquet(
-        segs.map(seg => s"$path/regs/$seg"): _*),
+    cmsEstimates(Segments.scan(spark, path, snap, "regs"),
       probes, probeCol, depth, width)
   }
 
@@ -1245,35 +1199,19 @@ object Corpus {
       : Unit = {
     hllRegisters(df, keyCol).coalesce(1).write.mode("errorifexists")
       .parquet(s"$path/regs/base")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      df.sparkSession.sessionState.newHadoopConf())
-    graft.sinks.IndexManifest.commitMerge(fs, path)(_ =>
-      graft.sinks.IndexSnapshot(0L, Map("regs" -> Seq("base")),
-        Seq("base")))
+    Segments.create(df.sparkSession, path, Map("regs" -> Seq("base")),
+      Seq("base"))
   }
 
   /** Append a batch's registers as a new segment; replays no-op. */
   def appendToHllSketch(spark: org.apache.spark.sql.SparkSession,
       path: String, df: DataFrame, keyCol: Column, batchId: String)
       : Unit = {
-    require(batchId.nonEmpty && batchId != "base",
-      s"batchId must be a non-empty token != 'base' (got '$batchId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no sketch manifest at $path (not a saveHllSketch directory)"))
-    if (snap.applied.contains(batchId)) return
     val seg = s"delta_$batchId"
-    hllRegisters(df, keyCol).coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/regs/$seg")
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(batchId)) c
-      else c.copy(
-        tables = c.tables + ("regs" ->
-          (c.segs("regs").filterNot(_ == seg) :+ seg)),
-        applied = c.applied :+ batchId)
+    Segments.append(spark, path, Segments.snapshot(spark, path), batchId,
+        seg, Seq("regs")) {
+      hllRegisters(df, keyCol).coalesce(1).write.mode("overwrite")
+        .parquet(s"$path/regs/$seg")
     }
   }
 
@@ -1286,22 +1224,10 @@ object Corpus {
     * (every consumer's aggregate merges by max). */
   private[graft] def hllSketchRegisters(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      asOfVersion: Option[Long] = None): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = asOfVersion
-      .map(v => graft.sinks.IndexManifest.at(fs, path, v).getOrElse(
-        throw new IllegalArgumentException(
-          s"no sketch manifest v$v at $path (vacuumed or never " +
-            "existed)")))
-      .getOrElse(graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-        throw new IllegalArgumentException(
-          s"no sketch manifest at $path")))
-    val segs = snap.segs("regs")
-    require(segs.nonEmpty, s"snapshot v${snap.version} has no segments")
-    spark.read.parquet(segs.map(seg => s"$path/regs/$seg"): _*)
+      asOfVersion: Option[Long] = None): DataFrame =
+    Segments.scan(spark, path, Segments.snapshot(spark, path, asOfVersion),
+        "regs")
       .select(col("bucket"), col("m"))
-  }
 
   /** Cross-corpus OVERLAP scorecard from HLL registers (x214): the
     * sketch-level contamination complement to row-level
@@ -1693,41 +1619,19 @@ object Corpus {
       .write.mode("errorifexists").parquet(s"$path/regs/base")
     Seq(bucketWidth).toDF("bucket_width").coalesce(1)
       .write.mode("errorifexists").parquet(s"$path/params/base")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    graft.sinks.IndexManifest.commitMerge(fs, path)(_ =>
-      graft.sinks.IndexSnapshot(0L,
-        Map("regs" -> Seq("base"), "params" -> Seq("base")),
-        Seq("base")))
+    Segments.create(spark, path,
+      Map("regs" -> Seq("base"), "params" -> Seq("base")), Seq("base"))
   }
 
   /** Append a batch's counters as a new segment; replays no-op. */
   def appendToHistSketch(spark: org.apache.spark.sql.SparkSession,
       path: String, df: DataFrame, valueCol: Column, batchId: String)
       : Unit = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        !batchId.startsWith("delete_") &&
-        batchId.forall(c =>
-          c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      s"batchId must be a filesystem-safe token != 'base' and outside " +
-        s"the delete-marker namespace 'delete_*' (got '$batchId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no sketch manifest at $path (not a saveHistSketch directory)"))
-    if (snap.applied.contains(batchId)) return
-    val width = histParams(spark, path, snap)
+    val snap = Segments.snapshot(spark, path)
     val seg = s"delta_$batchId"
-    histCounters(df, valueCol, width).coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/regs/$seg")
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(batchId)) c
-      else c.copy(
-        tables = c.tables + ("regs" ->
-          (c.segs("regs").filterNot(_ == seg) :+ seg)),
-        applied = c.applied :+ batchId)
+    Segments.append(spark, path, snap, batchId, seg, Seq("regs")) {
+      histCounters(df, valueCol, histParams(spark, path, snap))
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/regs/$seg")
     }
   }
 
@@ -1740,40 +1644,19 @@ object Corpus {
   def removeFromHistSketch(spark: org.apache.spark.sql.SparkSession,
       path: String, df: DataFrame, valueCol: Column, batchId: String)
       : Unit = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        batchId.forall(c =>
-          c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      s"batchId must be a filesystem-safe token != 'base' " +
-        s"(got '$batchId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no sketch manifest at $path (not a saveHistSketch directory)"))
-    val marker = s"delete_$batchId"
-    if (snap.applied.contains(marker)) return
-    val width = histParams(spark, path, snap)
-    histCounters(df, valueCol, width)
-      .select(col("bucket"), (-col("c")).as("c"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/regs/$marker")
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(marker)) c
-      else c.copy(
-        tables = c.tables + ("regs" ->
-          (c.segs("regs").filterNot(_ == marker) :+ marker)),
-        applied = c.applied :+ marker)
+    val snap = Segments.snapshot(spark, path)
+    val seg = s"delete_$batchId"
+    Segments.delete(spark, path, snap, batchId, seg, Seq("regs")) {
+      histCounters(df, valueCol, histParams(spark, path, snap))
+        .select(col("bucket"), (-col("c")).as("c"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/regs/$seg")
     }
   }
 
   private def histParams(spark: org.apache.spark.sql.SparkSession,
-      path: String, snap: graft.sinks.IndexSnapshot): Long = {
-    val segs = snap.segs("params")
-    require(segs.nonEmpty, s"sketch at $path carries no params table")
-    spark.read.parquet(segs.map(seg => s"$path/params/$seg"): _*)
+      path: String, snap: graft.sinks.IndexSnapshot): Long =
+    Segments.scan(spark, path, snap, "params")
       .head().getAs[Long]("bucket_width")
-  }
 
   /** The raw (bucket, c) counter segments and persisted bucketWidth
     * behind one sketch snapshot — the state the streamed drift
@@ -1784,21 +1667,9 @@ object Corpus {
   def histSketchState(spark: org.apache.spark.sql.SparkSession,
       path: String, asOfVersion: Option[Long] = None)
       : (DataFrame, Long) = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = asOfVersion
-      .map(v => graft.sinks.IndexManifest.at(fs, path, v).getOrElse(
-        throw new IllegalArgumentException(
-          s"no sketch manifest v$v at $path (vacuumed or never " +
-            "existed)")))
-      .getOrElse(graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-        throw new IllegalArgumentException(
-          s"no sketch manifest at $path")))
-    val width = histParams(spark, path, snap)
-    val segs = snap.segs("regs")
-    require(segs.nonEmpty, s"snapshot v${snap.version} has no segments")
-    (spark.read.parquet(segs.map(seg => s"$path/regs/$seg"): _*),
-      width)
+    val snap = Segments.snapshot(spark, path, asOfVersion)
+    (Segments.scan(spark, path, snap, "regs"),
+      histParams(spark, path, snap))
   }
 
   /** Serve quantile estimates from one manifest snapshot's summed
@@ -1817,13 +1688,7 @@ object Corpus {
     * between two versions move the distribution" from the sketch's
     * kilobytes alone — no corpus rescan (gated x212). */
   def histSketchVersion(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no sketch manifest at $path")).version
-  }
+      path: String): Long = Segments.snapshot(spark, path).version
 
   // ----------------------------------------- KLL quantile sketch (x213)
 
@@ -2119,12 +1984,8 @@ object Corpus {
       .write.mode("errorifexists").parquet(s"$path/items/base")
     Seq(k).toDF("k").coalesce(1)
       .write.mode("errorifexists").parquet(s"$path/params/base")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    graft.sinks.IndexManifest.commitMerge(fs, path)(_ =>
-      graft.sinks.IndexSnapshot(0L,
-        Map("items" -> Seq("base"), "params" -> Seq("base")),
-        Seq("base")))
+    Segments.create(spark, path,
+      Map("items" -> Seq("base"), "params" -> Seq("base")), Seq("base"))
   }
 
   /** Append a batch as its own sketch segment (built with the
@@ -2132,28 +1993,11 @@ object Corpus {
   def appendToKllSketch(spark: org.apache.spark.sql.SparkSession,
       path: String, df: DataFrame, valueCol: Column, batchId: String)
       : Unit = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        batchId.forall(c =>
-          c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      s"batchId must be a filesystem-safe token != 'base' " +
-        s"(got '$batchId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no sketch manifest at $path (not a saveKllSketch directory)"))
-    if (snap.applied.contains(batchId)) return
-    val k = kllParams(spark, path, snap)
+    val snap = Segments.snapshot(spark, path)
     val seg = s"delta_$batchId"
-    kllItems(df, valueCol, k).coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/items/$seg")
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(batchId)) c
-      else c.copy(
-        tables = c.tables + ("items" ->
-          (c.segs("items").filterNot(_ == seg) :+ seg)),
-        applied = c.applied :+ batchId)
+    Segments.append(spark, path, snap, batchId, seg, Seq("items")) {
+      kllItems(df, valueCol, kllParams(spark, path, snap)).coalesce(1)
+        .write.mode("overwrite").parquet(s"$path/items/$seg")
     }
   }
 
@@ -2166,69 +2010,33 @@ object Corpus {
     * the IVF centroid/codebook lifecycle documents). Appends already
     * applied stay recorded so their replays still no-op. */
   def compactKllSketch(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no sketch manifest at $path (not a saveKllSketch directory)"))
-    compactKllSketchFrom(spark, path, snap)
-  }
+      path: String): Unit =
+    compactKllSketchFrom(spark, path, Segments.snapshot(spark, path))
 
   private[ext] def compactKllSketchFrom(
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
     val k = kllParams(spark, path, snap)
     // the fold reads exactly THIS snapshot's segments (not "latest"),
-    // so the commit below can name what it folded
-    val folded = snap.segs("items")
-    require(folded.nonEmpty,
-      s"snapshot v${snap.version} has no segments")
-    val items = spark.read.parquet(
-      folded.map(sg => s"$path/items/$sg"): _*)
+    // so the commit can name what it folded
+    val items = Segments.scan(spark, path, snap, "items")
     val sk = new graft.functions.KllAgg.Sketch(k)
     // bounded collect: ≤ 3k items per segment — sketch state, not data
     items.select(col("level"), col("v"))
       .collect().sortBy(r => (r.getInt(0), r.getDouble(1)))
       .foreach(r => sk.pushWeighted(r.getInt(0), r.getDouble(1)))
     sk.compactPass()
-    val compacted = sk.itemRows
     import spark.implicits._
-    // UUID suffix: a LOSING compaction must never overwrite the
-    // directory a winning one already committed (segments are
-    // immutable once referenced) — compactBm25IndexFrom's rule
-    val seg = s"compact_v${snap.version + 1}_" +
-      java.util.UUID.randomUUID().toString.take(8)
-    compacted.toDF("level", "v").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/items/$seg")
-    val foldedSet = folded.toSet
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      // an append that committed mid-fold added a segment this fold
-      // never read — carry it, or its items (whose batchId stays in
-      // `applied`, making replay a no-op) would be silently lost; a
-      // concurrent compaction that already folded our segments holds
-      // their items in ITS output — committing ours too would
-      // double-count, so fail hard (compactBm25IndexFrom's guard)
-      require(foldedSet.subsetOf(c.segs("items").toSet),
-        "a concurrent compaction already folded segments this " +
-          "compaction read — committing both copies would double-" +
-          "count every item; rerun compactKllSketch against the new " +
-          "snapshot")
-      c.copy(tables = c.tables + ("items" ->
-        (seg +: c.segs("items").filterNot(foldedSet))))
+    Segments.fold(spark, path, snap, Seq("items"), "compactKllSketch") {
+      seg =>
+        sk.itemRows.toDF("level", "v").coalesce(1)
+          .write.mode("overwrite").parquet(s"$path/items/$seg")
     }
   }
 
   private def kllParams(spark: org.apache.spark.sql.SparkSession,
-      path: String, snap: graft.sinks.IndexSnapshot): Int = {
-    val segs = snap.segs("params")
-    require(segs.nonEmpty, s"sketch at $path carries no params table")
-    spark.read.parquet(segs.map(seg => s"$path/params/$seg"): _*)
-      .head().getAs[Int]("k")
-  }
+      path: String, snap: graft.sinks.IndexSnapshot): Int =
+    Segments.scan(spark, path, snap, "params").head().getAs[Int]("k")
 
   /** The raw (level, v) item segments and persisted k behind one
     * sketch snapshot. Segments are returned un-merged (concatenation
@@ -2236,20 +2044,8 @@ object Corpus {
   def kllSketchState(spark: org.apache.spark.sql.SparkSession,
       path: String, asOfVersion: Option[Long] = None)
       : (DataFrame, Int) = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = asOfVersion
-      .map(v => graft.sinks.IndexManifest.at(fs, path, v).getOrElse(
-        throw new IllegalArgumentException(
-          s"no sketch manifest v$v at $path (vacuumed or never " +
-            "existed)")))
-      .getOrElse(graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-        throw new IllegalArgumentException(
-          s"no sketch manifest at $path")))
-    val k = kllParams(spark, path, snap)
-    val segs = snap.segs("items")
-    require(segs.nonEmpty, s"snapshot v${snap.version} has no segments")
-    (spark.read.parquet(segs.map(seg => s"$path/items/$seg"): _*), k)
+    val snap = Segments.snapshot(spark, path, asOfVersion)
+    (Segments.scan(spark, path, snap, "items"), kllParams(spark, path, snap))
   }
 
   /** Serve quantile estimates from one manifest snapshot's
@@ -2329,22 +2125,15 @@ object Corpus {
     Seq((k, groupCol, groupType)).toDF("k", "group_col", "group_type")
       .coalesce(1)
       .write.mode("errorifexists").parquet(s"$path/params/base")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    graft.sinks.IndexManifest.commitMerge(fs, path)(_ =>
-      graft.sinks.IndexSnapshot(0L,
-        Map("items" -> Seq("base"), "params" -> Seq("base")),
-        Seq("base")))
+    Segments.create(spark, path,
+      Map("items" -> Seq("base"), "params" -> Seq("base")), Seq("base"))
   }
 
   private def groupedKllParams(
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot)
       : (Int, String, org.apache.spark.sql.types.DataType) = {
-    val segs = snap.segs("params")
-    require(segs.nonEmpty, s"sketch at $path carries no params table")
-    val r = spark.read
-      .parquet(segs.map(seg => s"$path/params/$seg"): _*).head()
+    val r = Segments.scan(spark, path, snap, "params").head()
     // pre-group_type sketches (none persist across runs, but be
     // explicit) served string groups — keep that as the fallback
     val gt =
@@ -2360,29 +2149,12 @@ object Corpus {
   def appendToGroupedKllSketch(
       spark: org.apache.spark.sql.SparkSession, path: String,
       df: DataFrame, valueCol: Column, batchId: String): Unit = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        batchId.forall(c =>
-          c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      s"batchId must be a filesystem-safe token != 'base' " +
-        s"(got '$batchId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no sketch manifest at $path (not a saveGroupedKllSketch " +
-          "directory)"))
-    if (snap.applied.contains(batchId)) return
-    val (k, groupCol, _) = groupedKllParams(spark, path, snap)
+    val snap = Segments.snapshot(spark, path)
     val seg = s"delta_$batchId"
-    kllItemsBy(df, valueCol, groupCol, k).coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/items/$seg")
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(batchId)) c
-      else c.copy(
-        tables = c.tables + ("items" ->
-          (c.segs("items").filterNot(_ == seg) :+ seg)),
-        applied = c.applied :+ batchId)
+    Segments.append(spark, path, snap, batchId, seg, Seq("items")) {
+      val (k, groupCol, _) = groupedKllParams(spark, path, snap)
+      kllItemsBy(df, valueCol, groupCol, k).coalesce(1)
+        .write.mode("overwrite").parquet(s"$path/items/$seg")
     }
   }
 
@@ -2403,21 +2175,9 @@ object Corpus {
       spark: org.apache.spark.sql.SparkSession, path: String,
       asOfVersion: Option[Long] = None)
       : (DataFrame, Int, String, org.apache.spark.sql.types.DataType) = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = asOfVersion
-      .map(v => graft.sinks.IndexManifest.at(fs, path, v).getOrElse(
-        throw new IllegalArgumentException(
-          s"no sketch manifest v$v at $path (vacuumed or never " +
-            "existed)")))
-      .getOrElse(graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-        throw new IllegalArgumentException(
-          s"no sketch manifest at $path")))
+    val snap = Segments.snapshot(spark, path, asOfVersion)
     val (k, groupCol, groupType) = groupedKllParams(spark, path, snap)
-    val segs = snap.segs("items")
-    require(segs.nonEmpty, s"snapshot v${snap.version} has no segments")
-    (spark.read.parquet(segs.map(seg => s"$path/items/$seg"): _*),
-      k, groupCol, groupType)
+    (Segments.scan(spark, path, snap, "items"), k, groupCol, groupType)
   }
 
   /** Serve per-group quantile estimates from one snapshot — output
@@ -2443,28 +2203,16 @@ object Corpus {
     * CAS guards as [[compactKllSketchFrom]]: a mid-fold append is
     * carried, a racing compaction aborts. */
   def compactGroupedKllSketch(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no sketch manifest at $path (not a saveGroupedKllSketch " +
-          "directory)"))
-    compactGroupedKllSketchFrom(spark, path, snap)
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    compactGroupedKllSketchFrom(spark, path,
+      Segments.snapshot(spark, path))
 
   private[ext] def compactGroupedKllSketchFrom(
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
     val (k, _, _) = groupedKllParams(spark, path, snap)
-    val folded = snap.segs("items")
-    require(folded.nonEmpty,
-      s"snapshot v${snap.version} has no segments")
-    if (folded.length <= 1) return
-    val items = spark.read.parquet(
-      folded.map(sg => s"$path/items/$sg"): _*)
+    val items = Segments.scan(spark, path, snap, "items")
+    if (snap.segs("items").length <= 1) return
     import spark.implicits._
     val compacted = items.select(col("g"), col("level"), col("v"))
       .as[(String, Int, Double)]
@@ -2477,20 +2225,10 @@ object Corpus {
         sk.itemRows.iterator.map { case (l, v) => (g, l, v) }
       }
       .toDF("g", "level", "v")
-    val seg = s"compact_v${snap.version + 1}_" +
-      java.util.UUID.randomUUID().toString.take(8)
-    compacted.coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/items/$seg")
-    val foldedSet = folded.toSet
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      require(foldedSet.subsetOf(c.segs("items").toSet),
-        "a concurrent compaction already folded segments this " +
-          "compaction read — committing both copies would double-" +
-          "count every item; rerun compactGroupedKllSketch against " +
-          "the new snapshot")
-      c.copy(tables = c.tables + ("items" ->
-        (seg +: c.segs("items").filterNot(foldedSet))))
+    Segments.fold(spark, path, snap, Seq("items"),
+        "compactGroupedKllSketch") { seg =>
+      compacted.coalesce(1)
+        .write.mode("overwrite").parquet(s"$path/items/$seg")
     }
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sinks.Segments
+
 /** Deduplication at training-data scale (SURVEY §7.5): exact, n-gram
   * Jaccard, MinHash+LSH, SimHash. Design notes for 100 TB:
   *
@@ -564,15 +566,11 @@ object DedupOps {
       s"bands must divide 64 (got $bands)")
     val spark = sigs.sparkSession
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
     Seq(bands).toDF("bands").coalesce(1)
       .write.mode("errorifexists").parquet(s"$path/params/base")
     writeSimhashSegment(sigs, path, "base", bands)
-    graft.sinks.IndexManifest.commitMerge(fs, path)(_ =>
-      graft.sinks.IndexSnapshot(0L,
-        Map("sigs" -> Seq("base"), "banded" -> Seq("base"),
-          "params" -> Seq("base")), Seq("base")))
+    Segments.create(spark, path, Map("sigs" -> Seq("base"),
+      "banded" -> Seq("base"), "params" -> Seq("base")), Seq("base"))
   }
 
   /** One (sigs, banded) segment pair — shared by the base build and
@@ -596,62 +594,23 @@ object DedupOps {
     } finally s.unpersist(blocking = false)
   }
 
-  private def simhashLedgerSnapshot(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      asOfVersion: Option[Long] = None): graft.sinks.IndexSnapshot = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    asOfVersion match {
-      case Some(v) => graft.sinks.IndexManifest.at(fs, path, v)
-        .getOrElse(throw new IllegalArgumentException(
-          s"ledger version $v not found at $path (vacuumed past the " +
-            "retention window, or never committed)"))
-      case None => graft.sinks.IndexManifest.latest(fs, path)
-        .getOrElse(throw new IllegalArgumentException(
-          s"no ledger manifest at $path (not a saveSimhashLedger " +
-            "directory)"))
-    }
-  }
-
-  private def readSimhashTable(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      snap: graft.sinks.IndexSnapshot, table: String): DataFrame = {
-    val segs = snap.segs(table)
-    require(segs.nonEmpty,
-      s"ledger snapshot v${snap.version} has no '$table' segments")
-    spark.read.parquet(segs.map(seg => s"$path/$table/$seg"): _*)
-  }
-
   /** The ledger's current manifest version — record it before an
     * append and any retained snapshot's admission decisions stay
     * replayable bit-for-bit. */
   def simhashLedgerVersion(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = simhashLedgerSnapshot(spark, path).version
+      path: String): Long = Segments.snapshot(spark, path).version
 
   /** Append a (typically just-admitted) batch's signatures; idempotent
     * per batchId via the manifest applied record. */
   def appendToSimhashLedger(spark: org.apache.spark.sql.SparkSession,
       path: String, sigs: DataFrame, batchId: String): Unit = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        batchId.forall(c =>
-          c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      s"batchId must be a filesystem-safe token != 'base' " +
-        s"(got '$batchId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = simhashLedgerSnapshot(spark, path)
-    if (snap.applied.contains(batchId)) return
-    val bands = readSimhashTable(spark, path, snap, "params")
-      .head().getAs[Int]("bands")
+    val snap = Segments.snapshot(spark, path)
     val seg = s"delta_$batchId"
-    writeSimhashSegment(sigs, path, seg, bands)
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(batchId)) c
-      else c.copy(
-        tables = c.tables ++ Seq("sigs", "banded").map(t =>
-          t -> (c.segs(t).filterNot(_ == seg) :+ seg)),
-        applied = c.applied :+ batchId)
+    Segments.append(spark, path, snap, batchId, seg,
+        Seq("sigs", "banded")) {
+      writeSimhashSegment(sigs, path, seg,
+        Segments.scan(spark, path, snap, "params").head()
+          .getAs[Int]("bands"))
     }
   }
 
@@ -671,8 +630,8 @@ object DedupOps {
       : DataFrame = {
     require(probeBits == 0 || probeBits == 1,
       s"probeBits must be 0 (exact chunks) or 1 (1-bit multi-probe)")
-    val snap = simhashLedgerSnapshot(spark, path, asOfVersion)
-    val bands = readSimhashTable(spark, path, snap, "params")
+    val snap = Segments.snapshot(spark, path, asOfVersion)
+    val bands = Segments.scan(spark, path, snap, "params")
       .head().getAs[Int]("bands")
     require(maxHamming >= 0 && maxHamming < bands * (probeBits + 1),
       s"recall guarantee needs maxHamming < bands*(probeBits+1) " +
@@ -690,14 +649,14 @@ object DedupOps {
     val inProbed = shProbes(shBands(in, bands), bands, probeBits)
       .select(col("doc_id").as("in_doc"), col("band"), col("chunk"))
     val cand = inProbed
-      .join(readSimhashTable(spark, path, snap, "banded")
+      .join(Segments.scan(spark, path, snap, "banded")
         .select(col("doc_id").as("corpus_doc"), col("band"),
           col("chunk")), Seq("band", "chunk"))
       .select(col("in_doc"), col("corpus_doc")).distinct()
     val rejected = cand
       .join(in.select(col("doc_id").as("in_doc"), col("sh").as("sh_a")),
         Seq("in_doc"))
-      .join(readSimhashTable(spark, path, snap, "sigs")
+      .join(Segments.scan(spark, path, snap, "sigs")
         .select(col("doc_id").as("corpus_doc"), col("sh").as("sh_b")),
         Seq("corpus_doc"))
       .filter(bit_count(col("sh_a").bitwiseXOR(col("sh_b")))
@@ -1436,16 +1395,13 @@ object DedupOps {
       path: String, n: Int = 3, bands: Int = 16, rows: Int = 4): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    Segments.drop(spark, path)
     Seq((n, bands, rows)).toDF("n", "bands", "rows")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/params/base")
     writeMinhashSegment(docs, idCol, textCol, path, "base", n, bands,
       rows)
-    graft.sinks.IndexManifest.commitMerge(fs, path)(_ =>
-      graft.sinks.IndexSnapshot(0L,
-        MinhashTables.map(t => t -> Seq("base")).toMap, Seq.empty))
+    Segments.create(spark, path,
+      MinhashTables.map(t => t -> Seq("base")).toMap)
   }
 
   /** One (sigs, banded) segment pair — shared by the base build and
@@ -1476,41 +1432,13 @@ object DedupOps {
     } finally sig.unpersist(blocking = false)
   }
 
-  private def minhashSnapshot(spark: org.apache.spark.sql.SparkSession,
-      path: String, asOfVersion: Option[Long] = None)
-      : graft.sinks.IndexSnapshot = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    asOfVersion match {
-      case Some(v) => graft.sinks.IndexManifest.at(fs, path, v)
-        .getOrElse(throw new IllegalArgumentException(
-          s"index version $v not found at $path (vacuumed past the " +
-            "retention window, or never committed)"))
-      case None => graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-        throw new IllegalArgumentException(
-          s"no index manifest at $path (not a saveMinhashIndex directory)"))
-    }
-  }
-
   /** The signature ledger's current manifest version — the handle
     * [[minhashAdmit]]'s `asOfVersion` time travel pins to (same MVCC
     * contract as [[graft.ext.Similarity.ivfIndexVersion]] and the BM25
     * side): record it before an append and any retained snapshot's
     * admission decisions stay replayable bit-for-bit. */
   def minhashIndexVersion(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = minhashSnapshot(spark, path).version
-
-  private def readMinhashTable(spark: org.apache.spark.sql.SparkSession,
-      path: String, snap: graft.sinks.IndexSnapshot, table: String)
-      : DataFrame = {
-    val segs = snap.segs(table)
-    require(segs.nonEmpty, s"index at $path has no '$table' segments")
-    // one multi-path scan, not a union of per-segment scans — the
-    // union shape paid a listing per segment and duplicated any join
-    // the optimizer pushed below it (the TextAnalysis.readBm25Table
-    // rationale)
-    spark.read.parquet(segs.map(s => s"$path/$table/$s"): _*)
-  }
+      path: String): Long = Segments.snapshot(spark, path).version
 
   /** The signature ledger's tombstone table: (doc_id, seg) rows — one
     * scope covers BOTH parallel tables (`sigs`/`banded` segments share
@@ -1523,20 +1451,16 @@ object DedupOps {
   private def taggedLiveMinhash(
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot, table: String): DataFrame = {
-    val segs = snap.segs(table)
-    require(segs.nonEmpty, s"index at $path has no '$table' segments")
     // one multi-path scan; the _seg tag derives from the DETERMINISTIC
     // _metadata.file_path column (input_file_name would block filter
     // pushdown past the projection), greedy-anchored to the last path
     // component named after the table — the taggedPostings shape
-    val tagged = spark.read
-      .parquet(segs.map(s => s"$path/$table/$s"): _*)
+    val tagged = Segments.scan(spark, path, snap, table)
       .withColumn("_seg", regexp_extract(col("_metadata.file_path"),
         s".*/$table/([^/]+)/", 1))
-    val del = snap.segs(MinhashDeletesTable)
-    if (del.isEmpty) tagged
+    if (snap.segs(MinhashDeletesTable).isEmpty) tagged
     else tagged.join(
-      spark.read.parquet(del.map(s => s"$path/deletes/$s"): _*)
+      Segments.scan(spark, path, snap, MinhashDeletesTable)
         .select(col("doc_id"), col("seg").as("_seg")),
       Seq("doc_id", "_seg"), "left_anti")
   }
@@ -1547,7 +1471,7 @@ object DedupOps {
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot, table: String): DataFrame =
     if (snap.segs(MinhashDeletesTable).isEmpty)
-      readMinhashTable(spark, path, snap, table)
+      Segments.scan(spark, path, snap, table)
     else taggedLiveMinhash(spark, path, snap, table).drop("_seg")
 
   /** DELETE documents from a persisted [[saveMinhashIndex]] ledger —
@@ -1565,7 +1489,7 @@ object DedupOps {
       path: String, docIds: DataFrame, idCol: String,
       deleteId: String): Unit =
     deleteFromMinhashIndexFrom(spark, path, docIds, idCol, deleteId,
-      minhashSnapshot(spark, path))
+      Segments.snapshot(spark, path))
 
   /** Snapshot-taking core of [[deleteFromMinhashIndex]] —
     * `private[ext]` for the concurrency specs. */
@@ -1573,39 +1497,23 @@ object DedupOps {
       spark: org.apache.spark.sql.SparkSession, path: String,
       docIds: DataFrame, idCol: String, deleteId: String,
       snap: graft.sinks.IndexSnapshot): Unit = {
-    require(deleteId.nonEmpty && deleteId.forall(c =>
-        c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      s"deleteId must be a filesystem-safe token (got '$deleteId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val marker = s"delete_$deleteId"
-    if (snap.applied.contains(marker)) return
     val seg = s"del_$deleteId"
-    // (doc -> segment) scope from the banded keys (16 fixed-width
-    // rows/doc; docs shorter than n tokens have no rows and nothing to
-    // tombstone). Live read: re-deleting an already-tombstoned doc
-    // adds nothing.
-    taggedLiveMinhash(spark, path, snap, "banded")
-      .join(docIds.select(col(idCol).cast(LongType).as("doc_id"))
-        .distinct(), Seq("doc_id"))
-      .select(col("doc_id"), col("_seg").as("seg")).distinct()
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/deletes/$seg")
-    val sawBanded = snap.segs("banded").toSet
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(marker)) c // concurrent duplicate: no-op
-      else {
-        require(sawBanded.subsetOf(c.segs("banded").toSet),
-          "a concurrent compaction folded segments this delete " +
-            "scanned — its tombstone scopes reference dropped " +
-            "segments; rerun deleteFromMinhashIndex against the new " +
-            "snapshot (appends compose; compactions serialize)")
-        c.copy(
-          tables = c.tables + (MinhashDeletesTable ->
-            (c.segs(MinhashDeletesTable).filterNot(_ == seg) :+ seg)),
-          applied = c.applied :+ marker)
-      }
+    Segments.delete(spark, path, snap, deleteId, seg,
+      Seq(MinhashDeletesTable), Seq(Segments.kept("banded")(
+        "a concurrent compaction folded segments this delete " +
+          "scanned — its tombstone scopes reference dropped " +
+          "segments; rerun deleteFromMinhashIndex against the new " +
+          "snapshot (appends compose; compactions serialize)"))) {
+      // (doc -> segment) scope from the banded keys (16 fixed-width
+      // rows/doc; docs shorter than n tokens have no rows and nothing
+      // to tombstone). Live read: re-deleting an already-tombstoned
+      // doc adds nothing.
+      taggedLiveMinhash(spark, path, snap, "banded")
+        .join(docIds.select(col(idCol).cast(LongType).as("doc_id"))
+          .distinct(), Seq("doc_id"))
+        .select(col("doc_id"), col("_seg").as("seg")).distinct()
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$path/deletes/$seg")
     }
   }
 
@@ -1638,8 +1546,8 @@ object DedupOps {
       path: String, newDocs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5, asOfVersion: Option[Long] = None)
       : DataFrame = {
-    val snap = minhashSnapshot(spark, path, asOfVersion)
-    val p = readMinhashTable(spark, path, snap, "params").head()
+    val snap = Segments.snapshot(spark, path, asOfVersion)
+    val p = Segments.scan(spark, path, snap, "params").head()
     val (n, bands, rows) =
       (p.getAs[Int]("n"), p.getAs[Int]("bands"), p.getAs[Int]("rows"))
     val k = bands * rows
@@ -1685,8 +1593,8 @@ object DedupOps {
       spark: org.apache.spark.sql.SparkSession, path: String,
       newDocs: DataFrame, idCol: String, textCol: String,
       threshold: Double): (DataFrame, DataFrame) = {
-    val snap = minhashSnapshot(spark, path, None)
-    val p = readMinhashTable(spark, path, snap, "params").head()
+    val snap = Segments.snapshot(spark, path)
+    val p = Segments.scan(spark, path, snap, "params").head()
     val (n, bands, rows) =
       (p.getAs[Int]("n"), p.getAs[Int]("bands"), p.getAs[Int]("rows"))
     val k = bands * rows
@@ -1722,29 +1630,13 @@ object DedupOps {
   private[graft] def appendToMinhashIndexSigs(
       spark: org.apache.spark.sql.SparkSession, path: String,
       sigs: DataFrame, batchId: String): Unit = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        !batchId.startsWith("compact_v") &&
-        !batchId.startsWith("retrain_v") &&
-        !batchId.startsWith("delete_") &&
-        batchId.forall(c =>
-          c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      "batchId must be a filesystem-safe token != 'base' and outside " +
-        s"the reserved 'compact_v'/'retrain_v'/'delete_' prefixes (got '$batchId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = minhashSnapshot(spark, path)
-    if (snap.applied.contains(batchId)) return
-    val p = readMinhashTable(spark, path, snap, "params").head()
+    val snap = Segments.snapshot(spark, path)
     val seg = s"delta_$batchId"
-    writeMinhashSegmentSigs(sigs, path, seg,
-      p.getAs[Int]("bands"), p.getAs[Int]("rows"))
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(batchId)) c // concurrent duplicate: no-op
-      else c.copy(
-        tables = c.tables ++ Seq("sigs", "banded").map(t =>
-          t -> (c.segs(t).filterNot(_ == seg) :+ seg)),
-        applied = c.applied :+ batchId)
+    Segments.append(spark, path, snap, batchId, seg,
+        Seq("sigs", "banded")) {
+      val p = Segments.scan(spark, path, snap, "params").head()
+      writeMinhashSegmentSigs(sigs, path, seg,
+        p.getAs[Int]("bands"), p.getAs[Int]("rows"))
     }
   }
 
@@ -1756,29 +1648,13 @@ object DedupOps {
   def appendToMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, newDocs: DataFrame, idCol: String, textCol: String,
       batchId: String): Unit = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        !batchId.startsWith("compact_v") &&
-        !batchId.startsWith("retrain_v") &&
-        !batchId.startsWith("delete_") &&
-        batchId.forall(c =>
-          c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      "batchId must be a filesystem-safe token != 'base' and outside " +
-        s"the reserved 'compact_v'/'retrain_v'/'delete_' prefixes (got '$batchId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = minhashSnapshot(spark, path)
-    if (snap.applied.contains(batchId)) return
-    val p = readMinhashTable(spark, path, snap, "params").head()
+    val snap = Segments.snapshot(spark, path)
     val seg = s"delta_$batchId"
-    writeMinhashSegment(newDocs, idCol, textCol, path, seg,
-      p.getAs[Int]("n"), p.getAs[Int]("bands"), p.getAs[Int]("rows"))
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(batchId)) c // concurrent duplicate: no-op
-      else c.copy(
-        tables = c.tables ++ Seq("sigs", "banded").map(t =>
-          t -> (c.segs(t).filterNot(_ == seg) :+ seg)),
-        applied = c.applied :+ batchId)
+    Segments.append(spark, path, snap, batchId, seg,
+        Seq("sigs", "banded")) {
+      val p = Segments.scan(spark, path, snap, "params").head()
+      writeMinhashSegment(newDocs, idCol, textCol, path, seg,
+        p.getAs[Int]("n"), p.getAs[Int]("bands"), p.getAs[Int]("rows"))
     }
   }
 
@@ -1786,60 +1662,36 @@ object DedupOps {
     * one per table — same CAS/guard contract as the other compactions
     * (concurrent appends carried; a racing compaction aborts). */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    compactMinhashIndexFrom(spark, path, minhashSnapshot(spark, path))
-  }
+      path: String): Unit =
+    compactMinhashIndexFrom(spark, path, Segments.snapshot(spark, path))
 
   /** Snapshot-taking core of [[compactMinhashIndex]] —
     * `private[ext]` for the concurrency specs. */
   private[ext] def compactMinhashIndexFrom(
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
     if (Seq("sigs", "banded").forall(t => snap.segs(t).length <= 1) &&
       snap.segs(MinhashDeletesTable).isEmpty)
       return
-    val seg = s"compact_v${snap.version + 1}_" +
-      java.util.UUID.randomUUID().toString.take(8)
     // live reads: the fold physically removes tombstoned docs; the
     // tombstone table empties in the same commit
-    readMinhashTableLive(spark, path, snap, "sigs")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/sigs/$seg")
-    readMinhashTableLive(spark, path, snap, "banded")
-      .repartition(col("bucket"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/banded/$seg")
-    val folded = Seq("sigs", "banded").map(t =>
-      t -> snap.segs(t).toSet).toMap
-    val sawDeletes = snap.segs(MinhashDeletesTable)
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      Seq("sigs", "banded").foreach(t => require(
-        folded(t).subsetOf(c.segs(t).toSet),
-        "a concurrent compaction already folded segments this " +
-          "compaction read — rerun compactMinhashIndex against the " +
-          "new snapshot"))
-      require(c.segs(MinhashDeletesTable) == sawDeletes,
-        "a concurrent delete committed during compaction — its " +
-          "tombstones are scoped to segments this fold dropped; rerun " +
-          "compactMinhashIndex against the new snapshot")
-      c.copy(tables = c.tables ++ Seq("sigs", "banded").map(t =>
-        t -> (seg +: c.segs(t).filterNot(folded(t).contains)))
-        + (MinhashDeletesTable -> Seq.empty[String]))
+    Segments.fold(spark, path, snap, Seq("sigs", "banded"),
+        "compactMinhashIndex", Some(MinhashDeletesTable)) { seg =>
+      readMinhashTableLive(spark, path, snap, "sigs")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$path/sigs/$seg")
+      readMinhashTableLive(spark, path, snap, "banded")
+        .repartition(col("bucket"))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$path/banded/$seg")
     }
   }
 
   /** Retention GC for [[saveMinhashIndex]] — the shared vacuum. */
   def vacuumMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, keepVersions: Int = 2): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    graft.sinks.IndexManifest.vacuum(fs, path, keepVersions,
-      (MinhashTables :+ MinhashDeletesTable)
-        .map(t => t -> s"$path/$t").toMap)
-  }
+      path: String, keepVersions: Int = 2): Unit =
+    Segments.vacuum(spark, path, keepVersions,
+      MinhashTables :+ MinhashDeletesTable)
 
   // --------------------------- persisted containment-admission ledger
 
@@ -1869,15 +1721,12 @@ object DedupOps {
       textCol: String, path: String, n: Int = 5): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    Segments.drop(spark, path)
     Seq(n).toDF("n")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/params/base")
     writeContainmentSegment(docs, idCol, textCol, path, "base", n)
-    graft.sinks.IndexManifest.commitMerge(fs, path)(_ =>
-      graft.sinks.IndexSnapshot(0L,
-        ContainmentTables.map(t => t -> Seq("base")).toMap, Seq.empty))
+    Segments.create(spark, path,
+      ContainmentTables.map(t => t -> Seq("base")).toMap)
   }
 
   /** One postings segment — shared by the base build and every append.
@@ -1896,31 +1745,6 @@ object DedupOps {
       .parquet(s"$path/postings/$seg")
   }
 
-  private def containmentSnapshot(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      asOfVersion: Option[Long] = None): graft.sinks.IndexSnapshot = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    asOfVersion match {
-      case Some(v) => graft.sinks.IndexManifest.at(fs, path, v)
-        .getOrElse(throw new IllegalArgumentException(
-          s"index version $v not found at $path (vacuumed past the " +
-            "retention window, or never committed)"))
-      case None => graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-        throw new IllegalArgumentException(
-          s"no index manifest at $path (not a saveContainmentIndex " +
-            "directory)"))
-    }
-  }
-
-  private def readContainmentTable(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      snap: graft.sinks.IndexSnapshot, table: String): DataFrame = {
-    val segs = snap.segs(table)
-    require(segs.nonEmpty, s"index at $path has no '$table' segments")
-    spark.read.parquet(segs.map(s => s"$path/$table/$s"): _*)
-  }
-
   /** The containment ledger's tombstone table: (doc_id, seg) rows —
     * the [[MinhashDeletesTable]] scope rule (a doc's postings live in
     * exactly one segment). */
@@ -1932,18 +1756,14 @@ object DedupOps {
   private def taggedLiveContainment(
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot): DataFrame = {
-    val segs = snap.segs("postings")
-    require(segs.nonEmpty, s"index at $path has no 'postings' segments")
     // one multi-path scan + _metadata-derived _seg tag — the
     // taggedLiveMinhash shape (same pushdown rationale)
-    val tagged = spark.read
-      .parquet(segs.map(s => s"$path/postings/$s"): _*)
+    val tagged = Segments.scan(spark, path, snap, "postings")
       .withColumn("_seg", regexp_extract(col("_metadata.file_path"),
         ".*/postings/([^/]+)/", 1))
-    val del = snap.segs(ContainmentDeletesTable)
-    if (del.isEmpty) tagged
+    if (snap.segs(ContainmentDeletesTable).isEmpty) tagged
     else tagged.join(
-      spark.read.parquet(del.map(s => s"$path/deletes/$s"): _*)
+      Segments.scan(spark, path, snap, ContainmentDeletesTable)
         .select(col("doc_id"), col("seg").as("_seg")),
       Seq("doc_id", "_seg"), "left_anti")
   }
@@ -1953,7 +1773,7 @@ object DedupOps {
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot): DataFrame =
     if (snap.segs(ContainmentDeletesTable).isEmpty)
-      readContainmentTable(spark, path, snap, "postings")
+      Segments.scan(spark, path, snap, "postings")
     else taggedLiveContainment(spark, path, snap).drop("_seg")
 
   /** DELETE documents from the containment ledger (x242) — the
@@ -1969,49 +1789,32 @@ object DedupOps {
       spark: org.apache.spark.sql.SparkSession, path: String,
       docIds: DataFrame, idCol: String, deleteId: String): Unit =
     deleteFromContainmentIndexFrom(spark, path, docIds, idCol,
-      deleteId, containmentSnapshot(spark, path))
+      deleteId, Segments.snapshot(spark, path))
 
   private[ext] def deleteFromContainmentIndexFrom(
       spark: org.apache.spark.sql.SparkSession, path: String,
       docIds: DataFrame, idCol: String, deleteId: String,
       snap: graft.sinks.IndexSnapshot): Unit = {
-    require(deleteId.nonEmpty && deleteId.forall(c =>
-        c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      s"deleteId must be a filesystem-safe token (got '$deleteId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val marker = s"delete_$deleteId"
-    if (snap.applied.contains(marker)) return
     val seg = s"del_$deleteId"
-    taggedLiveContainment(spark, path, snap)
-      .join(docIds.select(col(idCol).cast(LongType).as("doc_id"))
-        .distinct(), Seq("doc_id"))
-      .select(col("doc_id"), col("_seg").as("seg")).distinct()
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/deletes/$seg")
-    val sawPostings = snap.segs("postings").toSet
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(marker)) c // concurrent duplicate: no-op
-      else {
-        require(sawPostings.subsetOf(c.segs("postings").toSet),
-          "a concurrent compaction folded segments this delete " +
-            "scanned — its tombstone scopes reference dropped " +
-            "segments; rerun deleteFromContainmentIndex against the " +
-            "new snapshot (appends compose; compactions serialize)")
-        c.copy(
-          tables = c.tables + (ContainmentDeletesTable ->
-            (c.segs(ContainmentDeletesTable).filterNot(_ == seg)
-              :+ seg)),
-          applied = c.applied :+ marker)
-      }
+    Segments.delete(spark, path, snap, deleteId, seg,
+      Seq(ContainmentDeletesTable), Seq(Segments.kept("postings")(
+        "a concurrent compaction folded segments this delete " +
+          "scanned — its tombstone scopes reference dropped " +
+          "segments; rerun deleteFromContainmentIndex against the " +
+          "new snapshot (appends compose; compactions serialize)"))) {
+      taggedLiveContainment(spark, path, snap)
+        .join(docIds.select(col(idCol).cast(LongType).as("doc_id"))
+          .distinct(), Seq("doc_id"))
+        .select(col("doc_id"), col("_seg").as("seg")).distinct()
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$path/deletes/$seg")
     }
   }
 
   /** The containment ledger's current manifest version — the as-of
     * handle ([[minhashIndexVersion]]'s MVCC contract). */
   def containmentIndexVersion(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = containmentSnapshot(spark, path).version
+      path: String): Long = Segments.snapshot(spark, path).version
 
   /** Append a (typically just-admitted) batch's shingle postings —
     * idempotent per `batchId` via the manifest `applied` record, same
@@ -2023,30 +1826,14 @@ object DedupOps {
       spark: org.apache.spark.sql.SparkSession, path: String,
       newDocs: DataFrame, idCol: String, textCol: String,
       batchId: String): Unit = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        !batchId.startsWith("compact_v") &&
-        !batchId.startsWith("delete_") &&
-        batchId.forall(c =>
-          c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      "batchId must be a filesystem-safe token != 'base' and outside " +
-        s"the reserved 'compact_v'/'delete_' prefixes (got '$batchId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = containmentSnapshot(spark, path)
-    if (snap.applied.contains(batchId)) return
-    val n = readContainmentTable(spark, path, snap, "params")
-      .head().getAs[Int]("n")
-    require(n >= 1, s"ledger at $path is a signature-SET containment " +
-      "index — use appendToContainmentSetIndex")
+    val snap = Segments.snapshot(spark, path)
     val seg = s"delta_$batchId"
-    writeContainmentSegment(newDocs, idCol, textCol, path, seg, n)
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(batchId)) c // concurrent duplicate: no-op
-      else c.copy(
-        tables = c.tables + ("postings" ->
-          (c.segs("postings").filterNot(_ == seg) :+ seg)),
-        applied = c.applied :+ batchId)
+    Segments.append(spark, path, snap, batchId, seg, Seq("postings")) {
+      val n = Segments.scan(spark, path, snap, "params")
+        .head().getAs[Int]("n")
+      require(n >= 1, s"ledger at $path is a signature-SET " +
+        "containment index — use appendToContainmentSetIndex")
+      writeContainmentSegment(newDocs, idCol, textCol, path, seg, n)
     }
   }
 
@@ -2068,8 +1855,8 @@ object DedupOps {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1] (got $threshold)")
     graft.functions.TextHashExprs.register(spark)
-    val snap = containmentSnapshot(spark, path, asOfVersion)
-    val n = readContainmentTable(spark, path, snap, "params")
+    val snap = Segments.snapshot(spark, path, asOfVersion)
+    val n = Segments.scan(spark, path, snap, "params")
       .head().getAs[Int]("n")
     require(n >= 1, s"ledger at $path is a signature-SET containment " +
       "index — use containmentSetAdmit")
@@ -2099,54 +1886,30 @@ object DedupOps {
   def compactContainmentIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
     compactContainmentIndexFrom(spark, path,
-      containmentSnapshot(spark, path))
+      Segments.snapshot(spark, path))
 
   private[ext] def compactContainmentIndexFrom(
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
     if (snap.segs("postings").length <= 1 &&
       snap.segs(ContainmentDeletesTable).isEmpty) return
-    // named for the version the fold CREATES (snap.version + 1) — the
-    // compactKllSketchFrom convention, so cross-index forensics read
-    // "which snapshot produced this fold" uniformly
-    val seg = s"compact_v${snap.version + 1}_" +
-      java.util.UUID.randomUUID().toString.take(8)
     // live read: the fold physically removes tombstoned docs; the
     // tombstone table empties in the same commit
-    readContainmentLive(spark, path, snap)
-      .repartition(col("s")).sortWithinPartitions("s")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/postings/$seg")
-    val folded = snap.segs("postings").toSet
-    val sawDeletes = snap.segs(ContainmentDeletesTable)
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      require(folded.subsetOf(c.segs("postings").toSet),
-        "a concurrent compaction already folded segments this " +
-          "compaction read — rerun compactContainmentIndex against " +
-          "the new snapshot")
-      require(c.segs(ContainmentDeletesTable) == sawDeletes,
-        "a concurrent delete committed during compaction — its " +
-          "tombstones are scoped to segments this fold dropped; " +
-          "rerun compactContainmentIndex against the new snapshot")
-      c.copy(tables = c.tables + ("postings" ->
-        (seg +: c.segs("postings").filterNot(folded.contains)))
-        + (ContainmentDeletesTable -> Seq.empty[String]))
+    Segments.fold(spark, path, snap, Seq("postings"),
+        "compactContainmentIndex", Some(ContainmentDeletesTable)) { seg =>
+      readContainmentLive(spark, path, snap)
+        .repartition(col("s")).sortWithinPartitions("s")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$path/postings/$seg")
     }
   }
 
   /** Retention GC for [[saveContainmentIndex]] — the shared vacuum. */
   def vacuumContainmentIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      keepVersions: Int = 2): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    graft.sinks.IndexManifest.vacuum(fs, path, keepVersions,
-      (ContainmentTables :+ ContainmentDeletesTable)
-        .map(t => t -> s"$path/$t").toMap)
-  }
+      keepVersions: Int = 2): Unit =
+    Segments.vacuum(spark, path, keepVersions,
+      ContainmentTables :+ ContainmentDeletesTable)
 
   // -------------- precomputed signature-SET containment ledger (x252)
 
@@ -2182,15 +1945,12 @@ object DedupOps {
       setCol: String, path: String): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    Segments.drop(spark, path)
     Seq(0).toDF("n")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/params/base")
     writeContainmentSetSegment(docs, idCol, setCol, path, "base")
-    graft.sinks.IndexManifest.commitMerge(fs, path)(_ =>
-      graft.sinks.IndexSnapshot(0L,
-        ContainmentTables.map(t => t -> Seq("base")).toMap, Seq.empty))
+    Segments.create(spark, path,
+      ContainmentTables.map(t => t -> Seq("base")).toMap)
   }
 
   /** Append a batch's signature sets — [[appendToContainmentIndex]]'s
@@ -2200,30 +1960,14 @@ object DedupOps {
       spark: org.apache.spark.sql.SparkSession, path: String,
       newDocs: DataFrame, idCol: String, setCol: String,
       batchId: String): Unit = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        !batchId.startsWith("compact_v") &&
-        !batchId.startsWith("delete_") &&
-        batchId.forall(c =>
-          c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      "batchId must be a filesystem-safe token != 'base' and outside " +
-        s"the reserved 'compact_v'/'delete_' prefixes (got '$batchId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = containmentSnapshot(spark, path)
-    if (snap.applied.contains(batchId)) return
-    require(readContainmentTable(spark, path, snap, "params")
-        .head().getAs[Int]("n") == 0,
-      s"ledger at $path is a text-shingle containment index — use " +
-        "appendToContainmentIndex")
+    val snap = Segments.snapshot(spark, path)
     val seg = s"delta_$batchId"
-    writeContainmentSetSegment(newDocs, idCol, setCol, path, seg)
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(batchId)) c // concurrent duplicate: no-op
-      else c.copy(
-        tables = c.tables + ("postings" ->
-          (c.segs("postings").filterNot(_ == seg) :+ seg)),
-        applied = c.applied :+ batchId)
+    Segments.append(spark, path, snap, batchId, seg, Seq("postings")) {
+      require(Segments.scan(spark, path, snap, "params")
+          .head().getAs[Int]("n") == 0,
+        s"ledger at $path is a text-shingle containment index — use " +
+          "appendToContainmentIndex")
+      writeContainmentSetSegment(newDocs, idCol, setCol, path, seg)
     }
   }
 
@@ -2337,8 +2081,8 @@ object DedupOps {
       : DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1] (got $threshold)")
-    val snap = containmentSnapshot(spark, path, asOfVersion)
-    require(readContainmentTable(spark, path, snap, "params")
+    val snap = Segments.snapshot(spark, path, asOfVersion)
+    require(Segments.scan(spark, path, snap, "params")
         .head().getAs[Int]("n") == 0,
       s"ledger at $path is a text-shingle containment index — use " +
         "containmentAdmit")
@@ -2526,17 +2270,13 @@ object DedupOps {
     require(avgWords >= 2, s"avgWords must be >= 2 (got $avgWords)")
     val spark = docs.sparkSession
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    Segments.drop(spark, path)
     Seq((avgWords, salt)).toDF("avg_words", "salt")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/params/base")
     writeCdcChunkSegment(docs, idCol, textCol, path, "base",
       avgWords, salt)
-    graft.sinks.IndexManifest.commitMerge(fs, path)(_ =>
-      graft.sinks.IndexSnapshot(0L,
-        Map("hashes" -> Seq("base"), "params" -> Seq("base")),
-        Seq.empty))
+    Segments.create(spark, path,
+      Map("hashes" -> Seq("base"), "params" -> Seq("base")))
   }
 
   private def writeCdcChunkSegment(docs: DataFrame, idCol: String,
@@ -2550,7 +2290,7 @@ object DedupOps {
   private def cdcLedgerParams(
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot): (Int, String) = {
-    val r = readContainmentTable(spark, path, snap, "params").head()
+    val r = Segments.scan(spark, path, snap, "params").head()
     (r.getAs[Int]("avg_words"), r.getAs[String]("salt"))
   }
 
@@ -2561,33 +2301,18 @@ object DedupOps {
   def appendToCdcChunkLedger(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, idCol: String, textCol: String,
       batchId: String): Unit = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        !batchId.startsWith("compact_v") &&
-        batchId.forall(c =>
-          c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      "batchId must be a filesystem-safe token != 'base' and outside " +
-        s"the reserved 'compact_v' prefix (got '$batchId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = containmentSnapshot(spark, path)
-    if (snap.applied.contains(batchId)) return
-    val (aw, salt) = cdcLedgerParams(spark, path, snap)
+    val snap = Segments.snapshot(spark, path)
     val seg = s"delta_$batchId"
-    writeCdcChunkSegment(batch, idCol, textCol, path, seg, aw, salt)
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(batchId)) c
-      else c.copy(
-        tables = c.tables + ("hashes" ->
-          (c.segs("hashes").filterNot(_ == seg) :+ seg)),
-        applied = c.applied :+ batchId)
+    Segments.append(spark, path, snap, batchId, seg, Seq("hashes")) {
+      val (aw, salt) = cdcLedgerParams(spark, path, snap)
+      writeCdcChunkSegment(batch, idCol, textCol, path, seg, aw, salt)
     }
   }
 
   /** The CDC ledger's current version handle — capture before an
     * append for an as-of rewrite replay. */
   def cdcChunkLedgerVersion(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = containmentSnapshot(spark, path).version
+      path: String): Long = Segments.snapshot(spark, path).version
 
   /** Rewrite a batch against the CDC ledger: a chunk survives iff it
     * is its batch's first occurrence (by (doc_id, chunk_idx)) AND its
@@ -2598,13 +2323,13 @@ object DedupOps {
   def cdcDedupIncremental(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, idCol: String, textCol: String,
       asOfVersion: Option[Long] = None): DataFrame = {
-    val snap = containmentSnapshot(spark, path, asOfVersion)
+    val snap = Segments.snapshot(spark, path, asOfVersion)
     val (aw, salt) = cdcLedgerParams(spark, path, snap)
     val chunks = cdcChunks(batch, idCol, textCol, aw, salt)
     val first = chunks.groupBy(col("chunk_hash"))
       .agg(min(struct(col("doc_id"), col("chunk_idx"))).as("f"))
     val novel = first.join(
-      readContainmentTable(spark, path, snap, "hashes")
+      Segments.scan(spark, path, snap, "hashes")
         .withColumnRenamed("h", "chunk_hash"),
       Seq("chunk_hash"), "left_anti")
       .select(col("f.doc_id").as("doc_id"),
@@ -2640,16 +2365,12 @@ object DedupOps {
     require(chunkWords >= 1, s"chunkWords must be >= 1 (got $chunkWords)")
     val spark = docs.sparkSession
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    Segments.drop(spark, path)
     Seq(chunkWords).toDF("chunk_words")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/params/base")
     writeChunkSegment(docs, idCol, textCol, path, "base", chunkWords)
-    graft.sinks.IndexManifest.commitMerge(fs, path)(_ =>
-      graft.sinks.IndexSnapshot(0L,
-        Map("hashes" -> Seq("base"), "params" -> Seq("base")),
-        Seq.empty))
+    Segments.create(spark, path,
+      Map("hashes" -> Seq("base"), "params" -> Seq("base")))
   }
 
   private def writeChunkSegment(docs: DataFrame, idCol: String,
@@ -2662,7 +2383,7 @@ object DedupOps {
   private def chunkLedgerParams(
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot): Int = {
-    val p = readContainmentTable(spark, path, snap, "params")
+    val p = Segments.scan(spark, path, snap, "params")
     require(p.schema.fieldNames.contains("chunk_words"),
       s"ledger at $path is not a saveChunkLedger directory")
     p.head().getAs[Int]("chunk_words")
@@ -2675,33 +2396,18 @@ object DedupOps {
   def appendToChunkLedger(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, idCol: String, textCol: String,
       batchId: String): Unit = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        !batchId.startsWith("compact_v") &&
-        batchId.forall(c =>
-          c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      "batchId must be a filesystem-safe token != 'base' and outside " +
-        s"the reserved 'compact_v' prefix (got '$batchId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = containmentSnapshot(spark, path)
-    if (snap.applied.contains(batchId)) return
-    val cw = chunkLedgerParams(spark, path, snap)
+    val snap = Segments.snapshot(spark, path)
     val seg = s"delta_$batchId"
-    writeChunkSegment(batch, idCol, textCol, path, seg, cw)
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(batchId)) c
-      else c.copy(
-        tables = c.tables + ("hashes" ->
-          (c.segs("hashes").filterNot(_ == seg) :+ seg)),
-        applied = c.applied :+ batchId)
+    Segments.append(spark, path, snap, batchId, seg, Seq("hashes")) {
+      writeChunkSegment(batch, idCol, textCol, path, seg,
+        chunkLedgerParams(spark, path, snap))
     }
   }
 
   /** The chunk ledger's current version handle — capture before an
     * append for an as-of rewrite replay. */
   def chunkLedgerVersion(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = containmentSnapshot(spark, path).version
+      path: String): Long = Segments.snapshot(spark, path).version
 
   /** Fold the hash segments to one, DISTINCT-ed across segments —
     * appends land blind (duplicate hashes across batches), so the
@@ -2713,24 +2419,13 @@ object DedupOps {
     * fold until vacuum). */
   def compactChunkLedger(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = containmentSnapshot(spark, path)
+    val snap = Segments.snapshot(spark, path)
     if (snap.segs("hashes").length <= 1) return
-    val seg = s"compact_v${snap.version + 1}_" +
-      java.util.UUID.randomUUID().toString.take(8)
-    readContainmentTable(spark, path, snap, "hashes").distinct()
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/hashes/$seg")
-    val folded = snap.segs("hashes").toSet
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      require(folded.subsetOf(c.segs("hashes").toSet),
-        "a concurrent compaction already folded segments this " +
-          "compaction read — rerun compactChunkLedger against the " +
-          "new snapshot")
-      c.copy(tables = c.tables + ("hashes" ->
-        (seg +: c.segs("hashes").filterNot(folded.contains))))
+    Segments.fold(spark, path, snap, Seq("hashes"),
+        "compactChunkLedger") { seg =>
+      Segments.scan(spark, path, snap, "hashes").distinct()
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$path/hashes/$seg")
     }
   }
 
@@ -2744,13 +2439,13 @@ object DedupOps {
   def chunkDedupIncremental(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, idCol: String, textCol: String,
       asOfVersion: Option[Long] = None): DataFrame = {
-    val snap = containmentSnapshot(spark, path, asOfVersion)
+    val snap = Segments.snapshot(spark, path, asOfVersion)
     val cw = chunkLedgerParams(spark, path, snap)
     val base = chunkBase(batch, idCol, textCol, cw)
     val first = chunkHashes(base, cw).groupBy(col("h"))
       .agg(min(struct(col("doc_id"), col("idx"))).as("f"))
     val novel = first.join(
-      readContainmentTable(spark, path, snap, "hashes"),
+      Segments.scan(spark, path, snap, "hashes"),
       Seq("h"), "left_anti")
     val keptIdx = novel
       .select(col("f.doc_id").as("doc_id"), col("f.idx").as("idx"))
@@ -2789,15 +2484,12 @@ object DedupOps {
     require(cap >= 1, s"cap must be >= 1 (got $cap)")
     val spark = docs.sparkSession
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    Segments.drop(spark, path)
     Seq(cap).toDF("cap")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/params/base")
     writeHostBudgetSegment(docs, idCol, hostCol, path, "base")
-    graft.sinks.IndexManifest.commitMerge(fs, path)(_ =>
-      graft.sinks.IndexSnapshot(0L,
-        HostBudgetTables.map(t => t -> Seq("base")).toMap, Seq.empty))
+    Segments.create(spark, path,
+      HostBudgetTables.map(t => t -> Seq("base")).toMap)
   }
 
   /** Append an ADMITTED batch — [[appendToContainmentSetIndex]]'s
@@ -2807,34 +2499,20 @@ object DedupOps {
       spark: org.apache.spark.sql.SparkSession, path: String,
       admitted: DataFrame, idCol: String, hostCol: String,
       batchId: String): Unit = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        batchId.forall(c =>
-          c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      s"batchId must be a filesystem-safe token != 'base' " +
-        s"(got '$batchId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = containmentSnapshot(spark, path)
-    if (snap.applied.contains(batchId)) return
-    require(readContainmentTable(spark, path, snap, "params")
-        .schema.fieldNames.contains("cap"),
-      s"ledger at $path is not a saveHostBudgetLedger directory")
+    val snap = Segments.snapshot(spark, path)
     val seg = s"delta_$batchId"
-    writeHostBudgetSegment(admitted, idCol, hostCol, path, seg)
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(batchId)) c
-      else c.copy(
-        tables = c.tables + ("admitted" ->
-          (c.segs("admitted").filterNot(_ == seg) :+ seg)),
-        applied = c.applied :+ batchId)
+    Segments.append(spark, path, snap, batchId, seg, Seq("admitted")) {
+      require(Segments.scan(spark, path, snap, "params")
+          .schema.fieldNames.contains("cap"),
+        s"ledger at $path is not a saveHostBudgetLedger directory")
+      writeHostBudgetSegment(admitted, idCol, hostCol, path, seg)
     }
   }
 
   /** The ledger's current version handle — capture before an append
     * for an as-of admission replay. */
   def hostBudgetLedgerVersion(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = containmentSnapshot(spark, path).version
+      path: String): Long = Segments.snapshot(spark, path).version
 
   /** Admit the rows of `batch` that fit their host's remaining budget:
     * rank the batch per host by ascending id (the deterministic
@@ -2848,12 +2526,12 @@ object DedupOps {
   def hostBudgetAdmit(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, idCol: String, hostCol: String,
       asOfVersion: Option[Long] = None): DataFrame = {
-    val snap = containmentSnapshot(spark, path, asOfVersion)
-    val params = readContainmentTable(spark, path, snap, "params")
+    val snap = Segments.snapshot(spark, path, asOfVersion)
+    val params = Segments.scan(spark, path, snap, "params")
     require(params.schema.fieldNames.contains("cap"),
       s"ledger at $path is not a saveHostBudgetLedger directory")
     val cap = params.head().getAs[Int]("cap")
-    val prior = readContainmentTable(spark, path, snap, "admitted")
+    val prior = Segments.scan(spark, path, snap, "admitted")
       .groupBy(col("host")).agg(count(lit(1)).as("n_prior"))
     val in = batch.select(col(idCol).cast(LongType).as("in_doc"),
         col(hostCol).cast(StringType).as("host"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Concurrently
-import graft.sinks.PipelinePin
+import graft.sinks.{PipelinePin, Segments}
 
 /** Coordinated serving across the hybrid retrieval stack's two
   * independently-versioned indexes (BM25 postings + IVF inverted
@@ -23,25 +23,15 @@ import graft.sinks.PipelinePin
   * term filters). Writers pay one extra CAS file-create per batch. */
 object Hybrid {
 
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def latestVersion(spark: SparkSession, path: String): Long =
-    graft.sinks.IndexManifest.latest(fs(spark, path), path)
-      .map(_.version)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no index manifest at $path (not a saved index directory)"))
-
   /** Pin the CURRENT (bm25, ivf) version pair — called after both
     * indexes exist (initial build) or after any out-of-band
     * maintenance (compaction, retrain) that should become the served
     * snapshot. Returns the committed pin. */
   def commitPin(spark: SparkSession, pinRoot: String,
       bm25Path: String, ivfPath: String): PipelinePin.Pin =
-    PipelinePin.commit(fs(spark, pinRoot), pinRoot, Map(
-      "bm25" -> latestVersion(spark, bm25Path),
-      "ivf" -> latestVersion(spark, ivfPath)))
+    PipelinePin.commit(Segments.fs(spark, pinRoot), pinRoot, Map(
+      "bm25" -> Segments.snapshot(spark, bm25Path).version,
+      "ivf" -> Segments.snapshot(spark, ivfPath).version))
 
   /** The dual CDC applier: land `batchId` in BOTH indexes, then commit
     * one pin naming the new pair. Each leg's append is idempotent on
@@ -77,7 +67,7 @@ object Hybrid {
       ivfPath: String, queries: DataFrame, idCol: String,
       vecCol: String, kLex: Int, kVec: Int, k: Int, nprobe: Int = 2,
       pinVersion: Option[Long] = None): DataFrame = {
-    val pfs = fs(spark, pinRoot)
+    val pfs = Segments.fs(spark, pinRoot)
     val pin = pinVersion
       .map(v => PipelinePin.at(pfs, pinRoot, v).getOrElse(
         throw new IllegalArgumentException(
@@ -107,7 +97,7 @@ object Hybrid {
   def vacuumPinned(spark: SparkSession, pinRoot: String,
       bm25Path: String, ivfPath: String, keepVersions: Int = 2)
       : Unit = {
-    val pfs = fs(spark, pinRoot)
+    val pfs = Segments.fs(spark, pinRoot)
     // the two leg vacuums are independent (different paths, each
     // reading its own live-pin set) — overlap them like dualAppend
     Concurrently.all(Seq(

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Concurrently
+import graft.sinks.Segments
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (SURVEY §7.5).
@@ -225,7 +226,7 @@ object Similarity {
     }
     // stage two reads the SAME snapshot's corpus segments (stored
     // double vectors; asDouble in maxSimRerank is then the identity)
-    val snap = ivfSnapshot(spark, path, asOfVersion)
+    val snap = Segments.snapshot(spark, path, asOfVersion)
     val indexed = readIvfCorpus(spark, path, snap)
       .select(col("vec_id").as(idCol), col("v").as(vecCol))
     maxSimRerank(indexed, queries,
@@ -395,7 +396,7 @@ object Similarity {
     * oracle from a cold reload). */
   def knnGraphFromIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, k: Int = 3, nprobe: Int = 2): DataFrame =
-    knnGraphFromIndex(spark, path, ivfSnapshot(spark, path), k, nprobe)
+    knnGraphFromIndex(spark, path, Segments.snapshot(spark, path), k, nprobe)
 
   /** Snapshot-taking overload: the composed serves
     * ([[knnGraphRefinedFromIndex]], [[mutualKnnClustersFromIndex]])
@@ -464,7 +465,7 @@ object Similarity {
       reliable: Boolean = false): DataFrame = {
     // ONE manifest resolution for both index reads (seed graph +
     // re-rank vectors) — the every-reader-resolves-one-snapshot rule
-    val snap = ivfSnapshot(spark, path)
+    val snap = Segments.snapshot(spark, path)
     val g0 = knnGraphFromIndex(spark, path, snap, k, nprobe)
       .select(col("src"), col("dst"))
     refineKnnGraph(
@@ -557,7 +558,7 @@ object Similarity {
       k: Int = 3, nprobe: Int = 2, reliable: Boolean = false)
       : DataFrame = {
     // ONE manifest resolution for both index reads (graph + labels)
-    val snap = ivfSnapshot(spark, path)
+    val snap = Segments.snapshot(spark, path)
     val g = knnGraphFromIndex(spark, path, snap, k, nprobe)
       .select(col("src"), col("dst"))
     // same LongType id contract as the per-call form — the saved index
@@ -695,9 +696,7 @@ object Similarity {
     require(metaCols.forall(c => !IvfCoreCols.contains(c)),
       s"metaCols may not collide with the layout's core columns " +
         s"($IvfCoreCols)")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    Segments.drop(spark, path)
     val centroids = Clustering.kmeansCentroids(corpus, idCol, vecCol,
       kCentroids, iters, trainSample)
     // the centroid and corpus writes are independent jobs over the
@@ -716,34 +715,14 @@ object Similarity {
           metaCols.map(col): _*)
         .write.mode("overwrite").partitionBy("batch", "bucket")
         .parquet(s"$path/corpus")))
-    graft.sinks.IndexManifest.commitMerge(fs, path)(_ =>
-      graft.sinks.IndexSnapshot(0L,
-        Map("corpus" -> Seq("base"), "centroids" -> Seq("base")),
-        Seq.empty))
-  }
-
-  /** Resolve the index's snapshot — newest, or a retained older
-    * version for time travel (manifest required). */
-  private def ivfSnapshot(spark: org.apache.spark.sql.SparkSession,
-      path: String, asOfVersion: Option[Long] = None)
-      : graft.sinks.IndexSnapshot = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    asOfVersion match {
-      case Some(v) => graft.sinks.IndexManifest.at(fs, path, v)
-        .getOrElse(throw new IllegalArgumentException(
-          s"index version $v not found at $path (vacuumed past the " +
-            "retention window, or never committed)"))
-      case None => graft.sinks.IndexManifest.latest(fs, path)
-        .getOrElse(throw new IllegalArgumentException(
-          s"no index manifest at $path (not a saveIvfIndex directory)"))
-    }
+    Segments.create(spark, path,
+      Map("corpus" -> Seq("base"), "centroids" -> Seq("base")))
   }
 
   /** The index's current manifest version — the handle
     * [[queryIvfIndex]]'s `asOfVersion` time travel pins to. */
   def ivfIndexVersion(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = ivfSnapshot(spark, path).version
+      path: String): Long = Segments.snapshot(spark, path).version
 
   /** Read the corpus pinned to one snapshot's segments: a static
     * `batch IN (...)` partition filter, pruned at planning — partial
@@ -760,10 +739,8 @@ object Similarity {
     // already carries its segment name as the `batch` partition
     // column, so a later re-append of a deleted id lands in a batch no
     // tombstone covers and serves normally (the reindex primitive).
-    val del = snap.segs(IvfDeletesTable)
-    if (del.isEmpty) base
-    else base.join(
-      spark.read.parquet(del.map(s => s"$path/deletes/$s"): _*),
+    if (snap.segs(IvfDeletesTable).isEmpty) base
+    else base.join(Segments.scan(spark, path, snap, IvfDeletesTable),
       Seq("vec_id", "batch"), "left_anti")
   }
 
@@ -823,7 +800,7 @@ object Similarity {
       path: String, ids: DataFrame, idCol: String,
       deleteId: String): Unit =
     deleteFromIvfIndexFrom(spark, path, ids, idCol, deleteId,
-      ivfSnapshot(spark, path))
+      Segments.snapshot(spark, path))
 
   /** Snapshot-taking core of [[deleteFromIvfIndex]] — `private[ext]`
     * for the concurrency specs (delete-races-compaction window). */
@@ -831,36 +808,20 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, path: String,
       ids: DataFrame, idCol: String, deleteId: String,
       snap: graft.sinks.IndexSnapshot): Unit = {
-    require(deleteId.nonEmpty && deleteId.forall(c =>
-        c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      s"deleteId must be a filesystem-safe token (got '$deleteId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val marker = s"delete_$deleteId"
-    if (snap.applied.contains(marker)) return
     val seg = s"del_$deleteId"
-    readIvfCorpus(spark, path, snap)
-      .join(ids.select(col(idCol).cast(LongType).as("vec_id"))
-        .distinct(), Seq("vec_id"))
-      .select(col("vec_id"), col("batch").cast(StringType).as("batch"))
-      .distinct()
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/deletes/$seg")
-    val sawCorpus = snap.segs("corpus").toSet
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(marker)) c // concurrent duplicate: no-op
-      else {
-        require(sawCorpus.subsetOf(c.segs("corpus").toSet),
-          "a concurrent compaction/retrain replaced corpus segments " +
-            "this delete scanned — its tombstone scopes reference " +
-            "dropped segments; rerun deleteFromIvfIndex against the " +
-            "new snapshot (appends compose; maintenance serializes)")
-        c.copy(
-          tables = c.tables + (IvfDeletesTable ->
-            (c.segs(IvfDeletesTable).filterNot(_ == seg) :+ seg)),
-          applied = c.applied :+ marker)
-      }
+    Segments.delete(spark, path, snap, deleteId, seg, Seq(IvfDeletesTable),
+      Seq(Segments.kept("corpus")(
+        "a concurrent compaction/retrain replaced corpus segments " +
+          "this delete scanned — its tombstone scopes reference " +
+          "dropped segments; rerun deleteFromIvfIndex against the " +
+          "new snapshot (appends compose; maintenance serializes)"))) {
+      readIvfCorpus(spark, path, snap)
+        .join(ids.select(col(idCol).cast(LongType).as("vec_id"))
+          .distinct(), Seq("vec_id"))
+        .select(col("vec_id"), col("batch").cast(StringType).as("batch"))
+        .distinct()
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$path/deletes/$seg")
     }
   }
 
@@ -871,7 +832,7 @@ object Similarity {
     * different generations. */
   def loadIvfCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[(Long, Seq[Double])] =
-    loadCentroids(spark, path, ivfSnapshot(spark, path))
+    loadCentroids(spark, path, Segments.snapshot(spark, path))
 
   private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String, snap: graft.sinks.IndexSnapshot)
@@ -915,23 +876,9 @@ object Similarity {
     * names this delta (never `"base"`). */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, newVecs: DataFrame, idCol: String,
-      vecCol: String, batchId: String): Unit = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        !batchId.startsWith("compact_v") &&
-        !batchId.startsWith("retrain_v") &&
-        !batchId.startsWith("delete_") &&
-        batchId.forall(c =>
-          c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      "batchId must be a filesystem-safe token != 'base' and outside " +
-        s"the reserved 'compact_v'/'retrain_v'/'delete_' prefixes (got '$batchId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no index manifest at $path (not a saveIvfIndex directory)"))
+      vecCol: String, batchId: String): Unit =
     appendToIvfIndexFrom(spark, path, newVecs, idCol, vecCol, batchId,
-      snap)
-  }
+      Segments.snapshot(spark, path))
 
   /** Snapshot-taking core of [[appendToIvfIndex]] — `private[ext]` so
     * the concurrency specs can deterministically replay the
@@ -940,51 +887,38 @@ object Similarity {
   private[ext] def appendToIvfIndexFrom(
       spark: org.apache.spark.sql.SparkSession, path: String,
       newVecs: DataFrame, idCol: String, vecCol: String,
-      batchId: String, snap: graft.sinks.IndexSnapshot): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    if (snap.applied.contains(batchId)) return
-    val centroids = loadCentroids(spark, path, snap)
-    require(centroids.nonEmpty, s"appendToIvfIndex: empty index at $path")
-    graft.functions.VectorExprs.register(spark)
-    import graft.functions.VectorExprs.dotF64
-    // the layout is self-describing: metadata columns come from the
-    // stored corpus schema, and the batch must supply them
-    val meta = ivfMetaCols(spark, path, snap)
-    requireMeta(newVecs, meta, "appendToIvfIndex")
-    Clustering.assignTo(
-        newVecs.select(col(idCol).as("vec_id") +:
-          asDouble(col(vecCol)).as("_v") +: meta.map(col): _*),
-        centroids)
-      .select(col("vec_id") +: col("_v").as("v") +:
-        sqrt(dotF64(col("_v"), col("_v"))).as("nrm") +:
-        col("cluster").as("bucket") +: meta.map(col): _*)
-      .write.mode("overwrite").partitionBy("bucket")
-      // the batch value is encoded in the target path, so the write is
-      // naturally scoped to this segment — never the corpus
-      .parquet(s"$path/corpus/batch=$batchId")
-    val sawCentroids = snap.segs("centroids")
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(batchId)) c // concurrent duplicate: no-op
-      else {
-        // a retrain that committed between our snapshot and this
-        // commit changed the centroid generation: this batch was
-        // assigned against the OLD centroids, so publishing it would
-        // bucket its vectors against the wrong generation. Abort; the
-        // rerun re-assigns against the new centroids (the orphan
-        // directory is overwritten, or vacuumed if never retried).
-        require(c.segs("centroids") == sawCentroids,
-          s"retrain committed during append of batch '$batchId' — the " +
-            "batch was bucketed against the superseded centroid " +
-            "generation; rerun appendToIvfIndex to re-assign it")
-        c.copy(
-          tables = c.tables + ("corpus" ->
-            (c.segs("corpus").filterNot(_ == batchId) :+ batchId)),
-          applied = c.applied :+ batchId)
-      }
+      batchId: String, snap: graft.sinks.IndexSnapshot): Unit =
+    // a retrain that committed between our snapshot and the commit
+    // changed the centroid generation: this batch was assigned against
+    // the OLD centroids, so publishing it would bucket its vectors
+    // against the wrong generation. Abort; the rerun re-assigns
+    // against the new centroids (the orphan directory is overwritten,
+    // or vacuumed if never retried).
+    Segments.append(spark, path, snap, batchId, batchId, Seq("corpus"),
+      Seq(Segments.unchanged("centroids")(
+        s"retrain committed during append of batch '$batchId' — the " +
+          "batch was bucketed against the superseded centroid " +
+          "generation; rerun appendToIvfIndex to re-assign it"))) {
+      val centroids = loadCentroids(spark, path, snap)
+      require(centroids.nonEmpty, s"appendToIvfIndex: empty index at $path")
+      graft.functions.VectorExprs.register(spark)
+      import graft.functions.VectorExprs.dotF64
+      // the layout is self-describing: metadata columns come from the
+      // stored corpus schema, and the batch must supply them
+      val meta = ivfMetaCols(spark, path, snap)
+      requireMeta(newVecs, meta, "appendToIvfIndex")
+      Clustering.assignTo(
+          newVecs.select(col(idCol).as("vec_id") +:
+            asDouble(col(vecCol)).as("_v") +: meta.map(col): _*),
+          centroids)
+        .select(col("vec_id") +: col("_v").as("v") +:
+          sqrt(dotF64(col("_v"), col("_v"))).as("nrm") +:
+          col("cluster").as("bucket") +: meta.map(col): _*)
+        .write.mode("overwrite").partitionBy("bucket")
+        // the batch value is encoded in the target path, so the write is
+        // naturally scoped to this segment — never the corpus
+        .parquet(s"$path/corpus/batch=$batchId")
     }
-  }
 
   /** Compact a persisted [[saveIvfIndex]] index's corpus back to a
     * single segment — the maintenance step that closes the append
@@ -1005,14 +939,8 @@ object Similarity {
     * `applied` record is carried, so late retries of folded batches
     * still no-op. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no index manifest at $path (not a saveIvfIndex directory)"))
-    compactIvfIndexFrom(spark, path, snap)
-  }
+      path: String): Unit =
+    compactIvfIndexFrom(spark, path, Segments.snapshot(spark, path))
 
   /** Snapshot-taking core of [[compactIvfIndex]] — `private[ext]` for
     * the concurrency specs (replay the compact-races-retrain and
@@ -1020,56 +948,28 @@ object Similarity {
   private[ext] def compactIvfIndexFrom(
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
     if (snap.segs("corpus").length <= 1 &&
       snap.segs(IvfDeletesTable).isEmpty) return
-    val seg = s"compact_v${snap.version + 1}_" +
-      java.util.UUID.randomUUID().toString.take(8)
     // readIvfCorpus is tombstone-aware, so the fold physically removes
     // deleted vectors; the tombstone table empties in the same commit.
     // Metadata columns are carried — folding must not strip the
-    // pre-filter surface.
-    readIvfCorpus(spark, path, snap)
-      .select(col("vec_id") +: col("v") +: col("nrm") +:
-        col("bucket").cast(LongType).as("bucket") +:
-        ivfMetaCols(spark, path, snap).map(col): _*)
-      .repartition(col("bucket"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(s"$path/corpus/batch=$seg")
-    val folded = snap.segs("corpus").toSet
-    val sawCentroids = snap.segs("centroids")
-    val sawDeletes = snap.segs(IvfDeletesTable)
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      // Two concurrent-maintenance races this merge must NOT compose
-      // through (appends compose fine — they are carried forward):
-      // (a) a retrain won the slot: the corpus is now re-bucketed
-      //     against a NEW centroid generation, and prepending our
-      //     old-generation compacted copy would duplicate every vec_id
-      //     under stale buckets;
-      // (b) another compaction already folded (some of) the same
-      //     segments: their data lives in ITS compacted segment, and
-      //     prepending ours would duplicate the overlap.
-      require(c.segs("centroids") == sawCentroids,
+    // pre-filter surface. Beyond the shared fold guards, a retrain
+    // that won the slot re-bucketed the corpus against a NEW centroid
+    // generation: prepending our old-generation copy would duplicate
+    // every vec_id under stale buckets.
+    Segments.fold(spark, path, snap, Seq("corpus"), "compactIvfIndex",
+      Some(IvfDeletesTable), Seq(Segments.unchanged("centroids")(
         "retrain committed during compaction — the compacted segment " +
           "is bucketed against the superseded centroid generation; " +
-          "discard and rerun compactIvfIndex if still needed")
-      require(folded.subsetOf(c.segs("corpus").toSet),
-        "a concurrent compaction already folded segments this " +
-          "compaction read — committing both copies would duplicate " +
-          "vectors; rerun compactIvfIndex against the new snapshot")
-      // a delete committing mid-fold scoped its tombstones to batch
-      // names this fold drops — carrying them would dangle and
-      // resurrect the vectors
-      require(c.segs(IvfDeletesTable) == sawDeletes,
-        "a concurrent delete committed during compaction — its " +
-          "tombstones are scoped to segments this fold dropped; rerun " +
-          "compactIvfIndex against the new snapshot")
-      c.copy(tables = c.tables + ("corpus" ->
-        (seg +: c.segs("corpus").filterNot(folded.contains)))
-        + (IvfDeletesTable -> Seq.empty[String]))
+          "discard and rerun compactIvfIndex if still needed"))) { seg =>
+      readIvfCorpus(spark, path, snap)
+        .select(col("vec_id") +: col("v") +: col("nrm") +:
+          col("bucket").cast(LongType).as("bucket") +:
+          ivfMetaCols(spark, path, snap).map(col): _*)
+        .repartition(col("bucket"))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .partitionBy("bucket")
+        .parquet(s"$path/corpus/batch=$seg")
     }
   }
 
@@ -1100,7 +1000,7 @@ object Similarity {
   def retrainIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, kCentroids: Int = 8, iters: Int = 2,
       trainSample: Option[String] = None): Unit =
-    retrainIvfIndexFrom(spark, path, ivfSnapshot(spark, path),
+    retrainIvfIndexFrom(spark, path, Segments.snapshot(spark, path),
       kCentroids, iters, trainSample)
 
   /** Snapshot-taking core of [[retrainIvfIndex]] — `private[ext]` so
@@ -1112,8 +1012,6 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot, kCentroids: Int = 8,
       iters: Int = 2, trainSample: Option[String] = None): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
     val seg = s"retrain_v${snap.version}_" +
       java.util.UUID.randomUUID().toString.take(8)
     val meta = ivfMetaCols(spark, path, snap)
@@ -1150,7 +1048,7 @@ object Similarity {
     var carried = Map.empty[String, String] // unseen batch -> carry seg
     var committed = false
     while (!committed) {
-      val cur = graft.sinks.IndexManifest.latest(fs, path).getOrElse(snap)
+      val cur = Segments.latest(spark, path).getOrElse(snap)
       val unseen = cur.segs("corpus")
         .filterNot(s => sawCorpus.contains(s) || carried.contains(s))
       unseen.foreach { b =>
@@ -1172,8 +1070,7 @@ object Similarity {
         carried += (b -> carrySeg)
       }
       try {
-        graft.sinks.IndexManifest.commitMerge(fs, path) { c0 =>
-          val c = c0.getOrElse(snap)
+        Segments.commit(spark, path, snap) { c =>
           // a still-newer append may have landed since `cur` was read;
           // bounce out to re-bucket it rather than dropping it
           if (c.segs("corpus").exists(s =>
@@ -1223,7 +1120,7 @@ object Similarity {
     * broadcast total — never a corpus shuffle. */
   def ivfCellStats(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    val corpus = readIvfCorpus(spark, path, ivfSnapshot(spark, path))
+    val corpus = readIvfCorpus(spark, path, Segments.snapshot(spark, path))
     val counts = corpus
       .groupBy(col("bucket").cast(LongType).as("bucket"))
       .agg(count(lit(1)).as("n_vecs"))
@@ -1249,28 +1146,23 @@ object Similarity {
   def cloneIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, dstPath: String,
       asOfVersion: Option[Long] = None,
-      extraTables: Seq[String] = Nil): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    graft.sinks.IndexManifest.cloneSnapshot(fs,
-      ivfSnapshot(spark, path, asOfVersion), dstPath,
-      (Seq("corpus", "centroids", IvfDeletesTable) ++ extraTables)
-        .map(t => t -> (s"$path/$t", s"$dstPath/$t")).toMap,
-      (t, s) => if (t == "corpus") s"batch=$s" else s)
-  }
+      extraTables: Seq[String] = Nil): Unit =
+    Segments.cloneTo(spark, path,
+      Segments.snapshot(spark, path, asOfVersion), dstPath,
+      Seq("corpus", "centroids", IvfDeletesTable) ++ extraTables,
+      CorpusSegDir)
+
+  /** The corpus stores segment `s` as the `batch=s` partition
+    * directory; every other table uses the plain name. */
+  private val CorpusSegDir: (String, String) => String =
+    (t, s) => if (t == "corpus") s"batch=$s" else s
 
   def vacuumIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, keepVersions: Int = 2,
-      pinnedVersions: Set[Long] = Set.empty): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    graft.sinks.IndexManifest.vacuum(fs, path, keepVersions,
-      Map("corpus" -> s"$path/corpus",
-        "centroids" -> s"$path/centroids",
-        IvfDeletesTable -> s"$path/deletes"),
-      (t, s) => if (t == "corpus") s"batch=$s" else s,
+      pinnedVersions: Set[Long] = Set.empty): Unit =
+    Segments.vacuum(spark, path, keepVersions,
+      Seq("corpus", "centroids", IvfDeletesTable), CorpusSegDir,
       pinnedVersions)
-  }
 
   /** Serve query batches from a persisted [[saveIvfIndex]] index: no
     * retraining, no re-bucketing — the centroid reload is k rows, and
@@ -1282,7 +1174,7 @@ object Similarity {
     // time travel: a retained older version serves its own centroid
     // generation AND its own corpus — never a mix (one snapshot reads
     // both)
-    val snap = ivfSnapshot(spark, path, asOfVersion)
+    val snap = Segments.snapshot(spark, path, asOfVersion)
     val centroids = loadCentroids(spark, path, snap)
     require(centroids.nonEmpty, s"queryIvfIndex: empty index at $path")
     val c = readIvfCorpus(spark, path, snap)
@@ -1311,7 +1203,7 @@ object Similarity {
       path: String, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, predicate: org.apache.spark.sql.Column, nprobe: Int = 2,
       asOfVersion: Option[Long] = None): DataFrame = {
-    val snap = ivfSnapshot(spark, path, asOfVersion)
+    val snap = Segments.snapshot(spark, path, asOfVersion)
     val centroids = loadCentroids(spark, path, snap)
     require(centroids.nonEmpty,
       s"queryIvfIndexFiltered: empty index at $path")
@@ -1342,7 +1234,7 @@ object Similarity {
       path: String, newVecs: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nprobe: Int = 2): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1 (got $nprobe)")
-    val snap = ivfSnapshot(spark, path)
+    val snap = Segments.snapshot(spark, path)
     val centroids = loadCentroids(spark, path, snap)
     require(centroids.nonEmpty, s"ivfNearDupAdmit: empty index at $path")
     graft.functions.VectorExprs.register(spark)
@@ -1408,9 +1300,7 @@ object Similarity {
     require(metaCols.forall(c => !IvfCoreCols.contains(c)),
       s"metaCols may not collide with the layout's core columns " +
         s"($IvfCoreCols)")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    Segments.drop(spark, path)
     // coarse training and the m PQ codebook trainers are independent
     // driver-blocking Lloyd's runs — overlap them, and then overlap the
     // three table writes (each internally unchanged; values bit-equal)
@@ -1433,11 +1323,8 @@ object Similarity {
         .withColumn("batch", lit("base"))
         .write.mode("overwrite").partitionBy("batch", "bucket")
         .parquet(s"$path/corpus")))
-    graft.sinks.IndexManifest.commitMerge(fs, path)(_ =>
-      graft.sinks.IndexSnapshot(0L,
-        Map("corpus" -> Seq("base"), "centroids" -> Seq("base"),
-          "codebooks" -> Seq("base")),
-        Seq.empty))
+    Segments.create(spark, path, Map("corpus" -> Seq("base"),
+      "centroids" -> Seq("base"), "codebooks" -> Seq("base")))
   }
 
   /** Reload a [[saveIvfPqIndex]] index's codebooks for one snapshot:
@@ -1469,7 +1356,7 @@ object Similarity {
       path: String, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int = 2, asOfVersion: Option[Long] = None)
       : DataFrame = {
-    val snap = ivfSnapshot(spark, path, asOfVersion)
+    val snap = Segments.snapshot(spark, path, asOfVersion)
     val centroids = loadCentroids(spark, path, snap)
     val cbs = loadPqCodebooks(spark, path, snap)
     require(centroids.nonEmpty, s"queryIvfPqIndex: empty index at $path")
@@ -1494,7 +1381,7 @@ object Similarity {
       path: String, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, predicate: org.apache.spark.sql.Column, nprobe: Int = 2,
       asOfVersion: Option[Long] = None): DataFrame = {
-    val snap = ivfSnapshot(spark, path, asOfVersion)
+    val snap = Segments.snapshot(spark, path, asOfVersion)
     val centroids = loadCentroids(spark, path, snap)
     val cbs = loadPqCodebooks(spark, path, snap)
     require(centroids.nonEmpty,
@@ -1519,46 +1406,24 @@ object Similarity {
   def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, newVecs: DataFrame, idCol: String,
       vecCol: String, batchId: String): Unit = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        !batchId.startsWith("compact_v") &&
-        !batchId.startsWith("retrain_v") &&
-        !batchId.startsWith("delete_") &&
-        batchId.forall(c =>
-          c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      "batchId must be a filesystem-safe token != 'base' and outside " +
-        s"the reserved 'compact_v'/'retrain_v'/'delete_' prefixes (got '$batchId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no index manifest at $path (not a saveIvfPqIndex directory)"))
-    if (snap.applied.contains(batchId)) return
-    val centroids = loadCentroids(spark, path, snap)
-    val cbs = loadPqCodebooks(spark, path, snap)
-    require(centroids.nonEmpty,
-      s"appendToIvfPqIndex: empty index at $path")
-    // metadata columns are inferred from the stored schema (the
-    // self-describing-layout contract shared with appendToIvfIndex)
-    val meta = ivfMetaCols(spark, path, snap)
-    requireMeta(newVecs, meta, "appendToIvfPqIndex")
-    attachMeta(ivfPqEncode(newVecs, idCol, vecCol, centroids, cbs),
-        newVecs, idCol, meta)
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/corpus/batch=$batchId")
-    val sawGens = (snap.segs("centroids"), snap.segs("codebooks"))
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(batchId)) c // concurrent duplicate: no-op
-      else {
-        require((c.segs("centroids"), c.segs("codebooks")) == sawGens,
-          s"index generation changed during append of batch '$batchId'" +
-            " — the batch was encoded against superseded " +
-            "centroids/codebooks; rerun appendToIvfPqIndex")
-        c.copy(
-          tables = c.tables + ("corpus" ->
-            (c.segs("corpus").filterNot(_ == batchId) :+ batchId)),
-          applied = c.applied :+ batchId)
-      }
+    val snap = Segments.snapshot(spark, path)
+    Segments.append(spark, path, snap, batchId, batchId, Seq("corpus"),
+      Seq(Segments.unchanged("centroids", "codebooks")(
+        s"index generation changed during append of batch '$batchId'" +
+          " — the batch was encoded against superseded " +
+          "centroids/codebooks; rerun appendToIvfPqIndex"))) {
+      val centroids = loadCentroids(spark, path, snap)
+      val cbs = loadPqCodebooks(spark, path, snap)
+      require(centroids.nonEmpty,
+        s"appendToIvfPqIndex: empty index at $path")
+      // metadata columns are inferred from the stored schema (the
+      // self-describing-layout contract shared with appendToIvfIndex)
+      val meta = ivfMetaCols(spark, path, snap)
+      requireMeta(newVecs, meta, "appendToIvfPqIndex")
+      attachMeta(ivfPqEncode(newVecs, idCol, vecCol, centroids, cbs),
+          newVecs, idCol, meta)
+        .write.mode("overwrite").partitionBy("bucket")
+        .parquet(s"$path/corpus/batch=$batchId")
     }
   }
 
@@ -1585,9 +1450,7 @@ object Similarity {
       ks: Int = 8, pqIters: Int = 2,
       trainSample: Option[String] = None): Unit = {
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = ivfSnapshot(spark, path)
+    val snap = Segments.snapshot(spark, path)
     val seg = s"retrain_v${snap.version}_" +
       java.util.UUID.randomUUID().toString.take(8)
     // the stored layout's metadata list, read BEFORE the new segment
@@ -1616,8 +1479,7 @@ object Similarity {
         .partitionBy("bucket")
         .parquet(s"$path/corpus/batch=$seg")))
     val sawCorpus = snap.segs("corpus").toSet
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
+    Segments.commit(spark, path, snap) { c =>
       require(c.segs("corpus").toSet == sawCorpus,
         "a segment committed during IVFPQ retrain — this index stores " +
           "codes, so an unseen batch cannot be re-encoded against the " +
@@ -1640,60 +1502,33 @@ object Similarity {
     * raw vectors; values provably unchanged). */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no index manifest at $path (not a saveIvfPqIndex directory)"))
+    val snap = Segments.snapshot(spark, path)
     if (snap.segs("corpus").length <= 1 &&
       snap.segs(IvfDeletesTable).isEmpty) return
-    val seg = s"compact_v${snap.version + 1}_" +
-      java.util.UUID.randomUUID().toString.take(8)
     // metadata columns carried — folding must not strip the
     // pre-filter surface (the compactIvfIndex rule, codes edition)
-    readIvfCorpus(spark, path, snap)
-      .select(col("vec_id") +: col("codes") +:
-        col("bucket").cast(LongType).as("bucket") +:
-        ivfMetaCols(spark, path, snap).map(col): _*)
-      .repartition(col("bucket"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(s"$path/corpus/batch=$seg")
-    val folded = snap.segs("corpus").toSet
-    val sawGens = (snap.segs("centroids"), snap.segs("codebooks"))
-    val sawDeletes = snap.segs(IvfDeletesTable)
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      require((c.segs("centroids"), c.segs("codebooks")) == sawGens,
-        "index generation changed during compaction — discard and " +
-          "rerun compactIvfPqIndex if still needed")
-      require(folded.subsetOf(c.segs("corpus").toSet),
-        "a concurrent compaction already folded segments this " +
-          "compaction read — rerun compactIvfPqIndex against the new " +
-          "snapshot")
-      require(c.segs(IvfDeletesTable) == sawDeletes,
-        "a concurrent delete committed during compaction — its " +
-          "tombstones are scoped to segments this fold dropped; rerun " +
-          "compactIvfPqIndex against the new snapshot")
-      c.copy(tables = c.tables + ("corpus" ->
-        (seg +: c.segs("corpus").filterNot(folded.contains)))
-        + (IvfDeletesTable -> Seq.empty[String]))
+    Segments.fold(spark, path, snap, Seq("corpus"), "compactIvfPqIndex",
+      Some(IvfDeletesTable), Seq(Segments.unchanged("centroids",
+        "codebooks")("index generation changed during compaction — " +
+          "discard and rerun compactIvfPqIndex if still needed"))) { seg =>
+      readIvfCorpus(spark, path, snap)
+        .select(col("vec_id") +: col("codes") +:
+          col("bucket").cast(LongType).as("bucket") +:
+          ivfMetaCols(spark, path, snap).map(col): _*)
+        .repartition(col("bucket"))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .partitionBy("bucket")
+        .parquet(s"$path/corpus/batch=$seg")
     }
   }
 
   /** Retention GC for [[saveIvfPqIndex]] — [[vacuumIvfIndex]] with the
     * codebooks table included. */
   def vacuumIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, keepVersions: Int = 2): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    graft.sinks.IndexManifest.vacuum(fs, path, keepVersions,
-      Map("corpus" -> s"$path/corpus",
-        "centroids" -> s"$path/centroids",
-        "codebooks" -> s"$path/codebooks",
-        IvfDeletesTable -> s"$path/deletes"),
-      (t, s) => if (t == "corpus") s"batch=$s" else s)
-  }
+      path: String, keepVersions: Int = 2): Unit =
+    Segments.vacuum(spark, path, keepVersions,
+      Seq("corpus", "centroids", "codebooks", IvfDeletesTable),
+      CorpusSegDir)
 
   /** Reciprocal-rank fusion of two retriever result lists — the 2-list
     * form of [[rrfFuseN]] kept for the common exact+approximate pair. */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Concurrently
+import graft.sinks.Segments
 
 /** Text-analysis operators for a large-scale training-data pipeline
   * (SURVEY §7.5): token statistics, quality scoring, language-ID heuristic,
@@ -1049,8 +1050,8 @@ object TextAnalysis {
       path: String, newDocs: DataFrame, idCol: String, textCol: String,
       minCount: Long = 3, topN: Int = 30): DataFrame = {
     require(topN >= 1, s"topN must be >= 1 (got $topN)")
-    val snap = bm25Snapshot(spark, path)
-    val idx = readBm25Table(spark, path, snap, "termstats")
+    val snap = Segments.snapshot(spark, path)
+    val idx = Segments.scan(spark, path, snap, "termstats")
       .filter(length(col("term")) >= 1)
       .groupBy("term").agg(sum(col("df_t")).as("_ca"))
     val batch = newDocs
@@ -1225,15 +1226,10 @@ object TextAnalysis {
     * equality). */
   def saveBm25Index(df: DataFrame, idCol: String, textCol: String,
       path: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val spark = df.sparkSession
-    val fs = new Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    fs.delete(new Path(path), true) // overwrite semantics
+    Segments.drop(spark, path) // overwrite semantics
     writeBm25Segment(df, idCol, textCol, path, "base")
-    graft.sinks.IndexManifest.commitMerge(fs, path)(_ =>
-      graft.sinks.IndexSnapshot(0L,
-        Bm25Tables.map(t => t -> Seq("base")).toMap, Seq.empty))
+    Segments.create(spark, path, Bm25Tables.map(t => t -> Seq("base")).toMap)
   }
 
   private val Bm25Tables = Seq("postings", "termstats", "stats")
@@ -1313,27 +1309,6 @@ object TextAnalysis {
     } finally base.unpersist(blocking = false)
   }
 
-  /** Resolve the index's current snapshot and read one table as ONE
-    * multi-path scan over its manifest-listed segments. The segment
-    * list is frozen at this call — concurrent appends/compactions
-    * commit new manifests and never touch referenced directories, so
-    * the read is a consistent snapshot end to end.
-    *
-    * One scan, not a unionByName of per-segment scans: the union shape
-    * paid a driver file-listing per segment AND let the optimizer push
-    * joins below the union, duplicating every build side once per
-    * segment — the serve's tombstone anti-join was planned as one
-    * broadcast build (re-scanning every tombstone segment) per
-    * postings segment. Parquet maps columns by name per file, so the
-    * rows are identical. */
-  private def readBm25Table(spark: org.apache.spark.sql.SparkSession,
-      path: String, snap: graft.sinks.IndexSnapshot, table: String)
-      : DataFrame = {
-    val segs = snap.segs(table)
-    require(segs.nonEmpty, s"index at $path has no '$table' segments")
-    spark.read.parquet(segs.map(s => s"$path/$table/$s"): _*)
-  }
-
   /** The snapshot's tombstone set as one frame of (doc_id, seg) rows —
     * None when the index has no deletes (the common case; every reader
     * then skips the anti-join entirely). Tombstones are SCOPED to the
@@ -1343,15 +1318,13 @@ object TextAnalysis {
     * what makes [[reindexBm25Docs]] (delete + re-add) well-defined. */
   private def bm25Tombstones(spark: org.apache.spark.sql.SparkSession,
       path: String, snap: graft.sinks.IndexSnapshot): Option[DataFrame] = {
-    val del = snap.segs(Bm25DeletesTable)
-    if (del.isEmpty) None
-    else Some(spark.read.parquet(
-      del.map(s => s"$path/deletes/$s"): _*))
+    if (snap.segs(Bm25DeletesTable).isEmpty) None
+    else Some(Segments.scan(spark, path, snap, Bm25DeletesTable))
   }
 
   /** The postings scan with each row tagged by its segment name — the
     * shape the (doc_id, seg)-scoped tombstone anti-join keys on. ONE
-    * multi-path scan (see [[readBm25Table]]); the tag derives from the
+    * multi-path scan ([[Segments.scan]]); the tag derives from the
     * DETERMINISTIC `_metadata.file_path` column — input_file_name is
     * nondeterministic and would block predicate pushdown past this
     * projection, losing the term-IN pruning the serve relies on. The
@@ -1359,13 +1332,10 @@ object TextAnalysis {
     * named `postings`, so an index rooted under a directory of that
     * name cannot mistag. */
   private def taggedPostings(spark: org.apache.spark.sql.SparkSession,
-      path: String, snap: graft.sinks.IndexSnapshot): DataFrame = {
-    val segs = snap.segs("postings")
-    require(segs.nonEmpty, s"index at $path has no 'postings' segments")
-    spark.read.parquet(segs.map(s => s"$path/postings/$s"): _*)
+      path: String, snap: graft.sinks.IndexSnapshot): DataFrame =
+    Segments.scan(spark, path, snap, "postings")
       .withColumn("_seg", regexp_extract(col("_metadata.file_path"),
         ".*/postings/([^/]+)/", 1))
-  }
 
   /** LIVE postings WITH their `_seg` tag — the shape both the serve
     * path (which drops the tag) and the delete path (which scopes new
@@ -1383,35 +1353,19 @@ object TextAnalysis {
 
   /** The snapshot's LIVE postings: the segment union minus tombstoned
     * (doc_id, seg) rows. With no deletes this is exactly
-    * [[readBm25Table]]("postings") — zero added plan nodes; with
+    * the plain postings scan — zero added plan nodes; with
     * deletes, one anti-join against the (small) tombstone table, which
     * Catalyst pushes term filters through to the scans. */
   private def livePostings(spark: org.apache.spark.sql.SparkSession,
       path: String, snap: graft.sinks.IndexSnapshot): DataFrame =
     if (snap.segs(Bm25DeletesTable).isEmpty)
-      readBm25Table(spark, path, snap, "postings")
+      Segments.scan(spark, path, snap, "postings")
     else taggedLivePostings(spark, path, snap).drop("_seg")
-
-  private def bm25Snapshot(spark: org.apache.spark.sql.SparkSession,
-      path: String, asOfVersion: Option[Long] = None)
-      : graft.sinks.IndexSnapshot = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    asOfVersion match {
-      case Some(v) => graft.sinks.IndexManifest.at(fs, path, v)
-        .getOrElse(throw new IllegalArgumentException(
-          s"index version $v not found at $path (vacuumed past the " +
-            "retention window, or never committed)"))
-      case None => graft.sinks.IndexManifest.latest(fs, path)
-        .getOrElse(throw new IllegalArgumentException(
-          s"no index manifest at $path (not a saveBm25Index directory)"))
-    }
-  }
 
   /** The index's current manifest version — the handle [[queryBm25Index]]'s
     * `asOfVersion` time travel pins to. */
   def bm25IndexVersion(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = bm25Snapshot(spark, path).version
+      path: String): Long = Segments.snapshot(spark, path).version
 
   /** Serve a BM25 top-k from a persisted [[saveBm25Index]] index: the
     * scan reads ONLY the query terms' postings (term `isin` pushed to
@@ -1496,7 +1450,7 @@ object TextAnalysis {
       s"feedbackDocs must be >= 1 (got $feedbackDocs)")
     require(expandTerms >= 0,
       s"expandTerms must be >= 0 (got $expandTerms)")
-    val snap = bm25Snapshot(spark, path, asOfVersion)
+    val snap = Segments.snapshot(spark, path, asOfVersion)
     val qset = queryTerms.map(_.toLowerCase(java.util.Locale.ROOT))
     if (expandTerms == 0)
       return queryBm25IndexFromSnap(spark, path, snap, qset, k, k1, b,
@@ -1528,7 +1482,7 @@ object TextAnalysis {
     // time travel: any retained manifest version serves in full —
     // maintenance writes new segments and deletes nothing until vacuum
     queryBm25IndexFromSnap(spark, path,
-      bm25Snapshot(spark, path, asOfVersion), queryTerms, k, k1, b,
+      Segments.snapshot(spark, path, asOfVersion), queryTerms, k, k1, b,
       allowed, after)
 
   /** Snapshot-taking serve core: multi-read ops (query expansion's
@@ -1566,10 +1520,10 @@ object TextAnalysis {
     }
     // per-segment df contributions sum to the corpus df_t; the filter
     // pushes below the union into every segment scan
-    val termstats = readBm25Table(spark, path, snap, "termstats")
+    val termstats = Segments.scan(spark, path, snap, "termstats")
       .filter(col("term").isin(qset: _*))
       .groupBy("term").agg(sum(col("df_t")).as("df_t"))
-    val stats = readBm25Table(spark, path, snap, "stats")
+    val stats = Segments.scan(spark, path, snap, "stats")
       .agg(sum(col("n_docs")).as("_n"),
         sum(col("total_len")).as("_len"))
     val idf = (col("_n") - col("df_t") + lit(0.5)) /
@@ -1643,13 +1597,13 @@ object TextAnalysis {
     require(termList.forall(t => t != null && t.nonEmpty),
       "query terms must be non-null, non-empty strings " +
         "(empty/whitespace-only docs post an '' token row)")
-    val snap = bm25Snapshot(spark, path, asOfVersion)
+    val snap = Segments.snapshot(spark, path, asOfVersion)
     val postings = livePostings(spark, path, snap)
       .filter(col("term").isin(termList: _*))
-    val termstats = readBm25Table(spark, path, snap, "termstats")
+    val termstats = Segments.scan(spark, path, snap, "termstats")
       .filter(col("term").isin(termList: _*))
       .groupBy("term").agg(sum(col("df_t")).as("df_t"))
-    val stats = readBm25Table(spark, path, snap, "stats")
+    val stats = Segments.scan(spark, path, snap, "stats")
       .agg(sum(col("n_docs")).as("_n"),
         sum(col("total_len")).as("_len"))
     val idf = (col("_n") - col("df_t") + lit(0.5)) /
@@ -1731,34 +1685,11 @@ object TextAnalysis {
   def appendToBm25Index(spark: org.apache.spark.sql.SparkSession,
       path: String, newDocs: DataFrame, idCol: String, textCol: String,
       batchId: String, knownRows: Option[Long] = None): Unit = {
-    import org.apache.hadoop.fs.Path
-    require(batchId.nonEmpty && batchId.forall(c =>
-        c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      s"batchId must be a filesystem-safe token (got '$batchId')")
-    require(batchId != "base" && !batchId.startsWith("compact_v") &&
-        !batchId.startsWith("retrain_v") && !batchId.startsWith("delete_"),
-      s"batchId '$batchId' collides with reserved segment names " +
-        "('base', 'compact_v*', 'retrain_v*') or the delete-marker " +
-        "namespace ('delete_*' in the applied list)")
-    val fs = new Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no index manifest at $path (not a saveBm25Index directory)"))
-    if (snap.applied.contains(batchId)) return
     val seg = s"delta_$batchId"
-    writeBm25Segment(newDocs, idCol, textCol, path, seg,
-      tiny = knownRows.exists(_ <= TinyAppendRows))
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(batchId)) c // concurrent duplicate: no-op
-      else c.copy(
-        // ++ over c.tables: the merge must carry tables it doesn't
-        // touch (the tombstone table) — rebuilding the map from
-        // Bm25Tables alone would silently drop live deletes
-        tables = c.tables ++ Bm25Tables.map(t =>
-          t -> (c.segs(t).filterNot(_ == seg) :+ seg)),
-        applied = c.applied :+ batchId)
+    Segments.append(spark, path, Segments.snapshot(spark, path), batchId,
+        seg, Bm25Tables) {
+      writeBm25Segment(newDocs, idCol, textCol, path, seg,
+        tiny = knownRows.exists(_ <= TinyAppendRows))
     }
   }
 
@@ -1797,14 +1728,9 @@ object TextAnalysis {
     * double-count — and the rerun recomputes against the winner. */
   def deleteFromBm25Index(spark: org.apache.spark.sql.SparkSession,
       path: String, docIds: DataFrame, idCol: String,
-      deleteId: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no index manifest at $path (not a saveBm25Index directory)"))
-    deleteFromBm25IndexFrom(spark, path, docIds, idCol, deleteId, snap)
-  }
+      deleteId: String): Unit =
+    deleteFromBm25IndexFrom(spark, path, docIds, idCol, deleteId,
+      Segments.snapshot(spark, path))
 
   /** Snapshot-taking core of [[deleteFromBm25Index]] — `private[ext]`
     * so the concurrency specs can deterministically replay the
@@ -1813,76 +1739,56 @@ object TextAnalysis {
       spark: org.apache.spark.sql.SparkSession, path: String,
       docIds: DataFrame, idCol: String, deleteId: String,
       snap: graft.sinks.IndexSnapshot): Unit = {
-    require(deleteId.nonEmpty && deleteId.forall(c =>
-        c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      s"deleteId must be a filesystem-safe token (got '$deleteId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val marker = s"delete_$deleteId"
-    if (snap.applied.contains(marker)) return
     val seg = s"del_$deleteId"
-    val ids = docIds.select(col(idCol).cast(LongType).as("doc_id"))
-      .distinct()
-    // locate the doomed rows in the LIVE postings (already-tombstoned
-    // rows excluded, so overlapping delete sets can never double-count
-    // a correction); _seg rides through as the tombstone scope
-    val doomed = taggedLivePostings(spark, path, snap)
-      .join(ids, Seq("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // the three writes run CONCURRENTLY over the shared cached
-      // `doomed` (as in writeBm25Segment): each is a
-      // small job whose fixed per-job overhead, not data, is the cost
-      Concurrently.all(Seq(
-        () => {
-          doomed.select(col("doc_id"), col("_seg").as("seg")).distinct()
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$path/deletes/$seg")
-        },
-        // negative corrections: every statistic the serve path sums
-        // nets to the live corpus's exact value
-        () => {
-          doomed.groupBy("term")
-            .agg((lit(0L) - count(lit(1))).as("df_t"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$path/termstats/$seg")
-        },
-        () => {
-          doomed.agg(
-              (lit(0L) - countDistinct(col("doc_id"))).as("n_docs"),
-              (lit(0L) - coalesce(sum(col("tf")), lit(0L)))
-                .as("total_len"))
-            .coalesce(1)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$path/stats/$seg")
-        }))
-    } finally doomed.unpersist(blocking = false)
-    val sawPostings = snap.segs("postings").toSet
-    val sawDeletes = snap.segs(Bm25DeletesTable)
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(marker)) c // concurrent duplicate: no-op
-      else {
-        require(sawPostings.subsetOf(c.segs("postings").toSet),
+    Segments.delete(spark, path, snap, deleteId, seg,
+      Seq("termstats", "stats", Bm25DeletesTable), Seq(
+        Segments.kept("postings")(
           "a concurrent compaction folded postings segments this " +
             "delete scanned — its tombstone scopes reference dropped " +
             "segments; rerun deleteFromBm25Index against the new " +
-            "snapshot (appends compose; compactions serialize)")
-        require(c.segs(Bm25DeletesTable) == sawDeletes,
+            "snapshot (appends compose; compactions serialize)"),
+        Segments.unchanged(Bm25DeletesTable)(
           "a concurrent delete committed — corrections were computed " +
             "against a superseded tombstone set and overlapping ids " +
-            "would double-count; rerun deleteFromBm25Index")
-        c.copy(
-          tables = c.tables +
-            ("termstats" ->
-              (c.segs("termstats").filterNot(_ == seg) :+ seg)) +
-            ("stats" -> (c.segs("stats").filterNot(_ == seg) :+ seg)) +
-            (Bm25DeletesTable ->
-              (c.segs(Bm25DeletesTable).filterNot(_ == seg) :+ seg)),
-          applied = c.applied :+ marker)
+            "would double-count; rerun deleteFromBm25Index"))) {
+      val ids = docIds.select(col(idCol).cast(LongType).as("doc_id"))
+        .distinct()
+      // locate the doomed rows in the LIVE postings (already-tombstoned
+      // rows excluded, so overlapping delete sets can never double-count
+      // a correction); _seg rides through as the tombstone scope
+      val doomed = taggedLivePostings(spark, path, snap)
+        .join(ids, Seq("doc_id"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // the three writes run CONCURRENTLY over the shared cached
+        // `doomed` (as in writeBm25Segment): each is a
+        // small job whose fixed per-job overhead, not data, is the cost
+        Concurrently.all(Seq(
+          () => {
+            doomed.select(col("doc_id"), col("_seg").as("seg")).distinct()
+              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+              .parquet(s"$path/deletes/$seg")
+          },
+          // negative corrections: every statistic the serve path sums
+          // nets to the live corpus's exact value
+          () => {
+            doomed.groupBy("term")
+              .agg((lit(0L) - count(lit(1))).as("df_t"))
+              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+              .parquet(s"$path/termstats/$seg")
+          },
+          () => {
+            doomed.agg(
+                (lit(0L) - countDistinct(col("doc_id"))).as("n_docs"),
+                (lit(0L) - coalesce(sum(col("tf")), lit(0L)))
+                  .as("total_len"))
+              .coalesce(1)
+              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+              .parquet(s"$path/stats/$seg")
+          }))
+      } finally doomed.unpersist(blocking = false)
       }
     }
-  }
 
   /** REINDEX (upsert) documents in a persisted [[saveBm25Index]] index
     * — the MERGE of the index lifecycle, and the reason tombstones are
@@ -1927,14 +1833,8 @@ object TextAnalysis {
     * `applied` batch record is carried, so late retries of folded
     * batches still no-op. */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no index manifest at $path (not a saveBm25Index directory)"))
-    compactBm25IndexFrom(spark, path, snap)
-  }
+      path: String): Unit =
+    compactBm25IndexFrom(spark, path, Segments.snapshot(spark, path))
 
   /** Snapshot-taking core of [[compactBm25Index]] — `private[ext]` so
     * the concurrency specs can deterministically replay the
@@ -1942,66 +1842,43 @@ object TextAnalysis {
   private[ext] def compactBm25IndexFrom(
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
     if (Bm25Tables.forall(t => snap.segs(t).length <= 1) &&
       snap.segs(Bm25DeletesTable).isEmpty) return
-    val seg = s"compact_v${snap.version + 1}_" +
-      java.util.UUID.randomUUID().toString.take(8)
     // physical removal of tombstoned docs happens HERE: the fold reads
     // live postings only, the summed termstats net out the deletes'
     // negative corrections (terms with no live postings drop), and the
     // tombstone table empties in the same commit. The three table
     // folds are independent reads — they run CONCURRENTLY (as in
     // writeBm25Segment), so the fold's wall cost is the postings fold,
-    // not the sum of three jobs.
-    Concurrently.all(Seq(
-      () => {
-        livePostings(spark, path, snap)
-          .repartition(col("term"))
-          .sortWithinPartitions("term", "doc_id")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$path/postings/$seg")
-      },
-      () => {
-        readBm25Table(spark, path, snap, "termstats")
-          .groupBy("term").agg(sum(col("df_t")).as("df_t"))
-          .filter(col("df_t") > 0)
-          .repartition(col("term")).sortWithinPartitions("term")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$path/termstats/$seg")
-      },
-      () => {
-        readBm25Table(spark, path, snap, "stats")
-          .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
-            coalesce(sum(col("total_len")), lit(0L)).as("total_len"))
-          .coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$path/stats/$seg")
-      }))
-    val folded = Bm25Tables.map(t => t -> snap.segs(t).toSet).toMap
-    val sawDeletes = snap.segs(Bm25DeletesTable)
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      // a concurrent compaction that already folded (some of) the same
-      // segments holds their rows in ITS compacted segment — committing
-      // ours too would double-count every folded posting/statistic
-      Bm25Tables.foreach(t => require(
-        folded(t).subsetOf(c.segs(t).toSet),
-        "a concurrent compaction already folded segments this " +
-          "compaction read — committing both copies would double-count; " +
-          "rerun compactBm25Index against the new snapshot"))
-      // a delete that committed mid-fold scoped its tombstones to
-      // postings segments this compaction just dropped — carrying them
-      // would leave the tombstones dangling and the docs resurrected
-      require(c.segs(Bm25DeletesTable) == sawDeletes,
-        "a concurrent delete committed during compaction — its " +
-          "tombstones are scoped to segments this fold dropped; rerun " +
-          "compactBm25Index against the new snapshot")
-      c.copy(tables = c.tables ++ Bm25Tables.map(t =>
-        // (segments added since we started) survive; folded ones drop
-        t -> (seg +: c.segs(t).filterNot(folded(t).contains)))
-        + (Bm25DeletesTable -> Seq.empty[String]))
+    // not the sum of three jobs. A delete that commits mid-fold scoped
+    // its tombstones to postings segments this fold drops, so the
+    // commit aborts on a changed tombstone set.
+    Segments.fold(spark, path, snap, Bm25Tables, "compactBm25Index",
+        Some(Bm25DeletesTable)) { seg =>
+      Concurrently.all(Seq(
+        () => {
+          livePostings(spark, path, snap)
+            .repartition(col("term"))
+            .sortWithinPartitions("term", "doc_id")
+            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+            .parquet(s"$path/postings/$seg")
+        },
+        () => {
+          Segments.scan(spark, path, snap, "termstats")
+            .groupBy("term").agg(sum(col("df_t")).as("df_t"))
+            .filter(col("df_t") > 0)
+            .repartition(col("term")).sortWithinPartitions("term")
+            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+            .parquet(s"$path/termstats/$seg")
+        },
+        () => {
+          Segments.scan(spark, path, snap, "stats")
+            .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
+              coalesce(sum(col("total_len")), lit(0L)).as("total_len"))
+            .coalesce(1)
+            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+            .parquet(s"$path/stats/$seg")
+        }))
     }
   }
 
@@ -2023,11 +1900,11 @@ object TextAnalysis {
     * ∝ vocabulary, tombstones ∝ deletes — never the corpus text. */
   def bm25IndexStats(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    val snap = bm25Snapshot(spark, path)
-    val st = readBm25Table(spark, path, snap, "stats")
+    val snap = Segments.snapshot(spark, path)
+    val st = Segments.scan(spark, path, snap, "stats")
       .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
         coalesce(sum(col("total_len")), lit(0L)).as("total_len"))
-    val vocab = readBm25Table(spark, path, snap, "termstats")
+    val vocab = Segments.scan(spark, path, snap, "termstats")
       .groupBy("term").agg(sum(col("df_t")).as("_d"))
       .filter(col("_d") > 0)
       .agg(count(lit(1)).as("vocab_size"))
@@ -2054,24 +1931,16 @@ object TextAnalysis {
     * Defaults to the newest snapshot. */
   def cloneBm25Index(spark: org.apache.spark.sql.SparkSession,
       path: String, dstPath: String,
-      asOfVersion: Option[Long] = None): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    graft.sinks.IndexManifest.cloneSnapshot(fs,
-      bm25Snapshot(spark, path, asOfVersion), dstPath,
-      (Bm25Tables :+ Bm25DeletesTable)
-        .map(t => t -> (s"$path/$t", s"$dstPath/$t")).toMap)
-  }
+      asOfVersion: Option[Long] = None): Unit =
+    Segments.cloneTo(spark, path,
+      Segments.snapshot(spark, path, asOfVersion), dstPath,
+      Bm25Tables :+ Bm25DeletesTable)
 
   def vacuumBm25Index(spark: org.apache.spark.sql.SparkSession,
       path: String, keepVersions: Int = 2,
-      pinnedVersions: Set[Long] = Set.empty): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    graft.sinks.IndexManifest.vacuum(fs, path, keepVersions,
-      (Bm25Tables :+ Bm25DeletesTable).map(t => t -> s"$path/$t").toMap,
-      pinnedVersions = pinnedVersions)
-  }
+      pinnedVersions: Set[Long] = Set.empty): Unit =
+    Segments.vacuum(spark, path, keepVersions,
+      Bm25Tables :+ Bm25DeletesTable, pinnedVersions = pinnedVersions)
 
   // ---- byte-pair-encoding vocabulary learning ------------------------
 
@@ -2402,11 +2271,8 @@ object TextAnalysis {
   def saveUnigramVocab(vocab: DataFrame, path: String): Unit = {
     vocab.select("piece", "n_uses", "cost_micronats").coalesce(1)
       .write.mode("errorifexists").parquet(s"$path/vocab/base")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      vocab.sparkSession.sessionState.newHadoopConf())
-    graft.sinks.IndexManifest.commitMerge(fs, path)(_ =>
-      graft.sinks.IndexSnapshot(0L, Map("vocab" -> Seq("base")),
-        Seq("base")))
+    Segments.create(vocab.sparkSession, path, Map("vocab" -> Seq("base")),
+      Seq("base"))
   }
 
   /** Retrain a persisted tokenizer on a new corpus: the new vocabulary
@@ -2416,19 +2282,12 @@ object TextAnalysis {
   def retrainUnigramVocab(spark: org.apache.spark.sql.SparkSession,
       path: String, docs: DataFrame, textCol: String,
       seedMulti: Int = 150, vocabMulti: Int = 60): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no tokenizer manifest at $path (not a saveUnigramVocab " +
-          "directory)"))
+    val snap = Segments.snapshot(spark, path)
     val seg = s"gen_v${snap.version + 1}"
     unigramLearn(docs, textCol, seedMulti, vocabMulti).coalesce(1)
       .write.mode("overwrite").parquet(s"$path/vocab/$seg")
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      c.copy(tables = c.tables + ("vocab" -> Seq(seg)))
-    }
+    Segments.commit(spark, path, snap)(c =>
+      c.copy(tables = c.tables + ("vocab" -> Seq(seg))))
   }
 
   /** Load one tokenizer generation as the (piece, cost) list
@@ -2436,23 +2295,11 @@ object TextAnalysis {
     * tokenizer file), ordered by piece for determinism. */
   def loadUnigramVocab(spark: org.apache.spark.sql.SparkSession,
       path: String, asOfVersion: Option[Long] = None)
-      : Seq[(String, Long)] = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = asOfVersion
-      .map(v => graft.sinks.IndexManifest.at(fs, path, v).getOrElse(
-        throw new IllegalArgumentException(
-          s"no tokenizer manifest v$v at $path (vacuumed or never " +
-            "existed)")))
-      .getOrElse(graft.sinks.IndexManifest.latest(fs, path).getOrElse(
-        throw new IllegalArgumentException(
-          s"no tokenizer manifest at $path")))
-    val segs = snap.segs("vocab")
-    require(segs.nonEmpty, s"snapshot v${snap.version} has no vocab")
-    spark.read.parquet(segs.map(seg => s"$path/vocab/$seg"): _*)
+      : Seq[(String, Long)] =
+    Segments.scan(spark, path, Segments.snapshot(spark, path, asOfVersion),
+        "vocab")
       .select("piece", "cost_micronats").orderBy("piece")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-  }
 
   /** Apply a learned unigram vocabulary ([[unigramLearn]] output rows
     * as (piece, cost_micronats)) to a document frame: tokenize exactly

@@ -15,9 +15,10 @@ case class IndexSnapshot(version: Long,
     tables.getOrElse(table, Seq.empty)
 }
 
-/** Versioned manifest commit protocol for the persisted retrieval
-  * indexes ([[graft.ext.TextAnalysis.saveBm25Index]],
-  * [[graft.ext.Similarity.saveIvfIndex]]) — the serve-while-ingest
+/** Versioned manifest commit protocol for every persisted index,
+  * ledger and sketch — families reach it only through [[Segments]],
+  * which owns the family-facing rules (snapshot resolve, table scan,
+  * segment ids, idempotent and fold commits). The serve-while-ingest
   * fix for the directory-listing race: readers resolve ONE manifest
   * file (`manifest_v<N>.json`, newest parseable wins) into a frozen
   * segment list, so an append or compaction that lands mid-query can

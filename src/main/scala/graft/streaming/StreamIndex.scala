@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.Concurrently
 import graft.ext.{Similarity, TextAnalysis}
-import graft.sinks.IndexManifest
+import graft.sinks.Segments
 
 /** Streaming INDEX maintenance — the serving-side twin of the table
   * loops ([[EventStream.e2LoopWriter]] keeps a TABLE current;
@@ -81,15 +81,6 @@ object StreamIndex {
       java.lang.Long.toHexString(r.getLong(2)), r.getLong(0))
   }
 
-  /** Live segment count of `table` in the index's newest snapshot. */
-  private def segCount(spark: SparkSession, indexPath: String,
-      table: String): Int = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    IndexManifest.latest(fs, indexPath).map(_.segs(table).length)
-      .getOrElse(0)
-  }
-
   def bm25AppendWriter(spark: SparkSession, docsDir: String,
       schema: StructType, indexPath: String, idCol: String,
       textCol: String, compactEvery: Int = 0)
@@ -116,7 +107,8 @@ object StreamIndex {
             textCol, batchId = bid, knownRows = Some(rows))
         } finally b.unpersist(blocking = false)
         if (compactEvery > 0 &&
-          segCount(s, indexPath, "postings") > compactEvery) {
+          Segments.snapshot(s, indexPath).segs("postings").length >
+            compactEvery) {
           TextAnalysis.compactBm25Index(s, indexPath)
           TextAnalysis.vacuumBm25Index(s, indexPath, keepVersions = 2)
         }
@@ -196,11 +188,7 @@ object StreamIndex {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val (bid, _) = contentBatchId(b, "doc_id")
-          val fs = new org.apache.hadoop.fs.Path(ledgerPath)
-            .getFileSystem(s.sessionState.newHadoopConf())
-          val applied = IndexManifest.latest(fs, ledgerPath)
-            .exists(_.applied.contains(bid))
-          if (!applied) {
+          if (!Segments.applied(s, ledgerPath, bid)) {
             val admitted = graft.ext.DedupOps.simhashLedgerAdmit(s,
                 ledgerPath, b, maxHamming, probeBits)
               .persist(
@@ -255,11 +243,7 @@ object StreamIndex {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val (bid, _) = contentBatchId(b, idCol)
-          val fs = new org.apache.hadoop.fs.Path(ledgerPath)
-            .getFileSystem(s.sessionState.newHadoopConf())
-          val applied = IndexManifest.latest(fs, ledgerPath)
-            .exists(_.applied.contains(bid))
-          if (!applied) {
+          if (!Segments.applied(s, ledgerPath, bid)) {
             val admitted = graft.ext.DedupOps.containmentAdmit(s,
                 ledgerPath, b, idCol, textCol, threshold)
               .persist(
@@ -302,11 +286,7 @@ object StreamIndex {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val (bid, _) = contentBatchId(b, idCol)
-          val fs = new org.apache.hadoop.fs.Path(ledgerPath)
-            .getFileSystem(s.sessionState.newHadoopConf())
-          val applied = IndexManifest.latest(fs, ledgerPath)
-            .exists(_.applied.contains(bid))
-          if (!applied) {
+          if (!Segments.applied(s, ledgerPath, bid)) {
             val admitted = graft.ext.DedupOps.containmentSetAdmit(s,
                 ledgerPath, b, idCol, setCol, threshold)
               .persist(
@@ -353,11 +333,7 @@ object StreamIndex {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val (bid, _) = contentBatchId(b, idCol)
-          val fs = new org.apache.hadoop.fs.Path(ledgerPath)
-            .getFileSystem(s.sessionState.newHadoopConf())
-          val applied = IndexManifest.latest(fs, ledgerPath)
-            .exists(_.applied.contains(bid))
-          if (!applied) {
+          if (!Segments.applied(s, ledgerPath, bid)) {
             graft.ext.DedupOps.chunkDedupIncremental(s, ledgerPath,
                 b, idCol, textCol)
               .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -395,11 +371,7 @@ object StreamIndex {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val (bid, _) = contentBatchId(b, idCol)
-          val fs = new org.apache.hadoop.fs.Path(ledgerPath)
-            .getFileSystem(s.sessionState.newHadoopConf())
-          val applied = IndexManifest.latest(fs, ledgerPath)
-            .exists(_.applied.contains(bid))
-          if (!applied) {
+          if (!Segments.applied(s, ledgerPath, bid)) {
             graft.ext.DedupOps.cdcDedupIncremental(s, ledgerPath,
                 b, idCol, textCol)
               .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -436,11 +408,7 @@ object StreamIndex {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val (bid, _) = contentBatchId(b, idCol)
-          val fs = new org.apache.hadoop.fs.Path(ledgerPath)
-            .getFileSystem(s.sessionState.newHadoopConf())
-          val applied = IndexManifest.latest(fs, ledgerPath)
-            .exists(_.applied.contains(bid))
-          if (!applied) {
+          if (!Segments.applied(s, ledgerPath, bid)) {
             val admitted = graft.ext.DedupOps.hostBudgetAdmit(s,
                 ledgerPath, b, idCol, hostCol)
               .persist(
@@ -485,11 +453,7 @@ object StreamIndex {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val (bid, _) = contentBatchId(b, valueCol)
-          val fs = new org.apache.hadoop.fs.Path(sketchPath)
-            .getFileSystem(s.sessionState.newHadoopConf())
-          val applied = IndexManifest.latest(fs, sketchPath)
-            .exists(_.applied.contains(bid))
-          if (!applied) {
+          if (!Segments.applied(s, sketchPath, bid)) {
             val (state, width) =
               graft.ext.Corpus.histSketchState(s, sketchPath)
             graft.ext.Corpus.histDriftFromCounters(
@@ -532,11 +496,7 @@ object StreamIndex {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val (bid, _) = contentBatchId(b, idCol)
-          val fs = new org.apache.hadoop.fs.Path(ledgerPath)
-            .getFileSystem(s.sessionState.newHadoopConf())
-          val applied = IndexManifest.latest(fs, ledgerPath)
-            .exists(_.applied.contains(bid))
-          if (!applied) {
+          if (!Segments.applied(s, ledgerPath, bid)) {
             // the sig-reusing admit: the ledger append below lands the
             // signatures the admission already computed instead of
             // tokenizing the admitted docs a second time
@@ -593,11 +553,7 @@ object StreamIndex {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val (bid, _) = contentBatchId(b, idCol)
-          val fs = new org.apache.hadoop.fs.Path(sketchPath)
-            .getFileSystem(s.sessionState.newHadoopConf())
-          val applied = IndexManifest.latest(fs, sketchPath)
-            .exists(_.applied.contains(bid))
-          if (!applied) {
+          if (!Segments.applied(s, sketchPath, bid)) {
             val (state, k, groupCol) =
               graft.ext.Corpus.groupedKllSketchState(s, sketchPath)
             graft.ext.Corpus.kllKsDriftByGroupFromItems(
@@ -818,7 +774,8 @@ object StreamIndex {
               s"reidx_$bid", knownRows = Some(nUp))
         } finally b.unpersist(blocking = false)
         if (compactEvery > 0 &&
-          segCount(s, indexPath, "postings") > compactEvery) {
+          Segments.snapshot(s, indexPath).segs("postings").length >
+            compactEvery) {
           TextAnalysis.compactBm25Index(s, indexPath)
           TextAnalysis.vacuumBm25Index(s, indexPath, keepVersions = 2)
         }
@@ -895,7 +852,8 @@ object StreamIndex {
               s"reidx_$bid")
         } finally b.unpersist(blocking = false)
         if (compactEvery > 0 &&
-          segCount(s, indexPath, "corpus") > compactEvery) {
+          Segments.snapshot(s, indexPath).segs("corpus").length >
+            compactEvery) {
           Similarity.compactIvfIndex(s, indexPath)
           Similarity.vacuumIvfIndex(s, indexPath, keepVersions = 2)
         }
@@ -1001,7 +959,8 @@ object StreamIndex {
             batchId = contentBatchId(b, idCol)._1)
         } finally b.unpersist(blocking = false)
         if (compactEvery > 0 &&
-          segCount(s, indexPath, "corpus") > compactEvery) {
+          Segments.snapshot(s, indexPath).segs("corpus").length >
+            compactEvery) {
           Similarity.compactIvfPqIndex(s, indexPath)
           Similarity.vacuumIvfPqIndex(s, indexPath, keepVersions = 2)
         }
@@ -1027,7 +986,8 @@ object StreamIndex {
             batchId = contentBatchId(b, idCol)._1)
         } finally b.unpersist(blocking = false)
         if (compactEvery > 0 &&
-          segCount(s, indexPath, "corpus") > compactEvery) {
+          Segments.snapshot(s, indexPath).segs("corpus").length >
+            compactEvery) {
           Similarity.compactIvfIndex(s, indexPath)
           Similarity.vacuumIvfIndex(s, indexPath, keepVersions = 2)
         }

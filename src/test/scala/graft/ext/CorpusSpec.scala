@@ -805,6 +805,11 @@ class CorpusSpec extends SparkSpec {
       row(Corpus.hllDistinct(a, col("id"))))
     intercept[IllegalArgumentException](
       Corpus.queryHllSketch(spark, idx, asOfVersion = Some(99L)))
+    // batchIds must be filesystem-safe (the histogram sketch's rule)
+    intercept[IllegalArgumentException](Corpus.appendToHllSketch(
+      spark, idx, b, col("id"), "b2/evil"))
+    intercept[IllegalArgumentException](Corpus.appendToHllSketch(
+      spark, idx, b, col("id"), "d2 evil"))
   }
 
   test("persisted CMS sketch (x188): save+append == one-shot " +
@@ -850,6 +855,15 @@ class CorpusSpec extends SparkSpec {
       afterDel)
     intercept[IllegalArgumentException](Corpus.appendToCmsSketch(
       spark, idx, b, col("k"), "delete_d1"))
+    // batchIds must be filesystem-safe (the histogram sketch's rule)
+    intercept[IllegalArgumentException](Corpus.appendToCmsSketch(
+      spark, idx, b, col("k"), "b2/evil"))
+    intercept[IllegalArgumentException](Corpus.appendToCmsSketch(
+      spark, idx, b, col("k"), "d2 evil"))
+    intercept[IllegalArgumentException](Corpus.removeFromCmsSketch(
+      spark, idx, b, col("k"), "b2/evil"))
+    intercept[IllegalArgumentException](Corpus.removeFromCmsSketch(
+      spark, idx, b, col("k"), "d2 evil"))
   }
 
   test("histQuantiles (x191): every estimate BRACKETS the exact order " +

@@ -8,7 +8,7 @@ import org.scalacheck.Prop.forAll
 
 import graft.model.Contracts
 import graft.ops.{Actions, Conform, Metrics}
-import graft.sinks.Upsert
+import graft.sinks.{Segments, Upsert}
 
 /** Property-based invariants (SURVEY §5.3): upsert idempotence, pivot
   * round-trip, metric invariants, conformance totality. Kept at small
@@ -500,5 +500,58 @@ object EngineProps extends Properties("graft") {
             .forall(_._4 == 1.0)
         }
       }
+    }
+
+  /** Batch ids drawn from a small pool (so replays happen), each op
+    * either from the newest snapshot or from the one before the
+    * previous op (a stale snapshot that may predate its own id). */
+  private val genSegmentOps: Gen[List[(Int, Boolean)]] =
+    Gen.listOfN(5, Gen.zip(Gen.choose(0, 3), Gen.oneOf(false, true)))
+
+  property("Segments: appends, replays and stale-snapshot appends land " +
+      "each batch once; a fold carries a racing append and a second " +
+      "fold of the same inputs is rejected") =
+    forAll(genSegmentOps) { ops =>
+      import spark.implicits._
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_prop_seg").resolve("idx").toString
+      def rows(b: Int): Seq[Int] = (0 until 3).map(b * 10 + _)
+      def land(seg: String, vs: Seq[Int]): Unit =
+        vs.toDF("v").coalesce(1).write.mode("overwrite")
+          .parquet(s"$root/t/$seg")
+      def scanned(s: graft.sinks.IndexSnapshot): Seq[Int] =
+        Segments.scan(spark, root, s, "t").as[Int].collect().sorted.toSeq
+      land("base", Seq(-1))
+      Segments.create(spark, root, Map("t" -> Seq("base")))
+      var prev = Segments.snapshot(spark, root)
+      ops.foreach { case (b, stale) =>
+        val cur = Segments.snapshot(spark, root)
+        val id = s"b$b"
+        Segments.append(spark, root, if (stale) prev else cur, id,
+          s"delta_$id", Seq("t"))(land(s"delta_$id", rows(b)))
+        prev = cur
+      }
+      val firsts = ops.map(_._1).distinct
+      val ids = firsts.map(b => s"b$b")
+      val s1 = Segments.snapshot(spark, root)
+      val landedOnce = s1.applied == ids &&
+        s1.segs("t") == "base" +: ids.map(id => s"delta_$id") &&
+        scanned(s1) == (-1 +: firsts.flatMap(rows)).sorted
+      // an append commits while the fold over s1 is writing: the fold's
+      // commit must carry it; a second fold of s1's segments must abort
+      Segments.fold(spark, root, s1, Seq("t"), "fold") { seg =>
+        Segments.append(spark, root, s1, "late", "delta_late",
+          Seq("t"))(land("delta_late", rows(9)))
+        land(seg, scanned(s1))
+      }
+      val s2 = Segments.snapshot(spark, root)
+      val carried = s2.segs("t").length == 2 &&
+        s2.segs("t").last == "delta_late" &&
+        s2.applied == ids :+ "late" &&
+        scanned(s2) == (scanned(s1) ++ rows(9)).sorted
+      val refolded = scala.util.Try(Segments.fold(spark, root, s1,
+        Seq("t"), "fold")(seg => land(seg, scanned(s1))))
+      landedOnce && carried && refolded.isFailure &&
+        Segments.snapshot(spark, root).version == s2.version
     }
 }
