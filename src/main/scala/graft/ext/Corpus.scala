@@ -2211,8 +2211,8 @@ object Corpus {
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot): Unit = {
     val (k, _, _) = groupedKllParams(spark, path, snap)
+    if (snap.segs("items").length == 1) return
     val items = Segments.scan(spark, path, snap, "items")
-    if (snap.segs("items").length <= 1) return
     import spark.implicits._
     val compacted = items.select(col("g"), col("level"), col("v"))
       .as[(String, Int, Double)]
