@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, forcing full materialization through the noop sink
@@ -34,8 +35,9 @@ import org.apache.spark.sql.SparkSession
   * Each query also carries a CLASS tag so totals decompose:
   * `serve` (pure read/compute), `lifecycle` (the gate builds or
   * mutates persisted state — index build/append/compact/retrain, table
-  * writes — as the dominant measured cost), `stream` (drives a
-  * Structured Streaming query; trigger wall-clock included). A serve
+  * writes — as the dominant measured cost), `stream` (started a
+  * Structured Streaming query during a measured run, as counted by a
+  * StreamingQueryListener; trigger wall-clock included). A serve
   * regression must not hide under lifecycle wall — read the subtotals.
   *
   * The full per-query JSON is ALSO written to SPARK_GRAFT_BENCH_OUT
@@ -44,20 +46,6 @@ import org.apache.spark.sql.SparkSession
   * re-run.
   */
 object Bench {
-
-  /** Gates that drive a Structured Streaming query — trigger and
-    * micro-batch scheduling wall-clock is part of the measurement. */
-  private val StreamQueries: Set[String] = Set(
-    "q20_stream_tumbling", "x22_stream_dedup", "x25_stream_horizon_dedup",
-    "x39_stream_interval_join", "x42_stream_outer_join",
-    "x48_stream_enrich", "x62_stream_sessionize", "x73_stream_e2_loop",
-    "x79_stream_cdc_apply", "x97_stream_bm25_maintain",
-    "x98_stream_ivf_maintain", "x102_stream_bm25_autocompact",
-    "x114_meta_stream_insights", "x116_stream_ivfpq_maintain",
-    "x127_stream_bm25_cdc", "x128_stream_ivf_cdc",
-    "x182_stream_dual_cdc", "x189_stream_hll_sketch",
-    "x194_stream_hist_sketch", "x202_stream_dhash_admit",
-    "x211_stream_drift_monitor")
 
   /** Gates whose measured cost is dominated by building or mutating
     * persisted state (index build + append + compact + retrain
@@ -97,8 +85,12 @@ object Bench {
   // .prewarmSharedFixtures builds them before the measured loop), so
   // their windows now measure serving, which is what they are.
 
-  private def queryClass(name: String): String =
-    if (StreamQueries.contains(name)) "stream"
+  /** `stream` for gates seen starting a Structured Streaming query
+    * (`streamGates`, recorded by the measured loop), else the
+    * hand-kept lifecycle set, else `serve`. */
+  private def queryClass(streamGates: collection.Set[String])(
+      name: String): String =
+    if (streamGates.contains(name)) "stream"
     else if (LifecycleQueries.contains(name)) "lifecycle"
     else "serve"
 
@@ -181,8 +173,23 @@ object Bench {
     SparkEntry.prewarmSharedFixtures(spark, sfDir)
     clearSessionState()
 
+    // the `stream` class is derived, not hand-kept: a gate is tagged
+    // when the query-start count moves across one of its measured runs
+    // (read after clearSessionState has drained the listener bus)
+    val streamStarts = new java.util.concurrent.atomic.AtomicLong()
+    spark.streams.addListener(new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent)
+          : Unit = streamStarts.incrementAndGet()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent)
+          : Unit = ()
+      def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    })
+    val streamGates = scala.collection.mutable.Set.empty[String]
+
     def once(name: String, fn: (SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Double = {
+      val started = streamStarts.get()
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
@@ -190,6 +197,7 @@ object Bench {
       }
       val dt = (System.nanoTime() - t0) / 1e9
       clearSessionState()
+      if (streamStarts.get() != started) streamGates += name
       dt
     }
     // min-of-two discipline: queries at or above this first-run cost
@@ -253,9 +261,10 @@ object Bench {
     val isoJson = isolated.map { case (k, (s, i)) =>
       "\"" + k + f"""\":{"suite":$s%.3f,"isolated":$i%.3f}"""
     }.mkString("{", ",", "}")
+    val classFor = queryClass(streamGates) _
     val classes = results.map { case (k, _) =>
-      "\"" + k + "\":\"" + queryClass(k) + "\"" }.mkString("{", ",", "}")
-    val subtotals = results.groupBy { case (k, _) => queryClass(k) }
+      "\"" + k + "\":\"" + classFor(k) + "\"" }.mkString("{", ",", "}")
+    val subtotals = results.groupBy { case (k, _) => classFor(k) }
       .view.mapValues(_.map(_._2).sum).toMap
     val subJson = Seq("serve", "lifecycle", "stream").map(c =>
       "\"" + c + f"""\":${subtotals.getOrElse(c, 0.0)}%.3f""")

@@ -4822,7 +4822,7 @@ object SparkEntry {
       val schema = s.read.parquet(base + "/vals").schema
       val q = graft.streaming.StreamIndex.histDriftMonitorWriter(s,
           base + "/vals", schema, base + "/idx", base + "/out",
-          "n_chars")
+          "n_chars", "doc_id")
         .option("checkpointLocation", base + "/ckpt").start()
       q.awaitTermination()
       s.read.parquet(base + "/out")

@@ -24,12 +24,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   * OWNERSHIP CONTRACT for ops that materialize their INPUT (the admit
   * / encode / pair-builder family: `simhashLedgerAdmit`,
-  * `minhashAdmit`, `containmentAdmit`, `containmentSetAdmit`,
+  * `minhashAdmit`, `containmentSetAdmit`,
   * `bpeEncode`, `unigramEncode`, `tokenizerScorecard`,
   * `simhashPairsFromSigs`, `containmentSetPairs`, the cluster ops):
   * the RETURNED frame references the entry checkpoint, so the op
   * cannot release it — the CALLER must call [[release]] on the
-  * returned frame after its terminal action (the stream writers do;
+  * returned frame after its terminal action (the stream writers'
+  * land-then-append step does, for every frame it produces;
   * a long-lived batch session that never releases accumulates one
   * small checkpoint per call until driver GC + ContextCleaner collect
   * it). [[release]] is safe to call broadly: it only frees

@@ -1440,40 +1440,6 @@ object DedupOps {
   def minhashIndexVersion(spark: org.apache.spark.sql.SparkSession,
       path: String): Long = Segments.snapshot(spark, path).version
 
-  /** The signature ledger's tombstone table: (doc_id, seg) rows — one
-    * scope covers BOTH parallel tables (`sigs`/`banded` segments share
-    * names; a doc's rows live in exactly one segment pair). */
-  private val MinhashDeletesTable = "deletes"
-
-  /** A `sigs`/`banded` read, LIVE and tagged with each row's `_seg` —
-    * shared by the serve reads (which drop the tag) and the delete
-    * path (which scopes new tombstones by it). */
-  private def taggedLiveMinhash(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      snap: graft.sinks.IndexSnapshot, table: String): DataFrame = {
-    // one multi-path scan; the _seg tag derives from the DETERMINISTIC
-    // _metadata.file_path column (input_file_name would block filter
-    // pushdown past the projection), greedy-anchored to the last path
-    // component named after the table — the taggedPostings shape
-    val tagged = Segments.scan(spark, path, snap, table)
-      .withColumn("_seg", regexp_extract(col("_metadata.file_path"),
-        s".*/$table/([^/]+)/", 1))
-    if (snap.segs(MinhashDeletesTable).isEmpty) tagged
-    else tagged.join(
-      Segments.scan(spark, path, snap, MinhashDeletesTable)
-        .select(col("doc_id"), col("seg").as("_seg")),
-      Seq("doc_id", "_seg"), "left_anti")
-  }
-
-  /** A `sigs`/`banded` read with tombstoned (doc_id, seg) rows
-    * anti-joined out — zero added plan nodes when no deletes exist. */
-  private def readMinhashTableLive(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      snap: graft.sinks.IndexSnapshot, table: String): DataFrame =
-    if (snap.segs(MinhashDeletesTable).isEmpty)
-      Segments.scan(spark, path, snap, table)
-    else taggedLiveMinhash(spark, path, snap, table).drop("_seg")
-
   /** DELETE documents from a persisted [[saveMinhashIndex]] ledger —
     * takedowns must stop BLOCKING admission, not just disappear: a
     * tombstoned doc's signatures leave the admission join, so a
@@ -1499,7 +1465,7 @@ object DedupOps {
       snap: graft.sinks.IndexSnapshot): Unit = {
     val seg = s"del_$deleteId"
     Segments.delete(spark, path, snap, deleteId, seg,
-      Seq(MinhashDeletesTable), Seq(Segments.kept("banded")(
+      Seq(Segments.Deletes), Seq(Segments.kept("banded")(
         "a concurrent compaction folded segments this delete " +
           "scanned — its tombstone scopes reference dropped " +
           "segments; rerun deleteFromMinhashIndex against the new " +
@@ -1507,13 +1473,15 @@ object DedupOps {
       // (doc -> segment) scope from the banded keys (16 fixed-width
       // rows/doc; docs shorter than n tokens have no rows and nothing
       // to tombstone). Live read: re-deleting an already-tombstoned
-      // doc adds nothing.
-      taggedLiveMinhash(spark, path, snap, "banded")
+      // doc adds nothing. One scope covers BOTH parallel tables:
+      // `sigs`/`banded` segments share names and a doc's rows live in
+      // exactly one segment pair.
+      Segments.live(spark, path, snap, "banded", tagged = true)
         .join(docIds.select(col(idCol).cast(LongType).as("doc_id"))
           .distinct(), Seq("doc_id"))
         .select(col("doc_id"), col("_seg").as("seg")).distinct()
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/deletes/$seg")
+        .parquet(s"$path/${Segments.Deletes}/$seg")
     }
   }
 
@@ -1559,12 +1527,12 @@ object DedupOps {
     val inBanded = minhashBandedFrame(inSig, bands, rows)
     // live reads: tombstoned docs neither collide nor verify, so a
     // near-dup of a DELETED document admits again (the ledger forgets)
-    val corpusBanded = readMinhashTableLive(spark, path, snap, "banded")
+    val corpusBanded = Segments.live(spark, path, snap, "banded")
     val cand = inBanded.select(col("doc_id").as("in_doc"), col("bucket"))
       .join(corpusBanded.select(col("doc_id").as("corpus_doc"),
         col("bucket")), Seq("bucket"))
       .select(col("in_doc"), col("corpus_doc")).distinct()
-    val corpusSigs = readMinhashTableLive(spark, path, snap, "sigs")
+    val corpusSigs = Segments.live(spark, path, snap, "sigs")
     val rejected = cand
       .join(inSig.select(col("doc_id").as("in_doc"),
         col("sig").as("sig_a")), Seq("in_doc"))
@@ -1601,12 +1569,12 @@ object DedupOps {
     val inSig = Checkpoints.materialize(
       minhashSigFrame(newDocs, idCol, textCol, n, k), reliable = false)
     val inBanded = minhashBandedFrame(inSig, bands, rows)
-    val corpusBanded = readMinhashTableLive(spark, path, snap, "banded")
+    val corpusBanded = Segments.live(spark, path, snap, "banded")
     val cand = inBanded.select(col("doc_id").as("in_doc"), col("bucket"))
       .join(corpusBanded.select(col("doc_id").as("corpus_doc"),
         col("bucket")), Seq("bucket"))
       .select(col("in_doc"), col("corpus_doc")).distinct()
-    val corpusSigs = readMinhashTableLive(spark, path, snap, "sigs")
+    val corpusSigs = Segments.live(spark, path, snap, "sigs")
     val rejected = Checkpoints.materialize(cand
       .join(inSig.select(col("doc_id").as("in_doc"),
         col("sig").as("sig_a")), Seq("in_doc"))
@@ -1671,16 +1639,16 @@ object DedupOps {
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot): Unit = {
     if (Seq("sigs", "banded").forall(t => snap.segs(t).length <= 1) &&
-      snap.segs(MinhashDeletesTable).isEmpty)
+      snap.segs(Segments.Deletes).isEmpty)
       return
     // live reads: the fold physically removes tombstoned docs; the
     // tombstone table empties in the same commit
     Segments.fold(spark, path, snap, Seq("sigs", "banded"),
-        "compactMinhashIndex", Some(MinhashDeletesTable)) { seg =>
-      readMinhashTableLive(spark, path, snap, "sigs")
+        "compactMinhashIndex", Some(Segments.Deletes)) { seg =>
+      Segments.live(spark, path, snap, "sigs")
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$path/sigs/$seg")
-      readMinhashTableLive(spark, path, snap, "banded")
+      Segments.live(spark, path, snap, "banded")
         .repartition(col("bucket"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$path/banded/$seg")
@@ -1691,7 +1659,7 @@ object DedupOps {
   def vacuumMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, keepVersions: Int = 2): Unit =
     Segments.vacuum(spark, path, keepVersions,
-      MinhashTables :+ MinhashDeletesTable)
+      MinhashTables :+ Segments.Deletes)
 
   // --------------------------- persisted containment-admission ledger
 
@@ -1745,37 +1713,6 @@ object DedupOps {
       .parquet(s"$path/postings/$seg")
   }
 
-  /** The containment ledger's tombstone table: (doc_id, seg) rows —
-    * the [[MinhashDeletesTable]] scope rule (a doc's postings live in
-    * exactly one segment). */
-  private val ContainmentDeletesTable = "deletes"
-
-  /** Postings tagged with each row's `_seg`, tombstoned rows
-    * anti-joined out — shared by the serve read and the delete-scope
-    * derivation ([[taggedLiveMinhash]]'s shape). */
-  private def taggedLiveContainment(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      snap: graft.sinks.IndexSnapshot): DataFrame = {
-    // one multi-path scan + _metadata-derived _seg tag — the
-    // taggedLiveMinhash shape (same pushdown rationale)
-    val tagged = Segments.scan(spark, path, snap, "postings")
-      .withColumn("_seg", regexp_extract(col("_metadata.file_path"),
-        ".*/postings/([^/]+)/", 1))
-    if (snap.segs(ContainmentDeletesTable).isEmpty) tagged
-    else tagged.join(
-      Segments.scan(spark, path, snap, ContainmentDeletesTable)
-        .select(col("doc_id"), col("seg").as("_seg")),
-      Seq("doc_id", "_seg"), "left_anti")
-  }
-
-  /** LIVE postings — zero added plan nodes when no deletes exist. */
-  private def readContainmentLive(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      snap: graft.sinks.IndexSnapshot): DataFrame =
-    if (snap.segs(ContainmentDeletesTable).isEmpty)
-      Segments.scan(spark, path, snap, "postings")
-    else taggedLiveContainment(spark, path, snap).drop("_seg")
-
   /** DELETE documents from the containment ledger (x242) — the
     * takedown path: a tombstoned doc's postings leave the admission
     * join, so a quote of a removed document is ingestible again (and
@@ -1797,17 +1734,17 @@ object DedupOps {
       snap: graft.sinks.IndexSnapshot): Unit = {
     val seg = s"del_$deleteId"
     Segments.delete(spark, path, snap, deleteId, seg,
-      Seq(ContainmentDeletesTable), Seq(Segments.kept("postings")(
+      Seq(Segments.Deletes), Seq(Segments.kept("postings")(
         "a concurrent compaction folded segments this delete " +
           "scanned — its tombstone scopes reference dropped " +
           "segments; rerun deleteFromContainmentIndex against the " +
           "new snapshot (appends compose; compactions serialize)"))) {
-      taggedLiveContainment(spark, path, snap)
+      Segments.live(spark, path, snap, "postings", tagged = true)
         .join(docIds.select(col(idCol).cast(LongType).as("doc_id"))
           .distinct(), Seq("doc_id"))
         .select(col("doc_id"), col("_seg").as("seg")).distinct()
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/deletes/$seg")
+        .parquet(s"$path/${Segments.Deletes}/$seg")
     }
   }
 
@@ -1867,7 +1804,7 @@ object DedupOps {
         explode(col("sh")).as("s"))
     // live read: a tombstoned doc neither collides nor verifies, so a
     // quote of a DELETED document admits again (the ledger forgets)
-    val corpus = readContainmentLive(spark, path, snap)
+    val corpus = Segments.live(spark, path, snap, "postings")
     val rejected = in.join(corpus, Seq("s"))
       .groupBy(col("in_doc"), col("doc_id"), col("in_sz"), col("sz"))
       .agg(count(lit(1)).as("shared"))
@@ -1892,12 +1829,12 @@ object DedupOps {
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot): Unit = {
     if (snap.segs("postings").length <= 1 &&
-      snap.segs(ContainmentDeletesTable).isEmpty) return
+      snap.segs(Segments.Deletes).isEmpty) return
     // live read: the fold physically removes tombstoned docs; the
     // tombstone table empties in the same commit
     Segments.fold(spark, path, snap, Seq("postings"),
-        "compactContainmentIndex", Some(ContainmentDeletesTable)) { seg =>
-      readContainmentLive(spark, path, snap)
+        "compactContainmentIndex", Some(Segments.Deletes)) { seg =>
+      Segments.live(spark, path, snap, "postings")
         .repartition(col("s")).sortWithinPartitions("s")
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$path/postings/$seg")
@@ -1909,7 +1846,7 @@ object DedupOps {
       spark: org.apache.spark.sql.SparkSession, path: String,
       keepVersions: Int = 2): Unit =
     Segments.vacuum(spark, path, keepVersions,
-      ContainmentTables :+ ContainmentDeletesTable)
+      ContainmentTables :+ Segments.Deletes)
 
   // -------------- precomputed signature-SET containment ledger (x252)
 
@@ -2097,7 +2034,7 @@ object DedupOps {
       .filter(col("sh").isNotNull && size(col("sh")) >= 1)
       .select(col("in_doc"), size(col("sh")).as("in_sz"),
         explode(col("sh")).as("s"))
-    val corpus = readContainmentLive(spark, path, snap)
+    val corpus = Segments.live(spark, path, snap, "postings")
     val rejected = in.join(corpus, Seq("s"))
       .groupBy(col("in_doc"), col("doc_id"), col("in_sz"), col("sz"))
       .agg(count(lit(1)).as("shared"))

@@ -739,8 +739,8 @@ object Similarity {
     // already carries its segment name as the `batch` partition
     // column, so a later re-append of a deleted id lands in a batch no
     // tombstone covers and serves normally (the reindex primitive).
-    if (snap.segs(IvfDeletesTable).isEmpty) base
-    else base.join(Segments.scan(spark, path, snap, IvfDeletesTable),
+    if (snap.segs(Segments.Deletes).isEmpty) base
+    else base.join(Segments.scan(spark, path, snap, Segments.Deletes),
       Seq("vec_id", "batch"), "left_anti")
   }
 
@@ -768,12 +768,6 @@ object Similarity {
       s"$op: the supplied frame is missing the index's metadata " +
         s"columns (${meta.mkString(",")}) — the layout is " +
         "self-describing and every ingested batch must carry them")
-
-  /** The vector indexes' tombstone table: (vec_id, batch) rows scoping
-    * each deleted vector to the corpus segment that held it when the
-    * delete committed — shared by the IVF and IVFPQ layouts (both
-    * bucket their corpus under `batch=` segments). */
-  private val IvfDeletesTable = "deletes"
 
   /** DELETE vectors from a persisted [[saveIvfIndex]] or
     * [[saveIvfPqIndex]] index — the vector half of
@@ -809,7 +803,7 @@ object Similarity {
       ids: DataFrame, idCol: String, deleteId: String,
       snap: graft.sinks.IndexSnapshot): Unit = {
     val seg = s"del_$deleteId"
-    Segments.delete(spark, path, snap, deleteId, seg, Seq(IvfDeletesTable),
+    Segments.delete(spark, path, snap, deleteId, seg, Seq(Segments.Deletes),
       Seq(Segments.kept("corpus")(
         "a concurrent compaction/retrain replaced corpus segments " +
           "this delete scanned — its tombstone scopes reference " +
@@ -821,7 +815,7 @@ object Similarity {
         .select(col("vec_id"), col("batch").cast(StringType).as("batch"))
         .distinct()
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/deletes/$seg")
+        .parquet(s"$path/${Segments.Deletes}/$seg")
     }
   }
 
@@ -949,7 +943,7 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot): Unit = {
     if (snap.segs("corpus").length <= 1 &&
-      snap.segs(IvfDeletesTable).isEmpty) return
+      snap.segs(Segments.Deletes).isEmpty) return
     // readIvfCorpus is tombstone-aware, so the fold physically removes
     // deleted vectors; the tombstone table empties in the same commit.
     // Metadata columns are carried — folding must not strip the
@@ -958,7 +952,7 @@ object Similarity {
     // generation: prepending our old-generation copy would duplicate
     // every vec_id under stale buckets.
     Segments.fold(spark, path, snap, Seq("corpus"), "compactIvfIndex",
-      Some(IvfDeletesTable), Seq(Segments.unchanged("centroids")(
+      Some(Segments.Deletes), Seq(Segments.unchanged("centroids")(
         "retrain committed during compaction — the compacted segment " +
           "is bucketed against the superseded centroid generation; " +
           "discard and rerun compactIvfIndex if still needed"))) { seg =>
@@ -1079,8 +1073,8 @@ object Similarity {
           // a delete committing mid-retrain scoped its tombstones to
           // batch names the retrain replaces — abort rather than
           // resurrect (the rerun trains on the post-delete live corpus)
-          require(c.segs(IvfDeletesTable) ==
-              snap.segs(IvfDeletesTable),
+          require(c.segs(Segments.Deletes) ==
+              snap.segs(Segments.Deletes),
             "a delete committed during retrain — its tombstones are " +
               "scoped to segments the retrain replaces; rerun " +
               "retrainIvfIndex against the new snapshot")
@@ -1091,7 +1085,7 @@ object Similarity {
           c.copy(tables = c.tables +
             ("corpus" -> (seg +: carrySegs)) +
             ("centroids" -> Seq(seg)) +
-            (IvfDeletesTable -> Seq.empty[String]))
+            (Segments.Deletes -> Seq.empty[String]))
         }
         committed = true
       } catch { case _: RetrainCarryRetry => () }
@@ -1149,7 +1143,7 @@ object Similarity {
       extraTables: Seq[String] = Nil): Unit =
     Segments.cloneTo(spark, path,
       Segments.snapshot(spark, path, asOfVersion), dstPath,
-      Seq("corpus", "centroids", IvfDeletesTable) ++ extraTables,
+      Seq("corpus", "centroids", Segments.Deletes) ++ extraTables,
       CorpusSegDir)
 
   /** The corpus stores segment `s` as the `batch=s` partition
@@ -1161,7 +1155,7 @@ object Similarity {
       path: String, keepVersions: Int = 2,
       pinnedVersions: Set[Long] = Set.empty): Unit =
     Segments.vacuum(spark, path, keepVersions,
-      Seq("corpus", "centroids", IvfDeletesTable), CorpusSegDir,
+      Seq("corpus", "centroids", Segments.Deletes), CorpusSegDir,
       pinnedVersions)
 
   /** Serve query batches from a persisted [[saveIvfIndex]] index: no
@@ -1485,7 +1479,7 @@ object Similarity {
           "codes, so an unseen batch cannot be re-encoded against the " +
           "new codebooks from the index alone; serialize appends and " +
           "maintenance with retrainIvfPqIndex and rerun")
-      require(c.segs(IvfDeletesTable) == snap.segs(IvfDeletesTable),
+      require(c.segs(Segments.Deletes) == snap.segs(Segments.Deletes),
         "a delete committed during IVFPQ retrain — rerun with a " +
           "corpus that reflects it (the caller-supplied corpus is the " +
           "source of truth; a stale one would resurrect deleted ids)")
@@ -1493,7 +1487,7 @@ object Similarity {
       // corpus, so prior tombstones are baked in — drop them
       c.copy(tables = c.tables + ("corpus" -> Seq(seg)) +
         ("centroids" -> Seq(seg)) + ("codebooks" -> Seq(seg)) +
-        (IvfDeletesTable -> Seq.empty[String]))
+        (Segments.Deletes -> Seq.empty[String]))
     }
   }
 
@@ -1504,11 +1498,11 @@ object Similarity {
       path: String): Unit = {
     val snap = Segments.snapshot(spark, path)
     if (snap.segs("corpus").length <= 1 &&
-      snap.segs(IvfDeletesTable).isEmpty) return
+      snap.segs(Segments.Deletes).isEmpty) return
     // metadata columns carried — folding must not strip the
     // pre-filter surface (the compactIvfIndex rule, codes edition)
     Segments.fold(spark, path, snap, Seq("corpus"), "compactIvfPqIndex",
-      Some(IvfDeletesTable), Seq(Segments.unchanged("centroids",
+      Some(Segments.Deletes), Seq(Segments.unchanged("centroids",
         "codebooks")("index generation changed during compaction — " +
           "discard and rerun compactIvfPqIndex if still needed"))) { seg =>
       readIvfCorpus(spark, path, snap)
@@ -1527,7 +1521,7 @@ object Similarity {
   def vacuumIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, keepVersions: Int = 2): Unit =
     Segments.vacuum(spark, path, keepVersions,
-      Seq("corpus", "centroids", "codebooks", IvfDeletesTable),
+      Seq("corpus", "centroids", "codebooks", Segments.Deletes),
       CorpusSegDir)
 
   /** Reciprocal-rank fusion of two retriever result lists — the 2-list

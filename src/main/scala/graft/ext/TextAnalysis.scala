@@ -1234,10 +1234,6 @@ object TextAnalysis {
 
   private val Bm25Tables = Seq("postings", "termstats", "stats")
 
-  /** The tombstone table: (doc_id, seg) rows scoping each deleted doc
-    * to the postings segment that held it when the delete committed. */
-  private val Bm25DeletesTable = "deletes"
-
   /** Batches at or under this row count take the single-partition
     * segment build (see [[appendToBm25Index]]'s `knownRows`): well
     * under one parquet row group of postings, so the shuffle the
@@ -1308,59 +1304,6 @@ object TextAnalysis {
         }))
     } finally base.unpersist(blocking = false)
   }
-
-  /** The snapshot's tombstone set as one frame of (doc_id, seg) rows —
-    * None when the index has no deletes (the common case; every reader
-    * then skips the anti-join entirely). Tombstones are SCOPED to the
-    * postings segment that held the doc when the delete committed (the
-    * Lucene per-segment live-docs shape): a doc re-added by a LATER
-    * append lands in a segment no existing tombstone covers, which is
-    * what makes [[reindexBm25Docs]] (delete + re-add) well-defined. */
-  private def bm25Tombstones(spark: org.apache.spark.sql.SparkSession,
-      path: String, snap: graft.sinks.IndexSnapshot): Option[DataFrame] = {
-    if (snap.segs(Bm25DeletesTable).isEmpty) None
-    else Some(Segments.scan(spark, path, snap, Bm25DeletesTable))
-  }
-
-  /** The postings scan with each row tagged by its segment name — the
-    * shape the (doc_id, seg)-scoped tombstone anti-join keys on. ONE
-    * multi-path scan ([[Segments.scan]]); the tag derives from the
-    * DETERMINISTIC `_metadata.file_path` column — input_file_name is
-    * nondeterministic and would block predicate pushdown past this
-    * projection, losing the term-IN pruning the serve relies on. The
-    * greedy leading `.*` anchors the match to the LAST path component
-    * named `postings`, so an index rooted under a directory of that
-    * name cannot mistag. */
-  private def taggedPostings(spark: org.apache.spark.sql.SparkSession,
-      path: String, snap: graft.sinks.IndexSnapshot): DataFrame =
-    Segments.scan(spark, path, snap, "postings")
-      .withColumn("_seg", regexp_extract(col("_metadata.file_path"),
-        ".*/postings/([^/]+)/", 1))
-
-  /** LIVE postings WITH their `_seg` tag — the shape both the serve
-    * path (which drops the tag) and the delete path (which scopes new
-    * tombstones by it) share. */
-  private def taggedLivePostings(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      snap: graft.sinks.IndexSnapshot): DataFrame =
-    bm25Tombstones(spark, path, snap) match {
-      case None => taggedPostings(spark, path, snap)
-      case Some(tomb) =>
-        taggedPostings(spark, path, snap)
-          .join(tomb.select(col("doc_id"), col("seg").as("_seg")),
-            Seq("doc_id", "_seg"), "left_anti")
-    }
-
-  /** The snapshot's LIVE postings: the segment union minus tombstoned
-    * (doc_id, seg) rows. With no deletes this is exactly
-    * the plain postings scan — zero added plan nodes; with
-    * deletes, one anti-join against the (small) tombstone table, which
-    * Catalyst pushes term filters through to the scans. */
-  private def livePostings(spark: org.apache.spark.sql.SparkSession,
-      path: String, snap: graft.sinks.IndexSnapshot): DataFrame =
-    if (snap.segs(Bm25DeletesTable).isEmpty)
-      Segments.scan(spark, path, snap, "postings")
-    else taggedLivePostings(spark, path, snap).drop("_seg")
 
   /** The index's current manifest version — the handle [[queryBm25Index]]'s
     * `asOfVersion` time travel pins to. */
@@ -1460,7 +1403,7 @@ object TextAnalysis {
       .select(col("doc_id")).collect().map(_.getLong(0))
     val mined =
       if (fbIds.isEmpty) Array.empty[String]
-      else livePostings(spark, path, snap)
+      else Segments.live(spark, path, snap, "postings")
         .filter(col("doc_id").isin(fbIds.toIndexedSeq: _*))
         .filter(!col("term").isin(qset: _*) && col("term") =!= "")
         .groupBy(col("term"))
@@ -1510,7 +1453,7 @@ object TextAnalysis {
     // delete also landed NEGATIVE (termstats, stats) correction
     // segments, the summed statistics below are the live corpus's —
     // scores are exact immediately, not only after compaction
-    val termPruned = livePostings(spark, path, snap)
+    val termPruned = Segments.live(spark, path, snap, "postings")
       .filter(col("term").isin(qset: _*))
     // the candidate filter restricts the already-term-pruned rows;
     // statistics below stay corpus-wide (Lucene filter semantics)
@@ -1598,7 +1541,7 @@ object TextAnalysis {
       "query terms must be non-null, non-empty strings " +
         "(empty/whitespace-only docs post an '' token row)")
     val snap = Segments.snapshot(spark, path, asOfVersion)
-    val postings = livePostings(spark, path, snap)
+    val postings = Segments.live(spark, path, snap, "postings")
       .filter(col("term").isin(termList: _*))
     val termstats = Segments.scan(spark, path, snap, "termstats")
       .filter(col("term").isin(termList: _*))
@@ -1741,13 +1684,13 @@ object TextAnalysis {
       snap: graft.sinks.IndexSnapshot): Unit = {
     val seg = s"del_$deleteId"
     Segments.delete(spark, path, snap, deleteId, seg,
-      Seq("termstats", "stats", Bm25DeletesTable), Seq(
+      Seq("termstats", "stats", Segments.Deletes), Seq(
         Segments.kept("postings")(
           "a concurrent compaction folded postings segments this " +
             "delete scanned — its tombstone scopes reference dropped " +
             "segments; rerun deleteFromBm25Index against the new " +
             "snapshot (appends compose; compactions serialize)"),
-        Segments.unchanged(Bm25DeletesTable)(
+        Segments.unchanged(Segments.Deletes)(
           "a concurrent delete committed — corrections were computed " +
             "against a superseded tombstone set and overlapping ids " +
             "would double-count; rerun deleteFromBm25Index"))) {
@@ -1756,7 +1699,8 @@ object TextAnalysis {
       // locate the doomed rows in the LIVE postings (already-tombstoned
       // rows excluded, so overlapping delete sets can never double-count
       // a correction); _seg rides through as the tombstone scope
-      val doomed = taggedLivePostings(spark, path, snap)
+      val doomed = Segments.live(spark, path, snap, "postings",
+          tagged = true)
         .join(ids, Seq("doc_id"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -1767,7 +1711,7 @@ object TextAnalysis {
           () => {
             doomed.select(col("doc_id"), col("_seg").as("seg")).distinct()
               .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(s"$path/deletes/$seg")
+              .parquet(s"$path/${Segments.Deletes}/$seg")
           },
           // negative corrections: every statistic the serve path sums
           // nets to the live corpus's exact value
@@ -1843,7 +1787,7 @@ object TextAnalysis {
       spark: org.apache.spark.sql.SparkSession, path: String,
       snap: graft.sinks.IndexSnapshot): Unit = {
     if (Bm25Tables.forall(t => snap.segs(t).length <= 1) &&
-      snap.segs(Bm25DeletesTable).isEmpty) return
+      snap.segs(Segments.Deletes).isEmpty) return
     // physical removal of tombstoned docs happens HERE: the fold reads
     // live postings only, the summed termstats net out the deletes'
     // negative corrections (terms with no live postings drop), and the
@@ -1854,10 +1798,10 @@ object TextAnalysis {
     // its tombstones to postings segments this fold drops, so the
     // commit aborts on a changed tombstone set.
     Segments.fold(spark, path, snap, Bm25Tables, "compactBm25Index",
-        Some(Bm25DeletesTable)) { seg =>
+        Some(Segments.Deletes)) { seg =>
       Concurrently.all(Seq(
         () => {
-          livePostings(spark, path, snap)
+          Segments.live(spark, path, snap, "postings")
             .repartition(col("term"))
             .sortWithinPartitions("term", "doc_id")
             .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -1908,12 +1852,12 @@ object TextAnalysis {
       .groupBy("term").agg(sum(col("df_t")).as("_d"))
       .filter(col("_d") > 0)
       .agg(count(lit(1)).as("vocab_size"))
-    val tomb = bm25Tombstones(spark, path, snap) match {
-      case Some(t) => t.select(col("doc_id")).distinct()
+    val tomb =
+      if (snap.segs(Segments.Deletes).isEmpty)
+        spark.range(1).select(lit(0L).as("n_tombstones"))
+      else Segments.scan(spark, path, snap, Segments.Deletes)
+        .select(col("doc_id")).distinct()
         .agg(count(lit(1)).as("n_tombstones"))
-      case None => spark.range(1)
-        .select(lit(0L).as("n_tombstones"))
-    }
     st.crossJoin(broadcast(vocab)).crossJoin(broadcast(tomb))
       .select(lit(snap.version).as("version"), col("n_docs"),
         col("total_len"), col("vocab_size"),
@@ -1934,13 +1878,13 @@ object TextAnalysis {
       asOfVersion: Option[Long] = None): Unit =
     Segments.cloneTo(spark, path,
       Segments.snapshot(spark, path, asOfVersion), dstPath,
-      Bm25Tables :+ Bm25DeletesTable)
+      Bm25Tables :+ Segments.Deletes)
 
   def vacuumBm25Index(spark: org.apache.spark.sql.SparkSession,
       path: String, keepVersions: Int = 2,
       pinnedVersions: Set[Long] = Set.empty): Unit =
     Segments.vacuum(spark, path, keepVersions,
-      Bm25Tables :+ Bm25DeletesTable, pinnedVersions = pinnedVersions)
+      Bm25Tables :+ Segments.Deletes, pinnedVersions = pinnedVersions)
 
   // ---- byte-pair-encoding vocabulary learning ------------------------
 

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, regexp_extract}
 
 /** The family-facing half of the [[IndexManifest]] protocol: every
   * persisted index, ledger and sketch (BM25, IVF/IVFPQ, MinHash,
@@ -69,6 +70,42 @@ private[graft] object Segments {
     require(segs.nonEmpty,
       s"snapshot v${snap.version} at $path has no '$table' segments")
     spark.read.parquet(segs.map(s => s"$path/$table/$s"): _*)
+  }
+
+  /** The tombstone table of every family that deletes: rows scoping
+    * each deleted doc to the segment that held it when the delete
+    * committed (the Lucene per-segment live-docs shape) — a doc
+    * re-added by a LATER append lands in a segment no existing
+    * tombstone covers, which is what makes delete + re-add
+    * well-defined. The text and signature families key it
+    * `(doc_id, seg)`; the vector indexes key it `(vec_id, batch)`. */
+  val Deletes = "deletes"
+
+  /** One table of `snap` LIVE: the [[scan]] minus rows whose
+    * `(doc_id, seg)` is tombstoned in [[Deletes]]. With no deletes
+    * this is exactly the plain scan — zero added plan nodes; with
+    * deletes, one anti-join against the (small) tombstone table, which
+    * Catalyst pushes filters through to the scan. `tagged` keeps each
+    * row's segment name as `_seg` — the scope a delete writes its new
+    * tombstones under. The tag derives from the DETERMINISTIC
+    * `_metadata.file_path` column (input_file_name is nondeterministic
+    * and would block predicate pushdown past the projection), and the
+    * greedy leading `.*` anchors the match to the LAST path component
+    * named `table`, so a root under a directory of that name cannot
+    * mistag. */
+  def live(spark: SparkSession, path: String, snap: IndexSnapshot,
+      table: String, tagged: Boolean = false): DataFrame = {
+    val noDeletes = snap.segs(Deletes).isEmpty
+    if (noDeletes && !tagged) return scan(spark, path, snap, table)
+    val withSeg = scan(spark, path, snap, table).withColumn("_seg",
+      regexp_extract(col("_metadata.file_path"), s".*/$table/([^/]+)/",
+        1))
+    val rows =
+      if (noDeletes) withSeg
+      else withSeg.join(scan(spark, path, snap, Deletes)
+          .select(col("doc_id"), col("seg").as("_seg")),
+        Seq("doc_id", "_seg"), "left_anti")
+    if (tagged) rows else rows.drop("_seg")
   }
 
   /** The one segment-id rule: `/`, spaces or other separators would

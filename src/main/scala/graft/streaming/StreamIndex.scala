@@ -1,12 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 import graft.Concurrently
-import graft.ext.{Similarity, TextAnalysis}
+import graft.ext.{Checkpoints, Corpus, DedupOps, Hybrid, Similarity,
+  TextAnalysis}
 import graft.sinks.Segments
 
 /** Streaming INDEX maintenance — the serving-side twin of the table
@@ -81,39 +83,118 @@ object StreamIndex {
       java.lang.Long.toHexString(r.getLong(2)), r.getLong(0))
   }
 
-  def bm25AppendWriter(spark: SparkSession, docsDir: String,
-      schema: StructType, indexPath: String, idCol: String,
-      textCol: String, compactEvery: Int = 0)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
+  /** The one landed-file driver under every writer: each parquet file
+    * landing in `dir` is one micro-batch (`maxFilesPerTrigger = 1`),
+    * drained by `Trigger.AvailableNow`. The batch is persisted
+    * MEMORY_AND_DISK for `body(session, batch, epoch)` — one file read
+    * feeds both the batchId aggregate and the writer's own scans,
+    * which would read the file twice otherwise — and always
+    * unpersisted; `after` then runs on the stream's own thread (inline
+    * maintenance, the dual writer's pin), so it never races the
+    * batch's own commits. */
+  private def landed(spark: SparkSession, dir: String,
+      schema: StructType, after: SparkSession => Unit = _ => ())(
+      body: (SparkSession, DataFrame, Long) => Unit)
+      : DataStreamWriter[Row] =
     spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
+      .parquet(dir)
       .writeStream
       .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        // one file read feeds both the batchId aggregate and the
-        // segment build — the micro-batch is read-twice otherwise
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (bid, rows) = contentBatchId(b, idCol)
-          // the count is free here (the batchId aggregate already paid
-          // for it) — pass it so small micro-batches take the
-          // single-partition segment build instead of inheriting the
-          // session's shuffle fan-out
-          TextAnalysis.appendToBm25Index(s, indexPath, b, idCol,
-            textCol, batchId = bid, knownRows = Some(rows))
-        } finally b.unpersist(blocking = false)
-        if (compactEvery > 0 &&
-          Segments.snapshot(s, indexPath).segs("postings").length >
-            compactEvery) {
-          TextAnalysis.compactBm25Index(s, indexPath)
-          TextAnalysis.vacuumBm25Index(s, indexPath, keepVersions = 2)
-        }
+      .foreachBatch { (batch: DataFrame, epoch: Long) =>
+        val b = batch.persist(StorageLevel.MEMORY_AND_DISK)
+        try body(batch.sparkSession, b, epoch)
+        finally b.unpersist(blocking = false)
+        after(batch.sparkSession)
       }
       .trigger(Trigger.AvailableNow())
+
+  /** [[landed]] for the plain appenders: `append(session, batch, bid)`
+    * lands the batch under its [[contentBatchId]], and the family's
+    * `applied` record turns a replay into a no-op. */
+  private def appending(spark: SparkSession, dir: String,
+      schema: StructType, idCol: String,
+      after: SparkSession => Unit = _ => ())(
+      append: (SparkSession, DataFrame, String) => Unit)
+      : DataStreamWriter[Row] =
+    landed(spark, dir, schema, after)((s, b, _) =>
+      append(s, b, contentBatchId(b, idCol)._1))
+
+  /** What one gated micro-batch produced ([[landing]]): `out` lands
+    * under `outDir/batch=<bid>`, then `append(bid)` commits the
+    * family's segment; `also` lists further produced frames, released
+    * with `out`. */
+  private final case class Landing(out: DataFrame,
+      append: String => Unit, also: Seq[DataFrame] = Nil)
+
+  /** The applied-gated land-then-append step of the admit and monitor
+    * writers. When `path` already records the batch's
+    * [[contentBatchId]] the whole batch is a no-op: replaying the step
+    * after its own append would admit or score the batch against
+    * itself, so the applied check, not recomputation, is what makes a
+    * replay safe. Otherwise `step` builds the output (cached when
+    * `cacheOut` — an admit's output feeds both the landing and the
+    * append), the output lands by same-path overwrite (idempotent
+    * under crash-before-append replays) BEFORE the append commits,
+    * and every produced frame goes through [[Checkpoints.release]] —
+    * a no-op for frames without a module checkpoint, so a long stream
+    * never keeps one admit checkpoint per batch. */
+  private def landing(spark: SparkSession, dir: String,
+      schema: StructType, path: String, outDir: String, idCol: String,
+      cacheOut: Boolean)(step: (SparkSession, DataFrame) => Landing)
+      : DataStreamWriter[Row] =
+    landed(spark, dir, schema) { (s, b, _) =>
+      val bid = contentBatchId(b, idCol)._1
+      if (!Segments.applied(s, path, bid)) {
+        val l = step(s, b)
+        if (cacheOut) l.out.persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          l.out.write.mode(SaveMode.Overwrite)
+            .parquet(s"$outDir/batch=$bid")
+          l.append(bid)
+        } finally {
+          if (cacheOut) l.out.unpersist(blocking = false)
+          (l.out +: l.also).foreach(Checkpoints.release)
+        }
+      }
+    }
+
+  /** The inline maintenance step behind every `compactEvery` knob (see
+    * the object doc): a micro-batch that leaves more than `every` live
+    * `table` segments triggers `compact` plus a retention-2 `vacuum`;
+    * `every = 0` turns it off. */
+  private def compacting(path: String, table: String, every: Int)(
+      compact: (SparkSession, String) => Unit,
+      vacuum: (SparkSession, String, Int) => Unit)
+      : SparkSession => Unit = s =>
+    if (every > 0 &&
+      Segments.snapshot(s, path).segs(table).length > every) {
+      compact(s, path)
+      vacuum(s, path, 2)
+    }
+
+  private def bm25Compacting(path: String, every: Int) =
+    compacting(path, "postings", every)(TextAnalysis.compactBm25Index,
+      TextAnalysis.vacuumBm25Index(_, _, _))
+
+  private def ivfCompacting(path: String, every: Int) =
+    compacting(path, "corpus", every)(Similarity.compactIvfIndex,
+      Similarity.vacuumIvfIndex(_, _, _))
+
+  def bm25AppendWriter(spark: SparkSession, docsDir: String,
+      schema: StructType, indexPath: String, idCol: String,
+      textCol: String, compactEvery: Int = 0): DataStreamWriter[Row] =
+    landed(spark, docsDir, schema,
+        bm25Compacting(indexPath, compactEvery)) { (s, b, _) =>
+      val (bid, rows) = contentBatchId(b, idCol)
+      // the count is free here (the batchId aggregate already paid for
+      // it) — pass it so small micro-batches take the single-partition
+      // segment build instead of inheriting the session's shuffle
+      // fan-out
+      TextAnalysis.appendToBm25Index(s, indexPath, b, idCol, textCol,
+        batchId = bid, knownRows = Some(rows))
+    }
 
   /** Streamed maintenance of a persisted MERGEABLE SKETCH (gated
     * x189): arriving key files land each micro-batch's HLL registers
@@ -126,24 +207,9 @@ object StreamIndex {
     * batches no-op on the manifest's applied record. */
   def hllSketchAppendWriter(spark: SparkSession, keysDir: String,
       schema: StructType, sketchPath: String, keyCol: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(keysDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (bid, _) = contentBatchId(b, keyCol)
-          graft.ext.Corpus.appendToHllSketch(s, sketchPath, b,
-            col(keyCol), bid)
-        } finally b.unpersist(blocking = false)
-      }
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    appending(spark, keysDir, schema, keyCol)((s, b, bid) =>
+      Corpus.appendToHllSketch(s, sketchPath, b, col(keyCol), bid))
 
   /** Streamed INCREMENTAL ADMISSION into a persisted 64-bit signature
     * ledger (gated x202): each micro-batch of (doc_id, sh) sigs is
@@ -174,42 +240,14 @@ object StreamIndex {
     * like the batch-side append contract. */
   def simhashAdmitWriter(spark: SparkSession, sigsDir: String,
       schema: StructType, ledgerPath: String, outDir: String,
-      maxHamming: Int, probeBits: Int = 1)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(sigsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (bid, _) = contentBatchId(b, "doc_id")
-          if (!Segments.applied(s, ledgerPath, bid)) {
-            val admitted = graft.ext.DedupOps.simhashLedgerAdmit(s,
-                ledgerPath, b, maxHamming, probeBits)
-              .persist(
-                org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              admitted.write
-                .mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(s"$outDir/batch=$bid")
-              graft.ext.DedupOps.appendToSimhashLedger(s, ledgerPath,
-                admitted, bid)
-            } finally {
-              admitted.unpersist(blocking = false)
-              // the admit materializes the batch's signature frame
-              // (localCheckpoint) — release its blocks so a long
-              // stream does not accumulate one checkpoint per batch
-              graft.ext.Checkpoints.release(admitted)
-            }
-          }
-        } finally b.unpersist(blocking = false)
-      }
-      .trigger(Trigger.AvailableNow())
+      maxHamming: Int, probeBits: Int = 1): DataStreamWriter[Row] =
+    landing(spark, sigsDir, schema, ledgerPath, outDir, "doc_id",
+        cacheOut = true) { (s, b) =>
+      val admitted = DedupOps.simhashLedgerAdmit(s, ledgerPath, b,
+        maxHamming, probeBits)
+      Landing(admitted,
+        DedupOps.appendToSimhashLedger(s, ledgerPath, admitted, _))
+    }
 
   /** Streamed CONTAINMENT admission (gated x245): arriving document
     * files admit against the persisted containment ledger
@@ -230,35 +268,14 @@ object StreamIndex {
   def containmentAdmitWriter(spark: SparkSession, docsDir: String,
       schema: StructType, ledgerPath: String, outDir: String,
       idCol: String, textCol: String, threshold: Double)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (bid, _) = contentBatchId(b, idCol)
-          if (!Segments.applied(s, ledgerPath, bid)) {
-            val admitted = graft.ext.DedupOps.containmentAdmit(s,
-                ledgerPath, b, idCol, textCol, threshold)
-              .persist(
-                org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              admitted.write
-                .mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(s"$outDir/batch=$bid")
-              graft.ext.DedupOps.appendToContainmentIndex(s,
-                ledgerPath, admitted, idCol, textCol, bid)
-            } finally admitted.unpersist(blocking = false)
-          }
-        } finally b.unpersist(blocking = false)
-      }
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    landing(spark, docsDir, schema, ledgerPath, outDir, idCol,
+        cacheOut = true) { (s, b) =>
+      val admitted = DedupOps.containmentAdmit(s, ledgerPath, b, idCol,
+        textCol, threshold)
+      Landing(admitted, DedupOps.appendToContainmentIndex(s, ledgerPath,
+        admitted, idCol, textCol, _))
+    }
 
   /** Streamed signature-SET containment admission (gated x256) —
     * [[containmentAdmitWriter]] on the multi-frame/video axis: each
@@ -273,40 +290,14 @@ object StreamIndex {
   def containmentSetAdmitWriter(spark: SparkSession, docsDir: String,
       schema: StructType, ledgerPath: String, outDir: String,
       idCol: String, setCol: String, threshold: Double)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (bid, _) = contentBatchId(b, idCol)
-          if (!Segments.applied(s, ledgerPath, bid)) {
-            val admitted = graft.ext.DedupOps.containmentSetAdmit(s,
-                ledgerPath, b, idCol, setCol, threshold)
-              .persist(
-                org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              admitted.write
-                .mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(s"$outDir/batch=$bid")
-              graft.ext.DedupOps.appendToContainmentSetIndex(s,
-                ledgerPath, admitted, idCol, setCol, bid)
-            } finally {
-              admitted.unpersist(blocking = false)
-              // release the admit's materialized input (see
-              // simhashAdmitWriter)
-              graft.ext.Checkpoints.release(admitted)
-            }
-          }
-        } finally b.unpersist(blocking = false)
-      }
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    landing(spark, docsDir, schema, ledgerPath, outDir, idCol,
+        cacheOut = true) { (s, b) =>
+      val admitted = DedupOps.containmentSetAdmit(s, ledgerPath, b,
+        idCol, setCol, threshold)
+      Landing(admitted, DedupOps.appendToContainmentSetIndex(s,
+        ledgerPath, admitted, idCol, setCol, _))
+    }
 
   /** Streamed PARAGRAPH-LEVEL dedup (gated x263) — [[graft.ext
     * .DedupOps.chunkDedup]] as a maintained pipeline: each micro-batch
@@ -319,31 +310,13 @@ object StreamIndex {
     * as the admit writers. */
   def chunkDedupWriter(spark: SparkSession, docsDir: String,
       schema: StructType, ledgerPath: String, outDir: String,
-      idCol: String, textCol: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (bid, _) = contentBatchId(b, idCol)
-          if (!Segments.applied(s, ledgerPath, bid)) {
-            graft.ext.DedupOps.chunkDedupIncremental(s, ledgerPath,
-                b, idCol, textCol)
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(s"$outDir/batch=$bid")
-            graft.ext.DedupOps.appendToChunkLedger(s, ledgerPath, b,
-              idCol, textCol, bid)
-          }
-        } finally b.unpersist(blocking = false)
-      }
-      .trigger(Trigger.AvailableNow())
+      idCol: String, textCol: String): DataStreamWriter[Row] =
+    landing(spark, docsDir, schema, ledgerPath, outDir, idCol,
+        cacheOut = false) { (s, b) =>
+      Landing(DedupOps.chunkDedupIncremental(s, ledgerPath, b, idCol,
+          textCol),
+        DedupOps.appendToChunkLedger(s, ledgerPath, b, idCol, textCol, _))
+    }
 
   /** Streamed SHIFT-RESISTANT paragraph dedup (gated x274) —
     * [[chunkDedupWriter]] on content-defined boundaries: each
@@ -357,31 +330,14 @@ object StreamIndex {
     * writers. */
   def cdcChunkDedupWriter(spark: SparkSession, docsDir: String,
       schema: StructType, ledgerPath: String, outDir: String,
-      idCol: String, textCol: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (bid, _) = contentBatchId(b, idCol)
-          if (!Segments.applied(s, ledgerPath, bid)) {
-            graft.ext.DedupOps.cdcDedupIncremental(s, ledgerPath,
-                b, idCol, textCol)
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(s"$outDir/batch=$bid")
-            graft.ext.DedupOps.appendToCdcChunkLedger(s, ledgerPath, b,
-              idCol, textCol, bid)
-          }
-        } finally b.unpersist(blocking = false)
-      }
-      .trigger(Trigger.AvailableNow())
+      idCol: String, textCol: String): DataStreamWriter[Row] =
+    landing(spark, docsDir, schema, ledgerPath, outDir, idCol,
+        cacheOut = false) { (s, b) =>
+      Landing(DedupOps.cdcDedupIncremental(s, ledgerPath, b, idCol,
+          textCol),
+        DedupOps.appendToCdcChunkLedger(s, ledgerPath, b, idCol, textCol,
+          _))
+    }
 
   /** Streamed PER-HOST CRAWL-BUDGET admission (gated x261) — the
     * frontier loop: each micro-batch of (doc_id, host) rows admits
@@ -394,36 +350,14 @@ object StreamIndex {
     * admit writers. */
   def hostBudgetAdmitWriter(spark: SparkSession, docsDir: String,
       schema: StructType, ledgerPath: String, outDir: String,
-      idCol: String, hostCol: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (bid, _) = contentBatchId(b, idCol)
-          if (!Segments.applied(s, ledgerPath, bid)) {
-            val admitted = graft.ext.DedupOps.hostBudgetAdmit(s,
-                ledgerPath, b, idCol, hostCol)
-              .persist(
-                org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              admitted.write
-                .mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(s"$outDir/batch=$bid")
-              graft.ext.DedupOps.appendToHostBudgetLedger(s,
-                ledgerPath, admitted, idCol, hostCol, bid)
-            } finally admitted.unpersist(blocking = false)
-          }
-        } finally b.unpersist(blocking = false)
-      }
-      .trigger(Trigger.AvailableNow())
+      idCol: String, hostCol: String): DataStreamWriter[Row] =
+    landing(spark, docsDir, schema, ledgerPath, outDir, idCol,
+        cacheOut = true) { (s, b) =>
+      val admitted = DedupOps.hostBudgetAdmit(s, ledgerPath, b, idCol,
+        hostCol)
+      Landing(admitted, DedupOps.appendToHostBudgetLedger(s, ledgerPath,
+        admitted, idCol, hostCol, _))
+    }
 
   /** Streamed DISTRIBUTION-DRIFT MONITOR (gated x211): each arriving
     * micro-batch is scored against the sketch's PRE-BATCH state —
@@ -436,37 +370,20 @@ object StreamIndex {
     * n_b grows monotonically, so ordering drift rows by n_b replays
     * arrival order. Same applied-record exactly-once discipline as
     * [[simhashAdmitWriter]]: a replayed batch would otherwise score
-    * ~0 against a state that already contains it. */
+    * ~0 against a state that already contains it. Batch identity
+    * hashes `idCol`, never `valueCol` (the [[histSketchAppendWriter]]
+    * rule): two batches with the same value multiset are two batches,
+    * and both score and append. */
   def histDriftMonitorWriter(spark: SparkSession, valuesDir: String,
       schema: StructType, sketchPath: String, outDir: String,
-      valueCol: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(valuesDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (bid, _) = contentBatchId(b, valueCol)
-          if (!Segments.applied(s, sketchPath, bid)) {
-            val (state, width) =
-              graft.ext.Corpus.histSketchState(s, sketchPath)
-            graft.ext.Corpus.histDriftFromCounters(
-                graft.ext.Corpus.histCounters(b, col(valueCol), width),
-                state)
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(s"$outDir/batch=$bid")
-            graft.ext.Corpus.appendToHistSketch(s, sketchPath, b,
-              col(valueCol), bid)
-          }
-        } finally b.unpersist(blocking = false)
-      }
-      .trigger(Trigger.AvailableNow())
+      valueCol: String, idCol: String): DataStreamWriter[Row] =
+    landing(spark, valuesDir, schema, sketchPath, outDir, idCol,
+        cacheOut = false) { (s, b) =>
+      val (state, width) = Corpus.histSketchState(s, sketchPath)
+      Landing(Corpus.histDriftFromCounters(
+          Corpus.histCounters(b, col(valueCol), width), state),
+        Corpus.appendToHistSketch(s, sketchPath, b, col(valueCol), _))
+    }
 
   /** Streamed MINHASH admission (gated x247): [[containmentAdmitWriter]]'s
     * greedy earlier-batch-wins loop on the near-dup Jaccard axis —
@@ -483,46 +400,19 @@ object StreamIndex {
   def minhashAdmitWriter(spark: SparkSession, docsDir: String,
       schema: StructType, ledgerPath: String, outDir: String,
       idCol: String, textCol: String, threshold: Double)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (bid, _) = contentBatchId(b, idCol)
-          if (!Segments.applied(s, ledgerPath, bid)) {
-            // the sig-reusing admit: the ledger append below lands the
-            // signatures the admission already computed instead of
-            // tokenizing the admitted docs a second time
-            val (admitted0, admittedSigs) = graft.ext.DedupOps
-              .minhashAdmitWithSigs(s, ledgerPath, b, idCol, textCol,
-                threshold)
-            val admitted = admitted0.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              admitted.write
-                .mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(s"$outDir/batch=$bid")
-              graft.ext.DedupOps.appendToMinhashIndexSigs(s, ledgerPath,
-                admittedSigs, bid)
-            } finally {
-              admitted.unpersist(blocking = false)
-              // release the admit's materialized signature + rejected
-              // frames (see simhashAdmitWriter) — the sigs frame is the
-              // one that still embeds the signature checkpoint
-              graft.ext.Checkpoints.release(admitted)
-              graft.ext.Checkpoints.release(admittedSigs)
-            }
-          }
-        } finally b.unpersist(blocking = false)
-      }
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    landing(spark, docsDir, schema, ledgerPath, outDir, idCol,
+        cacheOut = true) { (s, b) =>
+      // the sig-reusing admit: the ledger append lands the signatures
+      // the admission already computed instead of tokenizing the
+      // admitted docs a second time; the sigs frame is the one that
+      // still embeds the signature checkpoint, so it is released too
+      val (admitted, admittedSigs) = DedupOps.minhashAdmitWithSigs(s,
+        ledgerPath, b, idCol, textCol, threshold)
+      Landing(admitted,
+        DedupOps.appendToMinhashIndexSigs(s, ledgerPath, admittedSigs, _),
+        also = Seq(admittedSigs))
+    }
 
   /** Streamed PER-GROUP drift monitor (gated x246) — the per-source
     * alarm loop closed: each arriving micro-batch is KS-scored PER
@@ -540,34 +430,16 @@ object StreamIndex {
   def kllGroupDriftMonitorWriter(spark: SparkSession,
       valuesDir: String, schema: StructType, sketchPath: String,
       outDir: String, valueCol: String, idCol: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(valuesDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (bid, _) = contentBatchId(b, idCol)
-          if (!Segments.applied(s, sketchPath, bid)) {
-            val (state, k, groupCol) =
-              graft.ext.Corpus.groupedKllSketchState(s, sketchPath)
-            graft.ext.Corpus.kllKsDriftByGroupFromItems(
-                graft.ext.Corpus.kllItemsBy(b, col(valueCol),
-                  groupCol, k),
-                state)
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(s"$outDir/batch=$bid")
-            graft.ext.Corpus.appendToGroupedKllSketch(s, sketchPath,
-              b, col(valueCol), bid)
-          }
-        } finally b.unpersist(blocking = false)
-      }
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    landing(spark, valuesDir, schema, sketchPath, outDir, idCol,
+        cacheOut = false) { (s, b) =>
+      val (state, k, groupCol) = Corpus.groupedKllSketchState(s,
+        sketchPath)
+      Landing(Corpus.kllKsDriftByGroupFromItems(
+          Corpus.kllItemsBy(b, col(valueCol), groupCol, k), state),
+        Corpus.appendToGroupedKllSketch(s, sketchPath, b, col(valueCol),
+          _))
+    }
 
   /** Streamed maintenance of a persisted HISTOGRAM-QUANTILE sketch
     * (gated x194): arriving value files land each micro-batch's
@@ -590,24 +462,9 @@ object StreamIndex {
     * drop the second, breaking the sketch's exact-n contract. */
   def histSketchAppendWriter(spark: SparkSession, valuesDir: String,
       schema: StructType, sketchPath: String, valueCol: String,
-      idCol: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(valuesDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (bid, _) = contentBatchId(b, idCol)
-          graft.ext.Corpus.appendToHistSketch(s, sketchPath, b,
-            col(valueCol), bid)
-        } finally b.unpersist(blocking = false)
-      }
-      .trigger(Trigger.AvailableNow())
+      idCol: String): DataStreamWriter[Row] =
+    appending(spark, valuesDir, schema, idCol)((s, b, bid) =>
+      Corpus.appendToHistSketch(s, sketchPath, b, col(valueCol), bid))
 
   /** Streamed maintenance of a persisted COUNT-MIN sketch (gated
     * x228, completing the streamed-writer symmetry across the sketch
@@ -623,24 +480,9 @@ object StreamIndex {
     * distinct-by-content contract as [[histSketchAppendWriter]]. */
   def cmsSketchAppendWriter(spark: SparkSession, keysDir: String,
       schema: StructType, sketchPath: String, keyCol: String,
-      idCol: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(keysDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (bid, _) = contentBatchId(b, idCol)
-          graft.ext.Corpus.appendToCmsSketch(s, sketchPath, b,
-            col(keyCol), bid)
-        } finally b.unpersist(blocking = false)
-      }
-      .trigger(Trigger.AvailableNow())
+      idCol: String): DataStreamWriter[Row] =
+    appending(spark, keysDir, schema, idCol)((s, b, bid) =>
+      Corpus.appendToCmsSketch(s, sketchPath, b, col(keyCol), bid))
 
   /** Streamed maintenance of a persisted KLL quantile sketch (gated
     * x221): each micro-batch is sketched with the index's PERSISTED k
@@ -656,24 +498,9 @@ object StreamIndex {
     * silently break) — as [[histSketchAppendWriter]]. */
   def kllSketchAppendWriter(spark: SparkSession, valuesDir: String,
       schema: StructType, sketchPath: String, valueCol: String,
-      idCol: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(valuesDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (bid, _) = contentBatchId(b, idCol)
-          graft.ext.Corpus.appendToKllSketch(s, sketchPath, b,
-            col(valueCol), bid)
-        } finally b.unpersist(blocking = false)
-      }
-      .trigger(Trigger.AvailableNow())
+      idCol: String): DataStreamWriter[Row] =
+    appending(spark, valuesDir, schema, idCol)((s, b, bid) =>
+      Corpus.appendToKllSketch(s, sketchPath, b, col(valueCol), bid))
 
   /** Streamed maintenance of a persisted PER-GROUP KLL sketch (gated
     * x237): [[kllSketchAppendWriter]]'s contract with the micro-batch
@@ -686,25 +513,86 @@ object StreamIndex {
     * rule. */
   def kllByGroupSketchAppendWriter(spark: SparkSession,
       valuesDir: String, schema: StructType, sketchPath: String,
-      valueCol: String, idCol: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(valuesDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (bid, _) = contentBatchId(b, idCol)
-          graft.ext.Corpus.appendToGroupedKllSketch(s, sketchPath, b,
-            col(valueCol), bid)
-        } finally b.unpersist(blocking = false)
-      }
-      .trigger(Trigger.AvailableNow())
+      valueCol: String, idCol: String): DataStreamWriter[Row] =
+    appending(spark, valuesDir, schema, idCol)((s, b, bid) =>
+      Corpus.appendToGroupedKllSketch(s, sketchPath, b, col(valueCol),
+        bid))
+
+  /** One CDC micro-batch as its legs see it: the epoch-and-content
+    * batchId, the two op counts, the id column, the ids every leg
+    * tombstones and the upsert rows every leg re-lands. */
+  private final case class CdcBatch(bid: String, nDel: Long, nUp: Long,
+      idCol: String, ids: DataFrame, ups: DataFrame)
+
+  /** The CDC micro-batch identity + validation: ONE aggregate pays
+    * for the epoch-and-content batchId, both op counts, and the
+    * op-domain check. `valueCols` are the payload columns (text for
+    * the lexical index, the vector for the IVF index, BOTH for the
+    * dual writer — the id must cover every payload a replay could
+    * diverge on). See [[bm25CdcWriter]] for why the EPOCH is part of
+    * the id. */
+  private def cdcBatch(batch: DataFrame, epoch: Long, idCol: String,
+      opCol: String, valueCols: Seq[String]): CdcBatch = {
+    val key = concat_ws("|",
+      (Seq(col(idCol).cast("string"), col(opCol)) ++
+        valueCols.map(c => coalesce(col(c).cast("string"), lit("")))): _*)
+    val r = batch.agg(
+      count(lit(1)),
+      coalesce(sum(crc32(key)), lit(0L)),
+      coalesce(sum(pmod(xxhash64(key), lit(1073741789L))), lit(0L)),
+      count(when(col(opCol) === "delete", 1)),
+      count(when(col(opCol) === "upsert", 1))).head()
+    require(r.getLong(3) + r.getLong(4) == r.getLong(0),
+      s"cdc batch carries ops outside upsert|delete " +
+        s"(${r.getLong(0) - r.getLong(3) - r.getLong(4)} row(s))")
+    CdcBatch(s"cdc_e${epoch}_c${r.getLong(0)}_" +
+        java.lang.Long.toHexString(r.getLong(1)) + "_" +
+        java.lang.Long.toHexString(r.getLong(2)),
+      r.getLong(3), r.getLong(4), idCol, batch.select(col(idCol)),
+      batch.filter(col(opCol) === "upsert"))
+  }
+
+  /** [[landed]] for the CDC writers: `legs` apply each micro-batch's
+    * [[cdcBatch]]. */
+  private def cdcWriter(spark: SparkSession, dir: String,
+      schema: StructType, idCol: String, opCol: String,
+      valueCols: Seq[String], after: SparkSession => Unit)(
+      legs: (SparkSession, CdcBatch) => Unit): DataStreamWriter[Row] =
+    landed(spark, dir, schema, after)((s, b, epoch) =>
+      legs(s, cdcBatch(b, epoch, idCol, opCol, valueCols)))
+
+  /** The BM25 CDC leg. ONE tombstone pass for the whole batch: the
+    * delete ids and the upsert ids (the reindex delete-half) tombstone
+    * together — a pass per half would scan the live postings twice for
+    * a batch carrying both ops. Tombstones are (doc_id, seg)-scoped,
+    * the two id sets hit disjoint live rows, and correction segments
+    * are additive, so the combined pass nets the identical state. The
+    * delete (`<bid>_d`) COMMITS before the append (`reidx_<bid>`)
+    * starts (the reindexBm25Docs ordering): a crash between the two
+    * halves replays with the delete already applied — committing the
+    * append first would let the replayed delete resolve a snapshot
+    * that contains the fresh segment and tombstone the new versions. */
+  private def bm25Leg(s: SparkSession, path: String, c: CdcBatch,
+      textCol: String): Unit = {
+    if (c.nDel + c.nUp > 0)
+      TextAnalysis.deleteFromBm25Index(s, path, c.ids, c.idCol,
+        s"${c.bid}_d")
+    if (c.nUp > 0)
+      TextAnalysis.appendToBm25Index(s, path, c.ups, c.idCol, textCol,
+        s"reidx_${c.bid}", knownRows = Some(c.nUp))
+  }
+
+  /** The IVF CDC leg: [[bm25Leg]]'s one tombstone pass and
+    * delete-before-append order on the vector index. */
+  private def ivfLeg(s: SparkSession, path: String, c: CdcBatch,
+      vecCol: String): Unit = {
+    if (c.nDel + c.nUp > 0)
+      Similarity.deleteFromIvfIndex(s, path, c.ids, c.idCol,
+        s"${c.bid}_d")
+    if (c.nUp > 0)
+      Similarity.appendToIvfIndex(s, path, c.ups, c.idCol, vecCol,
+        s"reidx_${c.bid}")
+  }
 
   /** CDC INTO THE INDEX (gated x127): change batches of
     * (id, text, op ∈ upsert|delete) stream into a persisted
@@ -739,75 +627,10 @@ object StreamIndex {
   def bm25CdcWriter(spark: SparkSession, changesDir: String,
       schema: StructType, indexPath: String, idCol: String,
       textCol: String, opCol: String, compactEvery: Int = 0)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(changesDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (bid, nDel, nUp) = cdcBatchId(b, epoch, idCol, opCol,
-            Seq(textCol))
-          // ONE tombstone pass for the whole batch: the delete ids and
-          // the upsert ids (the reindex delete-half) tombstone together
-          // — previously each half paid its own live-postings scan, so
-          // a batch carrying both ops scanned the index twice.
-          // Tombstones are (doc_id, seg)-scoped, the two id sets hit
-          // disjoint live rows, and correction segments are additive,
-          // so the combined pass nets the identical state. The delete
-          // COMMITS before the append starts (the reindexBm25Docs
-          // ordering): a crash between the two halves replays with the
-          // delete already applied — committing the append first would
-          // let the replayed delete resolve a snapshot that contains
-          // the fresh segment and tombstone the new versions.
-          if (nDel + nUp > 0)
-            TextAnalysis.deleteFromBm25Index(s, indexPath,
-              b.select(col(idCol)), idCol, s"${bid}_d")
-          if (nUp > 0)
-            TextAnalysis.appendToBm25Index(s, indexPath,
-              b.filter(col(opCol) === "upsert"), idCol, textCol,
-              s"reidx_$bid", knownRows = Some(nUp))
-        } finally b.unpersist(blocking = false)
-        if (compactEvery > 0 &&
-          Segments.snapshot(s, indexPath).segs("postings").length >
-            compactEvery) {
-          TextAnalysis.compactBm25Index(s, indexPath)
-          TextAnalysis.vacuumBm25Index(s, indexPath, keepVersions = 2)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-
-  /** Shared CDC micro-batch identity + validation: ONE aggregate pays
-    * for the epoch-and-content batchId, both op counts, and the
-    * op-domain check. `valueCols` are the payload columns (text for
-    * the lexical index, the vector for the IVF index, BOTH for the
-    * dual writer — the id must cover every payload a replay could
-    * diverge on). See [[bm25CdcWriter]] for why the EPOCH is part of
-    * the id. */
-  private def cdcBatchId(batch: DataFrame, epoch: Long, idCol: String,
-      opCol: String, valueCols: Seq[String]): (String, Long, Long) = {
-    val key = concat_ws("|",
-      (Seq(col(idCol).cast("string"), col(opCol)) ++
-        valueCols.map(c => coalesce(col(c).cast("string"), lit("")))): _*)
-    val r = batch.agg(
-      count(lit(1)),
-      coalesce(sum(crc32(key)), lit(0L)),
-      coalesce(sum(pmod(xxhash64(key), lit(1073741789L))), lit(0L)),
-      count(when(col(opCol) === "delete", 1)),
-      count(when(col(opCol) === "upsert", 1))).head()
-    require(r.getLong(3) + r.getLong(4) == r.getLong(0),
-      s"cdc batch carries ops outside upsert|delete " +
-        s"(${r.getLong(0) - r.getLong(3) - r.getLong(4)} row(s))")
-    (s"cdc_e${epoch}_c${r.getLong(0)}_" +
-      java.lang.Long.toHexString(r.getLong(1)) + "_" +
-      java.lang.Long.toHexString(r.getLong(2)),
-      r.getLong(3), r.getLong(4))
-  }
+      : DataStreamWriter[Row] =
+    cdcWriter(spark, changesDir, schema, idCol, opCol, Seq(textCol),
+        bm25Compacting(indexPath, compactEvery))((s, c) =>
+      bm25Leg(s, indexPath, c, textCol))
 
   /** The vector twin of [[bm25CdcWriter]] (gated x128): change batches
     * of (id, vector, op ∈ upsert|delete) maintained into a persisted
@@ -825,40 +648,10 @@ object StreamIndex {
   def ivfCdcWriter(spark: SparkSession, changesDir: String,
       schema: StructType, indexPath: String, idCol: String,
       vecCol: String, opCol: String, compactEvery: Int = 0)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(changesDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (bid, nDel, nUp) = cdcBatchId(b, epoch, idCol, opCol,
-            Seq(vecCol))
-          // one tombstone pass for delete + reindex ids (halves the
-          // per-batch corpus scans), delete committed before the
-          // append starts — see bm25CdcWriter for the replay-safety
-          // ordering argument
-          if (nDel + nUp > 0)
-            Similarity.deleteFromIvfIndex(s, indexPath,
-              b.select(col(idCol)), idCol, s"${bid}_d")
-          if (nUp > 0)
-            Similarity.appendToIvfIndex(s, indexPath,
-              b.filter(col(opCol) === "upsert"), idCol, vecCol,
-              s"reidx_$bid")
-        } finally b.unpersist(blocking = false)
-        if (compactEvery > 0 &&
-          Segments.snapshot(s, indexPath).segs("corpus").length >
-            compactEvery) {
-          Similarity.compactIvfIndex(s, indexPath)
-          Similarity.vacuumIvfIndex(s, indexPath, keepVersions = 2)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
+      : DataStreamWriter[Row] =
+    cdcWriter(spark, changesDir, schema, idCol, opCol, Seq(vecCol),
+        ivfCompacting(indexPath, compactEvery))((s, c) =>
+      ivfLeg(s, indexPath, c, vecCol))
 
   /** The DUAL CDC applier (gated x182): one change stream of
     * (id, text, vector, op ∈ upsert|delete) — the re-embedding loop's
@@ -880,53 +673,33 @@ object StreamIndex {
   def dualCdcWriter(spark: SparkSession, changesDir: String,
       schema: StructType, bm25Path: String, ivfPath: String,
       pinRoot: String, idCol: String, textCol: String, vecCol: String,
-      opCol: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(changesDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (bid, nDel, nUp) = cdcBatchId(b, epoch, idCol, opCol,
-            Seq(textCol, vecCol))
-          // the two index LEGS are independent (different paths, no
-          // shared segment or manifest) and run CONCURRENTLY — the
-          // serial form doubled the per-batch wall for pure fixed
-          // per-job overhead. WITHIN each leg the combined tombstone
-          // pass still commits before the append starts (the
-          // bm25CdcWriter replay-safety ordering); only the pin commit
-          // below waits for both legs.
-          val ids = b.select(col(idCol))
-          val ups = b.filter(col(opCol) === "upsert")
-          Concurrently.all(Seq(
-            () => {
-              if (nDel + nUp > 0)
-                TextAnalysis.deleteFromBm25Index(s, bm25Path, ids,
-                  idCol, s"${bid}_d")
-              if (nUp > 0)
-                TextAnalysis.appendToBm25Index(s, bm25Path, ups, idCol,
-                  textCol, s"reidx_$bid", knownRows = Some(nUp))
-            },
-            () => {
-              if (nDel + nUp > 0)
-                Similarity.deleteFromIvfIndex(s, ivfPath, ids, idCol,
-                  s"${bid}_d")
-              if (nUp > 0)
-                Similarity.appendToIvfIndex(s, ivfPath, ups, idCol,
-                  vecCol, s"reidx_$bid")
-            }))
-        } finally b.unpersist(blocking = false)
-        // the pin commits LAST: readers stay on the previous coherent
-        // pair until BOTH legs carry this batch
-        graft.ext.Hybrid.commitPin(s, pinRoot, bm25Path, ivfPath)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
+      opCol: String): DataStreamWriter[Row] =
+    // the pin commits LAST: readers stay on the previous coherent pair
+    // until BOTH legs carry this batch
+    cdcWriter(spark, changesDir, schema, idCol, opCol,
+        Seq(textCol, vecCol),
+        s => Hybrid.commitPin(s, pinRoot, bm25Path, ivfPath)) { (s, c) =>
+      // the two index legs are independent (different paths, no shared
+      // segment or manifest) and run CONCURRENTLY — the serial form
+      // doubled the per-batch wall for pure fixed per-job overhead;
+      // within each leg the delete still commits before the append
+      Concurrently.all(Seq(() => bm25Leg(s, bm25Path, c, textCol),
+        () => ivfLeg(s, ivfPath, c, vecCol)))
+    }
+
+  /** The IVFPQ twin of [[ivfAppendWriter]] (gated x116): arriving
+    * embedding files are assigned + PQ-encoded against the index's
+    * frozen centroid/codebook generations and landed as their own
+    * codes segments — same content-derived batchId exactly-once
+    * contract, same inline compact+vacuum maintenance. */
+  def ivfPqAppendWriter(spark: SparkSession, vecsDir: String,
+      schema: StructType, indexPath: String, idCol: String,
+      vecCol: String, compactEvery: Int = 0): DataStreamWriter[Row] =
+    appending(spark, vecsDir, schema, idCol,
+        compacting(indexPath, "corpus", compactEvery)(
+          Similarity.compactIvfPqIndex,
+          Similarity.vacuumIvfPqIndex(_, _, _)))((s, b, bid) =>
+      Similarity.appendToIvfPqIndex(s, indexPath, b, idCol, vecCol, bid))
 
   /** The vector-side twin of [[bm25AppendWriter]] (gated x98): new
     * embedding files land, each micro-batch is assigned against the
@@ -935,62 +708,10 @@ object StreamIndex {
     * batches no-op on the manifest's `applied` record, so the stream
     * lands each delta exactly once. Same content-derived batchId and
     * same inline compact+vacuum maintenance contract. */
-  /** The IVFPQ twin of [[ivfAppendWriter]] (gated x116): arriving
-    * embedding files are assigned + PQ-encoded against the index's
-    * frozen centroid/codebook generations and landed as their own
-    * codes segments — same content-derived batchId exactly-once
-    * contract, same inline compact+vacuum maintenance. */
-  def ivfPqAppendWriter(spark: SparkSession, vecsDir: String,
-      schema: StructType, indexPath: String, idCol: String,
-      vecCol: String, compactEvery: Int = 0)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(vecsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          Similarity.appendToIvfPqIndex(s, indexPath, b, idCol, vecCol,
-            batchId = contentBatchId(b, idCol)._1)
-        } finally b.unpersist(blocking = false)
-        if (compactEvery > 0 &&
-          Segments.snapshot(s, indexPath).segs("corpus").length >
-            compactEvery) {
-          Similarity.compactIvfPqIndex(s, indexPath)
-          Similarity.vacuumIvfPqIndex(s, indexPath, keepVersions = 2)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-
   def ivfAppendWriter(spark: SparkSession, vecsDir: String,
       schema: StructType, indexPath: String, idCol: String,
-      vecCol: String, compactEvery: Int = 0)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(vecsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          Similarity.appendToIvfIndex(s, indexPath, b, idCol, vecCol,
-            batchId = contentBatchId(b, idCol)._1)
-        } finally b.unpersist(blocking = false)
-        if (compactEvery > 0 &&
-          Segments.snapshot(s, indexPath).segs("corpus").length >
-            compactEvery) {
-          Similarity.compactIvfIndex(s, indexPath)
-          Similarity.vacuumIvfIndex(s, indexPath, keepVersions = 2)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
+      vecCol: String, compactEvery: Int = 0): DataStreamWriter[Row] =
+    appending(spark, vecsDir, schema, idCol,
+        ivfCompacting(indexPath, compactEvery))((s, b, bid) =>
+      Similarity.appendToIvfIndex(s, indexPath, b, idCol, vecCol, bid))
 }

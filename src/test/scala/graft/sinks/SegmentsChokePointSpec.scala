@@ -42,4 +42,17 @@ class SegmentsChokePointSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"validate ids with Segments.checkId: $offenders")
   }
+
+  test("stream writers share one landed-file driver; ext/ names the " +
+      "tombstone table only through Segments.Deletes") {
+    val stream = new String(Files.readAllBytes(
+      main.resolve("streaming/StreamIndex.scala")), "UTF-8")
+    assert("\"maxFilesPerTrigger\"".r.findAllMatchIn(stream).length == 1,
+      "StreamIndex writers must run on its one landed-file driver")
+    val offenders = sources(main.resolve("ext")).collect {
+      case (p, text) if text.contains("\"deletes\"") => p.toString
+    }
+    assert(offenders.isEmpty,
+      s"name the tombstone table with Segments.Deletes: $offenders")
+  }
 }

@@ -2,7 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
 import graft.ext.TextAnalysis
@@ -294,8 +297,10 @@ class StreamIndexSpec extends SparkSpec {
     import graft.ext.Corpus
     val base = Files.createTempDirectory("graft-driftmon-").toString
     val baseVals = Seq(10L, 20L, 30L, 40L).toDF("v")
-    val batch1 = Seq(10L, 20L).toDF("v")            // same-ish mix
-    val batch2 = Seq(500L, 510L, 520L).toDF("v")    // shifted mix
+    val batch1 = Seq((1L, 10L), (2L, 20L))          // same-ish mix
+      .toDF("doc_id", "v")
+    val batch2 = Seq((3L, 500L), (4L, 510L), (5L, 520L)) // shifted
+      .toDF("doc_id", "v")
     Corpus.saveHistSketch(baseVals, col("v"), s"$base/idx",
       bucketWidth = 10L)
     graft.SparkEntry.landOrdered(spark, Seq(batch1, batch2),
@@ -303,7 +308,7 @@ class StreamIndexSpec extends SparkSpec {
     val schema = spark.read.parquet(s"$base/vals").schema
     def run(ckpt: String): Unit = {
       val q = StreamIndex.histDriftMonitorWriter(spark, s"$base/vals",
-          schema, s"$base/idx", s"$base/out", "v")
+          schema, s"$base/idx", s"$base/out", "v", "doc_id")
         .option("checkpointLocation", s"$base/$ckpt").start()
       q.awaitTermination()
     }
@@ -315,7 +320,7 @@ class StreamIndexSpec extends SparkSpec {
     val want1 = Corpus.histDrift(batch1, baseVals, col("v"), 10L)
       .as[(Long, Long, Long, Double)].head()
     val want2 = Corpus.histDrift(batch2,
-        baseVals.unionByName(batch1), col("v"), 10L)
+        baseVals.unionByName(batch1.select("v")), col("v"), 10L)
       .as[(Long, Long, Long, Double)].head()
     assert(got == Set(want1, want2),
       s"streamed drift rows diverged: got $got, want ($want1, $want2)")
@@ -327,5 +332,196 @@ class StreamIndexSpec extends SparkSpec {
     run("ckpt2")
     assert(rows() == got)
     assert(spark.read.parquet(s"$base/idx/regs/*").count() == v1)
+  }
+
+  test("histDriftMonitorWriter: batch identity is the id column — two " +
+      "batches with the same value multiset both score and append") {
+    import graft.ext.Corpus
+    val base = Files.createTempDirectory("graft-driftid-").toString
+    Corpus.saveHistSketch(Seq(10L, 20L, 30L, 40L).toDF("v"), col("v"),
+      s"$base/idx", bucketWidth = 10L)
+    val applied0 = IndexManifest.latest(fs, s"$base/idx").get.applied
+    graft.SparkEntry.landOrdered(spark, Seq(
+      Seq((1L, 500L), (2L, 510L)).toDF("doc_id", "v"),
+      Seq((3L, 500L), (4L, 510L)).toDF("doc_id", "v")), s"$base/vals")
+    val schema = spark.read.parquet(s"$base/vals").schema
+    StreamIndex.histDriftMonitorWriter(spark, s"$base/vals", schema,
+        s"$base/idx", s"$base/out", "v", "doc_id")
+      .option("checkpointLocation", s"$base/ckpt").start()
+      .awaitTermination()
+    val got = spark.read.parquet(s"$base/out").select("n_a", "n_b")
+      .as[(Long, Long)].collect().toSet
+    // the second batch scores against base + the first batch
+    assert(got == Set((2L, 4L), (2L, 6L)), s"got $got")
+    assert(IndexManifest.latest(fs, s"$base/idx").get.applied.length ==
+      applied0.length + 2, "both batches must append")
+  }
+
+  /** One writer of the replay table: `prepare(base)` builds the target
+    * under `base` and lands two batches under `base/in`; `writer`
+    * starts the stream over them; `roots` are the manifests a replay
+    * must leave untouched; `out` reads the writer's output rows. */
+  private case class Replay(name: String, prepare: String => Unit,
+      writer: (String, StructType) => DataStreamWriter[Row],
+      roots: String => Seq[String], out: String => Set[Row])
+
+  private lazy val embs = Tables.load(spark, Sf0001, "embeddings")
+
+  private def landed(base: String, batches: DataFrame*): Unit =
+    graft.SparkEntry.landOrdered(spark, batches, s"$base/in")
+
+  private def idx(base: String) = Seq(s"$base/idx")
+
+  private def outRows(base: String) =
+    spark.read.parquet(s"$base/out").collect().toSet
+
+  private lazy val replays = {
+    import graft.ext.{Corpus, DedupOps, Hybrid, Similarity}
+    val q = Seq(100000L, 500000L, 900000L)
+    val idVals = Seq((1L, 10L), (2L, 30L), (3L, 30L))
+      .toDF("id", "v")
+    Seq(
+      Replay("hllSketchAppendWriter", b => {
+          Corpus.saveHllSketch(Seq(1L, 2L).toDF("k"), col("k"), s"$b/idx")
+          landed(b, Seq(3L, 4L).toDF("k"), Seq(5L, 6L, 7L).toDF("k"))
+        },
+        (b, sch) => StreamIndex.hllSketchAppendWriter(spark, s"$b/in",
+          sch, s"$b/idx", "k"),
+        idx, b => Corpus.queryHllSketch(spark, s"$b/idx").collect().toSet),
+      Replay("histSketchAppendWriter", b => {
+          Corpus.saveHistSketch(Seq(10L, 20L).toDF("v"), col("v"),
+            s"$b/idx", bucketWidth = 10L)
+          landed(b, idVals.filter(col("id") < 3),
+            idVals.filter(col("id") === 3))
+        },
+        (b, sch) => StreamIndex.histSketchAppendWriter(spark, s"$b/in",
+          sch, s"$b/idx", "v", "id"),
+        idx, b => Corpus.queryHistSketch(spark, s"$b/idx", q)
+          .collect().toSet),
+      Replay("cmsSketchAppendWriter", b => {
+          Corpus.saveCmsSketch(Seq(7L, 8L).toDF("v"), col("v"), s"$b/idx",
+            depth = 4, width = 64)
+          landed(b, idVals.filter(col("id") < 3),
+            idVals.filter(col("id") === 3))
+        },
+        (b, sch) => StreamIndex.cmsSketchAppendWriter(spark, s"$b/in",
+          sch, s"$b/idx", "v", "id"),
+        idx, b => Corpus.queryCmsSketch(spark, s"$b/idx",
+          Seq(7L, 10L, 30L).toDF("v"), "v").collect().toSet),
+      Replay("kllSketchAppendWriter", b => {
+          Corpus.saveKllSketch(Seq(10L, 20L).toDF("v"), col("v"),
+            s"$b/idx", k = 64)
+          landed(b, idVals.filter(col("id") < 3),
+            idVals.filter(col("id") === 3))
+        },
+        (b, sch) => StreamIndex.kllSketchAppendWriter(spark, s"$b/in",
+          sch, s"$b/idx", "v", "id"),
+        idx, b => Corpus.queryKllSketch(spark, s"$b/idx", q)
+          .collect().toSet),
+      Replay("kllByGroupSketchAppendWriter", b => {
+          Corpus.saveGroupedKllSketch(
+            Seq(("en", 0L, 10L), ("fr", 0L, 20L)).toDF("lang", "id", "v"),
+            col("v"), "lang", s"$b/idx", k = 64)
+          landed(b,
+            Seq(("en", 1L, 12L), ("fr", 2L, 31L)).toDF("lang", "id", "v"),
+            Seq(("en", 3L, 100L)).toDF("lang", "id", "v"))
+        },
+        (b, sch) => StreamIndex.kllByGroupSketchAppendWriter(spark,
+          s"$b/in", sch, s"$b/idx", "v", "id"),
+        idx, b => Corpus.queryGroupedKllSketch(spark, s"$b/idx", q)
+          .collect().toSet),
+      // batch 1: 10 repeats the base (rejected), 11 is novel; batch 2:
+      // 20 sits inside batch-1 admission 11 (rejected), 21 is novel
+      Replay("containmentSetAdmitWriter", b => {
+          DedupOps.saveContainmentSetIndex(
+            Seq((0L, Seq(1L, 2L, 3L))).toDF("doc_id", "fset"), "doc_id",
+            "fset", s"$b/idx")
+          landed(b,
+            Seq((10L, Seq(1L, 2L, 3L)), (11L, Seq(7L, 8L, 9L)))
+              .toDF("doc_id", "fset"),
+            Seq((20L, Seq(7L, 8L)), (21L, Seq(40L, 41L)))
+              .toDF("doc_id", "fset"))
+        },
+        (b, sch) => StreamIndex.containmentSetAdmitWriter(spark,
+          s"$b/in", sch, s"$b/idx", s"$b/out", "doc_id", "fset",
+          threshold = 0.5),
+        idx, outRows),
+      Replay("cdcChunkDedupWriter", b => {
+          DedupOps.saveCdcChunkLedger(
+            Seq((0L, "a b c d e f g h")).toDF("doc_id", "text"),
+            "doc_id", "text", s"$b/idx", avgWords = 2, salt = "replay")
+          landed(b,
+            Seq((10L, "x a b c d e f g h y")).toDF("doc_id", "text"),
+            Seq((20L, "p q x a b c d e f g h y r")).toDF("doc_id", "text"))
+        },
+        (b, sch) => StreamIndex.cdcChunkDedupWriter(spark, s"$b/in",
+          sch, s"$b/idx", s"$b/out", "doc_id", "text"),
+        idx, outRows),
+      Replay("ivfPqAppendWriter", b => {
+          Similarity.saveIvfPqIndex(embs.filter(col("vec_id") < 300),
+            "vec_id", "embedding", s"$b/idx", kCentroids = 4,
+            coarseIters = 2, m = 4, ks = 8, pqIters = 2)
+          landed(b,
+            embs.filter(col("vec_id") >= 300 && col("vec_id") < 400),
+            embs.filter(col("vec_id") >= 400))
+        },
+        (b, sch) => StreamIndex.ivfPqAppendWriter(spark, s"$b/in", sch,
+          s"$b/idx", "vec_id", "embedding"),
+        idx, b => Similarity.queryIvfPqIndex(spark, s"$b/idx",
+            embs.filter(col("vec_id") < 4), "vec_id", "embedding", k = 5)
+          .collect().toSet),
+      // x182's shape: batch 1 upserts new docs, batch 2 deletes old ones
+      Replay("dualCdcWriter", b => {
+          TextAnalysis.saveBm25Index(docs.filter(col("doc_id") < 300),
+            "doc_id", "text", s"$b/bm25")
+          Similarity.saveIvfIndex(embs.filter(col("vec_id") < 300),
+            "vec_id", "embedding", s"$b/ivf", kCentroids = 4, iters = 2)
+          Hybrid.commitPin(spark, s"$b/pins", s"$b/bm25", s"$b/ivf")
+          val j = docs.join(embs, docs("doc_id") === embs("vec_id"))
+            .select(docs("doc_id"), col("text"),
+              col("embedding").cast("array<double>").as("embedding"))
+          landed(b,
+            j.filter(col("doc_id") >= 300 && col("doc_id") < 350)
+              .withColumn("op", lit("upsert")),
+            j.filter(col("doc_id") % 9 === 4 && col("doc_id") < 300)
+              .select(col("doc_id"), lit(null).cast("string").as("text"),
+                lit(null).cast("array<double>").as("embedding"),
+                lit("delete").as("op")))
+        },
+        (b, sch) => StreamIndex.dualCdcWriter(spark, s"$b/in", sch,
+          s"$b/bm25", s"$b/ivf", s"$b/pins", "doc_id", "text",
+          "embedding", "op"),
+        b => Seq(s"$b/bm25", s"$b/ivf"),
+        b => Hybrid.servePinned(spark, s"$b/pins", s"$b/bm25", terms, 0L,
+            s"$b/ivf", embs.filter(col("vec_id") === 0), "vec_id",
+            "embedding", kLex = 10, kVec = 5, k = 10)
+          .collect().toSet))
+  }
+
+  test("replay table: every writer lands two batches once, and a " +
+      "fresh-checkpoint replay leaves manifests and output unchanged") {
+    replays.foreach { r =>
+      withClue(s"${r.name}: ") {
+        val base = Files.createTempDirectory("graft-replay-").toString
+        r.prepare(base)
+        val schema = spark.read.parquet(s"$base/in").schema
+        def run(ckpt: String): Unit = r.writer(base, schema)
+          .option("checkpointLocation", s"$base/$ckpt").start()
+          .awaitTermination()
+        def snaps() = r.roots(base).map { p =>
+          val s = IndexManifest.latest(fs, p).get
+          (s.version, s.applied)
+        }
+        val before = snaps()
+        run("ckpt1")
+        val landedOnce = snaps()
+        assert(landedOnce.zip(before).forall { case (a, b0) =>
+          a._2.length > b0._2.length }, "the batches must land")
+        val out = r.out(base)
+        run("ckpt2")
+        assert(snaps() == landedOnce, "replay must not commit")
+        assert(r.out(base) == out, "replay must not change the output")
+      }
+    }
   }
 }
