@@ -36,7 +36,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   * it). [[release]] is safe to call broadly: it only frees
   * checkpoints THIS module created and not yet released — a
   * caller-made `Dataset.localCheckpoint()` embedded in the same plan
-  * survives (CheckpointHygieneSpec pins it).
+  * survives (CheckpointHygieneSpec pins it). One cluster op releases
+  * its own entry checkpoint: `dedupClustersStar`'s driver finish (at
+  * most 2¹⁸ pairs) collects it, so its local result holds no
+  * checkpoint and the caller's release is a no-op.
   */
 object Checkpoints {
 

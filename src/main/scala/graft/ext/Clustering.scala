@@ -83,7 +83,7 @@ object Clustering {
     * Spark jobs at CALL time (same plan-freezing behavior as
     * `ngramJaccardPairs`/`heavyTerms`) — call when the input is settled.
     * The projected (id, vector) frame is cached for the iteration jobs
-    * and released before returning.
+    * and released on every exit, a thrown precondition included.
     *
     * `trainSample`: optional [[Corpus.deterministicSample]] hex
     * threshold applied to the TRAINING scan only (md5 of the id — same
@@ -107,38 +107,40 @@ object Clustering {
     if (iters > 0)
       vecs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // seeds: the k lowest ids — deterministic, engine-portable init
-    var centroids: Seq[(Long, Seq[Double])] = vecs
-      .orderBy(col(idCol).asc).limit(k)
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      .toSeq
-    require(centroids.nonEmpty,
-      s"kmeansCentroids: input has no rows to seed from")
-    val dim = centroids.head._2.length
-    require(centroids.forall(_._2.length == dim),
-      "ragged embedding column (seed rows disagree on dimensionality)")
-
-    for (_ <- 0 until iters) {
-      // one shuffle of (cluster, pos) cells — k*dim per partition after
-      // the map-side partial agg, regardless of row count
-      val cells = assignTo(vecs, centroids)
-        .select(col("cluster"), posexplode(col("_v")).as(Seq("_p", "_x")))
-        .groupBy(col("cluster"), col("_p"))
-        .agg(avg(col("_x")).as("_m"))
+    // the iteration cache is released on every exit — a failed seed
+    // check or iteration job included; later consumers re-read the source
+    try {
+      // seeds: the k lowest ids — deterministic, engine-portable init
+      var centroids: Seq[(Long, Seq[Double])] = vecs
+        .orderBy(col(idCol).asc).limit(k)
         .collect()
-      centroids = cells.groupBy(_.getLong(0)).toSeq
-        .map { case (cl, rows) =>
-          val m = new Array[Double](dim)
-          rows.foreach(r => m(r.getInt(1)) = r.getDouble(2))
-          (cl, m.toSeq)
-        }
-        .sortBy(_._1)
-    }
+        .map(r => (r.getLong(0), r.getSeq[Double](1)))
+        .toSeq
+      require(centroids.nonEmpty,
+        s"kmeansCentroids: input has no rows to seed from")
+      val dim = centroids.head._2.length
+      require(centroids.forall(_._2.length == dim),
+        "ragged embedding column (seed rows disagree on dimensionality)")
 
-    // release the iteration cache; later consumers re-read the source
-    if (iters > 0) vecs.unpersist(blocking = false)
-    centroids
+      for (_ <- 0 until iters) {
+        // one shuffle of (cluster, pos) cells — k*dim per partition
+        // after the map-side partial agg, regardless of row count
+        val cells = assignTo(vecs, centroids)
+          .select(col("cluster"),
+            posexplode(col("_v")).as(Seq("_p", "_x")))
+          .groupBy(col("cluster"), col("_p"))
+          .agg(avg(col("_x")).as("_m"))
+          .collect()
+        centroids = cells.groupBy(_.getLong(0)).toSeq
+          .map { case (cl, rows) =>
+            val m = new Array[Double](dim)
+            rows.foreach(r => m(r.getInt(1)) = r.getDouble(2))
+            (cl, m.toSeq)
+          }
+          .sortBy(_._1)
+      }
+      centroids
+    } finally if (iters > 0) vecs.unpersist(blocking = false)
   }
 
   /** Assign every row to its nearest centroid after `iters` Lloyd

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -898,20 +898,60 @@ object DedupOps {
     * and already point at it; a satellite's only smaller neighbor is
     * its center), so stopping there returns the identical edge set one
     * round EARLIER than the old unchanged-signature probe, with no
-    * 2⁻⁶⁴ pseudo-convergence caveat and no separate exit assertion. */
+    * 2⁻⁶⁴ pseudo-convergence caveat and no separate exit assertion.
+    *
+    * Driver finish: the round loop pays ~8 Spark jobs per round whatever
+    * the graph's size, so a pair set of at most `StarDriverPairs` (2¹⁸
+    * pairs, ≤ 4 MB of collected ids) is collected and labelled by an
+    * array union-find on the driver instead — the same rows, since the
+    * component-min label is unique. On that path the result is a local
+    * frame and holds NO module checkpoint (the pair projection is
+    * released after the collect). Above the constant the rounds run as
+    * described, and the result retains the pair projection and the
+    * converged edge set, which the caller releases. */
   def dedupClustersStar(pairs: DataFrame, aCol: String, bCol: String,
-      maxIters: Int = 30, reliable: Boolean = false): DataFrame = {
-    def mat(df: DataFrame): DataFrame = Checkpoints.materialize(df, reliable)
+      maxIters: Int = 30, reliable: Boolean = false): DataFrame =
+    dedupClustersStar(pairs, aCol, bCol, maxIters, reliable,
+      StarDriverPairs)
+
+  /** Largest pair count [[dedupClustersStar]] finishes on the driver. */
+  private val StarDriverPairs = 1L << 18
+
+  private val StarLabelSchema = StructType(Seq(
+    StructField("id", LongType), StructField("cluster_id", LongType)))
+
+  /** [[dedupClustersStar]] with the driver-finish budget exposed, so
+    * tests can force the distributed loop (`driverPairs = 0`). */
+  private[graft] def dedupClustersStar(pairs: DataFrame, aCol: String,
+      bCol: String, maxIters: Int, reliable: Boolean, driverPairs: Long)
+      : DataFrame = {
     // Materialize the 16-byte edge projection ONCE: the pair-generation
     // plan is referenced twice — the initial edge set here and the
     // trailing self-loop-only node sweep the returned frame embeds —
     // and it is typically the expensive part (banded LSH joins, codec
     // scans). Without this the FINAL plan re-runs the entire pair
     // pipeline when the caller executes it (measured: the x257 frame
-    // re-decoded every GIF ~12×). The checkpoint's lifetime belongs to
-    // the caller, like the returned labels frame's own blocks.
-    val raw = mat(pairs.select(col(aCol).cast(LongType).as("u"),
-      col(bCol).cast(LongType).as("v")))
+    // re-decoded every GIF ~12×). The count that picks the path rides
+    // on the materializing job. On the round path the checkpoint's
+    // lifetime belongs to the caller, like the returned labels frame's
+    // own blocks.
+    val (raw, nPairs) = Checkpoints.materializeCount(
+      pairs.select(col(aCol).cast(LongType).as("u"),
+        col(bCol).cast(LongType).as("v")), reliable)
+    if (nPairs > driverPairs) starRounds(raw, maxIters, reliable)
+    else {
+      val collected = raw.collect()
+      Checkpoints.release(raw)
+      raw.sparkSession.createDataFrame(
+        java.util.Arrays.asList(componentMins(collected): _*),
+        StarLabelSchema)
+    }
+  }
+
+  /** The distributed large-star / small-star rounds over the
+    * materialized (u, v) pair projection `raw`. */
+  private def starRounds(raw: DataFrame, maxIters: Int, reliable: Boolean)
+      : DataFrame = {
     // the convergence probe, folded into each round's materializing
     // action: a node violates the star-forest shape when it appears as
     // both a center (u-side) and a satellite (v-side), OR as a
@@ -992,6 +1032,41 @@ object DedupOps {
     nodes.join(labeled, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("cluster_id"), col("id")).as("cluster_id"))
+  }
+
+  /** The driver finish of [[dedupClustersStar]]: one (id, component
+    * min) row per distinct non-null endpoint, plus (null, null) when
+    * any endpoint is null — the rows the distributed path's `nodes`
+    * left join yields (a null endpoint adds no edge, so its partner
+    * labels itself unless linked elsewhere). Ids are sorted and
+    * deduplicated into dense indexes, so index order is id order and
+    * union by smaller root index keeps every root its component's min;
+    * `find` compresses paths. */
+  private def componentMins(pairs: Array[Row]): Array[Row] = {
+    val ids = pairs
+      .flatMap(r => Iterator(0, 1).filterNot(r.isNullAt).map(r.getLong))
+      .sorted.distinct
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) r = parent(r)
+      var j = i
+      while (parent(j) != r) { val n = parent(j); parent(j) = r; j = n }
+      r
+    }
+    def root(r: Row, i: Int): Int =
+      find(java.util.Arrays.binarySearch(ids, r.getLong(i)))
+    pairs.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val (a, b) = (root(r, 0), root(r, 1))
+        if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      }
+    }
+    val labels = Array.tabulate[Row](ids.length)(i =>
+      Row(ids(i), ids(find(i))))
+    if (pairs.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      labels :+ Row(null, null)
+    else labels
   }
 
   /** Component labels for a rep-collapsed near-dup graph WITHOUT

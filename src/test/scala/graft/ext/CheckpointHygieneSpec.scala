@@ -21,6 +21,19 @@ class CheckpointHygieneSpec extends SparkSpec {
     spark.sparkContext.getPersistentRDDs.size
   }
 
+  /** The exact accumulator counts below hold only when every task runs
+    * once: plain `local[N]` makes one attempt per task, and speculation
+    * would launch second copies. */
+  private def assertTasksRunOnce(): Unit = {
+    val sc = spark.sparkContext
+    val oneAttempt = """local(\[[0-9*]+\])?""".r.matches(sc.master) ||
+      sc.getConf.getInt("spark.task.maxFailures", 4) == 1
+    assert(oneAttempt, "exact accumulator counts assume no task " +
+      s"retries, but master ${sc.master} retries failed tasks")
+    assert(!sc.getConf.getBoolean("spark.speculation", false),
+      "exact accumulator counts assume no speculative task copies")
+  }
+
   private def clearAll(): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
@@ -59,7 +72,9 @@ class CheckpointHygieneSpec extends SparkSpec {
     clearAll()
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
       .toDF("a", "b")
-    val labels = DedupOps.dedupClustersStar(pairs, "a", "b")
+    // budget 0 forces the distributed rounds on this small input
+    val labels = DedupOps.dedupClustersStar(pairs, "a", "b", 30,
+      reliable = false, driverPairs = 0L)
     // the returned plan reads two checkpoints: the materialized pair
     // projection (the trailing self-loop-only node sweep needs it —
     // without the checkpoint that sweep re-ran the whole pair-
@@ -69,10 +84,18 @@ class CheckpointHygieneSpec extends SparkSpec {
         s"got $persistedCount")
     assert(labels.count() == 6L)
     clearAll()
+    // the driver finish collects the pair projection and releases it:
+    // the returned local frame holds no module checkpoint
+    val local = DedupOps.dedupClustersStar(pairs, "a", "b")
+    assert(persistedCount == 0,
+      s"expected no persisted RDD on the driver path, got $persistedCount")
+    assert(local.count() == 6L)
+    clearAll()
   }
 
   test("dedupClustersStar evaluates the pair-generation plan exactly " +
       "once — executing the returned labels never re-runs it") {
+    assertTasksRunOnce()
     clearAll()
     val evals = spark.sparkContext.longAccumulator("pair-evals")
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
@@ -93,6 +116,7 @@ class CheckpointHygieneSpec extends SparkSpec {
 
   test("pageRank evaluates the edge-source plan exactly once — the " +
       "out-weight agg, eo join, and node set derive from one checkpoint") {
+    assertTasksRunOnce()
     clearAll()
     val evals = spark.sparkContext.longAccumulator("edge-evals")
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (2L, 1L))

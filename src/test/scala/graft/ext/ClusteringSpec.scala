@@ -90,6 +90,17 @@ class ClusteringSpec extends SparkSpec {
         "vec_id", "embedding", 3, 1))
   }
 
+  test("kmeansCentroids releases its iteration cache when it throws") {
+    spark.catalog.clearCache()
+    val e = intercept[IllegalArgumentException] {
+      Clustering.kmeansCentroids(blobs.filter($"vec_id" < 0L),
+        "vec_id", "embedding", k = 3, iters = 2)
+    }
+    assert(e.getMessage.contains("no rows to seed from"))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the projected frame stayed cached after the failed seed check")
+  }
+
   test("clusterQuality: populations sum to n, inertia sums to the " +
       "assignment SSE, well-separated blobs score silhouette near 1") {
     val q = Clustering.clusterQuality(blobs, "vec_id", "embedding",

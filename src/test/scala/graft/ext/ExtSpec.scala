@@ -2400,12 +2400,16 @@ class ExtSpec extends SparkSpec {
     val chain = (100L until 139L).map(i => (i + 1, i))
     val pairs = (chain ++ Seq((1L, 2L), (2L, 3L), (50L, 50L)))
       .toDF("a", "b")
-    val got = DedupOps.dedupClustersStar(pairs, "a", "b", maxIters = 12)
-      .as[(Long, Long)].collect().toMap
-    assert((100L to 139L).forall(got(_) == 100L))
-    assert(got(1L) == 1L && got(2L) == 1L && got(3L) == 1L)
-    assert(got(50L) == 50L) // self-loop-only node keeps its own label
-    assert(got.size == 44)
+    // the driver finish and the forced round loop
+    for (budget <- Seq(Long.MaxValue, 0L)) {
+      val got = DedupOps.dedupClustersStar(pairs, "a", "b", maxIters = 12,
+        reliable = false, driverPairs = budget)
+        .as[(Long, Long)].collect().toMap
+      assert((100L to 139L).forall(got(_) == 100L), s"budget $budget")
+      assert(got(1L) == 1L && got(2L) == 1L && got(3L) == 1L)
+      assert(got(50L) == 50L) // self-loop-only node keeps its own label
+      assert(got.size == 44)
+    }
   }
 
   test("dedupClustersStar: a two-center satellite is not treated as " +
@@ -2414,9 +2418,33 @@ class ExtSpec extends SparkSpec {
     // sets but are NOT a star forest (3 hangs off two centers) — the
     // convergence probe must keep iterating until {(1,2),(1,3)}
     val pairs = Seq((1L, 3L), (2L, 3L)).toDF("a", "b")
-    val got = DedupOps.dedupClustersStar(pairs, "a", "b")
-      .as[(Long, Long)].collect().toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+    for (budget <- Seq(Long.MaxValue, 0L)) {
+      val got = DedupOps.dedupClustersStar(pairs, "a", "b", 30,
+        reliable = false, driverPairs = budget)
+        .as[(Long, Long)].collect().toMap
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L), s"budget $budget")
+    }
+  }
+
+  test("dedupClustersStar: a null id and a self-loop-only id get the " +
+      "same rows on the driver finish and the round loop") {
+    // (null, 5): a null endpoint adds no edge, so 5 labels itself and
+    // the null id gets the (null, null) row of the node sweep's left
+    // join; (7, 7) is self-loop-only; {1, 2, 3} is one component
+    val pairs = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (3L, 2L), (null, 5L), (7L, 7L), (null, null))
+      .toDF("a", "b")
+    val want = Set[(java.lang.Long, java.lang.Long)](
+      (1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (7L, 7L), (null, null))
+    for (budget <- Seq(Long.MaxValue, 0L)) {
+      val got = DedupOps.dedupClustersStar(pairs, "a", "b", 30,
+        reliable = false, driverPairs = budget)
+      assert(got.schema.map(f => (f.name, f.dataType)) ==
+        Seq("id", "cluster_id").map((_, org.apache.spark.sql.types.LongType)))
+      val rows = got.as[(java.lang.Long, java.lang.Long)].collect()
+      assert(rows.length == want.size && rows.toSet == want,
+        s"budget $budget: ${rows.toSeq}")
+    }
   }
 
   test("containmentPairs: detects a small doc quoted inside a large " +

@@ -254,9 +254,13 @@ object EngineProps extends Properties("graft") {
         val df = edges.toDF("a", "b")
         val want = graft.ext.DedupOps.dedupClusters(df, "a", "b")
           .as[(Long, Long)].collect().toMap
-        val got = graft.ext.DedupOps.dedupClustersStar(df, "a", "b")
+        // the driver finish (default budget) and the forced round loop
+        val driver = graft.ext.DedupOps.dedupClustersStar(df, "a", "b")
           .as[(Long, Long)].collect().toMap
-        got == want
+        val rounds = graft.ext.DedupOps.dedupClustersStar(df, "a", "b",
+          30, reliable = false, driverPairs = 0L)
+          .as[(Long, Long)].collect().toMap
+        driver == want && rounds == want
       }
     }
 
