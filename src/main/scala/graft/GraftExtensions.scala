@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{BloomExprs, FreqAgg, ImageExprs, StringExprs, TextHashExprs, TopKAgg, VectorExprs}
+import graft.functions.{BloomExprs, DecimalExprs, FreqAgg, ImageExprs, KllAgg, StringExprs, TextHashExprs, TopKAgg, VectorExprs}
 
 /** SparkSessionExtensions entry point: registers the engine's native
   * functions so any session built with
@@ -54,6 +54,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "graft_topk_by_score(score, id, k) - bounded-heap top-k aggregate",
     "graft_misra_gries" ->
       "graft_misra_gries(item, k) - Misra-Gries frequent-item candidates",
+    "graft_kll_sketch" ->
+      "graft_kll_sketch(value, k) - KLL quantile sketch (weighted items)",
+    "graft_dec_quantize" ->
+      ("graft_dec_quantize(x, precision, scale) - double to DECIMAL from " +
+        "its shortest decimal representation"),
     "graft_bloom_agg" ->
       "graft_bloom_agg(xxhash64(key), items, bits) - Bloom filter build",
     "graft_bloom_contains" ->
@@ -65,7 +70,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
     (TextHashExprs.builders ++ VectorExprs.builders ++
       StringExprs.builders ++ TopKAgg.builders ++ FreqAgg.builders ++
-      BloomExprs.builders ++ ImageExprs.builders)
+      KllAgg.builders ++ BloomExprs.builders ++ ImageExprs.builders ++
+      DecimalExprs.builders)
       .foreach { case (name, builder) =>
         ext.injectFunction((FunctionIdentifier(name),
           new ExpressionInfo(classOf[GraftExtensions].getName, name,

@@ -217,13 +217,12 @@ object SparkEntry {
       docs, "doc_id", "text", n = 5, threshold = 0.5,
       maxShingleDF = Some(10000L), hotSampleMod = 20L)
 
-  /** Cluster every document id with the given connected-components
-    * implementation (x31 min-propagation / x37 alternating star — same
-    * output contract, same oracle). */
-  private def clusteredDocIds(s: SparkSession, dir: String,
-      cluster: (DataFrame, String, String) => DataFrame): DataFrame = {
+  /** Cluster every document id by its near-dup connected component
+    * (x31/x37: one operator, one output contract, one oracle). */
+  private def clusteredDocIds(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val lbl = cluster(docNearDupPairs(docs), "doc_a", "doc_b")
+    val lbl = graft.ext.DedupOps.dedupClusters(
+      docNearDupPairs(docs), "doc_a", "doc_b")
     docs.select(col("doc_id"))
       .join(lbl, docs("doc_id") === lbl("id"), "left")
       .select(col("doc_id"),
@@ -2016,12 +2015,11 @@ object SparkEntry {
 
     // near-dup clusters: pair detection → connected components → one
     // cluster id per doc (min id in the component; docs with no
-    // near-duplicate are their own singleton cluster). The label
-    // propagation iterates HERE (driver-paced Pregel-style loop over
-    // checkpointed frames); the returned frame is the final labels
+    // near-duplicate are their own singleton cluster). A small pair set
+    // is labelled by a union-find on the driver, a large one by
+    // checkpointed star rounds; the returned frame is the final labels
     // joined back onto the corpus.
-    "x31_dedup_clusters" -> ((s, dir) =>
-      clusteredDocIds(s, dir, graft.ext.DedupOps.dedupClusters(_, _, _))),
+    "x31_dedup_clusters" -> ((s, dir) => clusteredDocIds(s, dir)),
 
     // declarative data-quality audit (x83): the pre-promotion gate a
     // 100 TB ingest runs — row-level rules fold into ONE scan-pass
@@ -2132,12 +2130,11 @@ object SparkEntry {
           col("quality_score"))
     },
 
-    // x31's twin on the alternating large-star/small-star algorithm —
-    // same pair detection, same (id, cluster_id) contract, same oracle;
-    // rounds bounded O(log n) regardless of component diameter, the
-    // variant for chain-shaped near-dup graphs at corpus scale.
-    "x37_star_clusters" -> ((s, dir) =>
-      clusteredDocIds(s, dir, graft.ext.DedupOps.dedupClustersStar(_, _, _))),
+    // x31 under its own gate name and oracle: the same connected-
+    // components operator (driver union-find on a small pair set,
+    // O(log n) alternating-star rounds on a large one), the same pair
+    // detection and (id, cluster_id) contract.
+    "x37_star_clusters" -> ((s, dir) => clusteredDocIds(s, dir)),
 
     // asymmetric containment pairs: |A∩B|/min(|A|,|B|) ≥ 0.8 — catches
     // small docs quoted inside large ones (Jaccard-invisible).

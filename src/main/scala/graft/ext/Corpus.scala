@@ -72,8 +72,8 @@ object Corpus {
     * independent buckets; at 80/10/10 an expected ~34% of near-dup
     * pairs straddle splits).
     *
-    * `labels` is a [[DedupOps.dedupClusters]]/[[DedupOps
-    * .dedupClustersStar]] output — (`id`, `cluster_id`) for every doc
+    * `labels` is a [[DedupOps.dedupClusters]] output — (`id`,
+    * `cluster_id`) for every doc
     * that HAS a near-duplicate; unpaired docs default to their own id.
     * The split decision hashes the CANONICAL member's text
     * (cluster_id = component-min doc id), so it stays content-stable

@@ -809,120 +809,44 @@ object DedupOps {
     * that appears in a pair; callers left-join onto the corpus and
     * coalesce to the doc's own id for singletons.
     *
-    * Algorithm: min-label propagation to fixpoint — each round every
-    * node takes the min of its own label and its neighbors' labels.
-    * Rounds needed = the graph's diameter. Near-dup graphs are
-    * near-clique components (similarity ≥ t is nearly transitive), so
-    * real corpora converge in 2–4 rounds; `maxIters` guards the
-    * pathological chain, and non-convergence throws rather than
-    * returning splintered clusters. (For adversarially long chains the
-    * alternating two-phase star algorithm bounds rounds at O(log n);
-    * swap it in behind this signature if a corpus ever trips the guard.)
+    * Driver finish: the pair projection is counted in the one job that
+    * materializes it. A pair set of at most `StarDriverPairs` (2¹⁸
+    * pairs, ≤ 4 MB of collected ids) is collected and labelled by an
+    * array union-find on the driver — no rounds, and the result is a
+    * local frame that holds NO module checkpoint (the pair projection
+    * is released after the collect).
     *
-    * 100 TB discipline:
-    *  - Each round shuffles only the EDGE list joined with 16-byte
-    *    (id, label) rows — document bodies never enter the loop, and the
-    *    near-dup edge list is orders of magnitude smaller than the
-    *    corpus (it holds only docs with a near-duplicate).
-    *  - `localCheckpoint` every round truncates lineage — mandatory for
-    *    iterative DataFrame algorithms; without it the plan doubles per
-    *    round and the driver re-optimizes an exponentially growing tree.
-    *  - The per-round `count` is a convergence probe over the already-
-    *    materialized checkpoint (sum of per-partition counters), not a
-    *    data collect; this is the Pregel-style "active vertex count".
-    */
-  def dedupClusters(pairs: DataFrame, aCol: String, bCol: String,
-      maxIters: Int = 20, reliable: Boolean = false): DataFrame = {
-    def mat(df: DataFrame): DataFrame = Checkpoints.materialize(df, reliable)
-    // materialize the pair projection once: the self-union below
-    // otherwise evaluates the (often expensive) pair-generation plan
-    // twice — released as soon as the symmetrized edge set lands
-    val fwd = mat(pairs.select(col(aCol).cast(LongType).as("u"),
-      col(bCol).cast(LongType).as("v")))
-    val edges = mat(fwd // materialized once, scanned each round
-      .union(fwd.select(col("v").as("u"), col("u").as("v"))).distinct())
-    Checkpoints.release(fwd)
-    var labels = mat(edges.select(col("u").as("id")).distinct()
-      .withColumn("cluster_id", col("id")))
-    var changed = 1L
-    var round = 0
-    while (changed > 0 && round < maxIters) {
-      val nbrMin = edges.join(labels, edges("v") === labels("id"))
-        .groupBy(col("u")).agg(min("cluster_id").as("nbr_min"))
-      // the changed-count convergence probe IS the round's
-      // materializing action — one job per round, not two
-      val (next, nChanged) = Checkpoints.materializeWith(labels
-        .join(nbrMin, labels("id") === nbrMin("u"), "left")
-        .select(col("id"),
-          least(col("cluster_id"), coalesce(col("nbr_min"),
-            col("cluster_id"))).as("cluster_id"),
-          coalesce(col("nbr_min") < col("cluster_id"), lit(false))
-            .as("_changed")), reliable)(
-        _.filter(col("_changed")).count())
-      changed = nChanged
-      // next is materialized — the superseded round's blocks are dead
-      Checkpoints.release(labels)
-      labels = next.drop("_changed")
-      round += 1
-    }
-    // the returned labels frame is a standalone checkpoint; the edge
-    // list's blocks are no longer reachable from it
-    Checkpoints.release(edges)
-    require(changed == 0L,
-      s"dedupClusters: not converged after $maxIters rounds — component " +
-        "diameter exceeds the guard; raise maxIters or switch to " +
-        "dedupClustersStar (O(log n) rounds, diameter-independent)")
-    labels
-  }
-
-  /** Connected components by alternating large-star / small-star — the
-    * diameter-independent variant of [[dedupClusters]] (same output
-    * contract: (`id`, `cluster_id`) with the component min as label).
-    * Published algorithm (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC'14): each round rewires every node's
-    * larger neighbors (large-star) then its smaller-or-equal neighbors
-    * (small-star) to the neighborhood minimum; the edge set converges to
-    * star graphs centered on each component's min in O(log n) rounds
-    * REGARDLESS of diameter — the right choice when components can be
-    * long chains (reference-chain graphs, linked near-dups over time)
-    * rather than the near-cliques similarity thresholds produce.
-    *
-    * Cost per round: two grouped-min shuffles + two joins (vs one of
-    * each for a [[dedupClusters]] round) over 16-byte edges, checkpoint-
+    * Above the constant: alternating large-star / small-star rounds
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC'14). Each round rewires every node's larger neighbors
+    * (large-star) then its smaller-or-equal neighbors (small-star) to
+    * the neighborhood minimum; the edge set converges to star graphs
+    * centered on each component's min in O(log n) rounds REGARDLESS of
+    * diameter, so near-clique dup groups and long chains (linked
+    * re-posts, reference graphs) cost the same. Cost per round: two
+    * grouped-min shuffles + two joins over 16-byte edges, checkpoint-
     * truncated like every iterative frame here. Convergence = the edge
     * set IS a star forest (no node appears as both a center and a
     * satellite) — an EXACT criterion, checked by the one-scan
     * explode+agg that doubles as each round's materializing action
     * ([[Checkpoints.materializeWith]]): a canonical (u < v) star forest
-    * is a fixpoint of both phases (a center's neighbors are all larger
-    * and already point at it; a satellite's only smaller neighbor is
-    * its center), so stopping there returns the identical edge set one
-    * round EARLIER than the old unchanged-signature probe, with no
-    * 2⁻⁶⁴ pseudo-convergence caveat and no separate exit assertion.
-    *
-    * Driver finish: the round loop pays ~8 Spark jobs per round whatever
-    * the graph's size, so a pair set of at most `StarDriverPairs` (2¹⁸
-    * pairs, ≤ 4 MB of collected ids) is collected and labelled by an
-    * array union-find on the driver instead — the same rows, since the
-    * component-min label is unique. On that path the result is a local
-    * frame and holds NO module checkpoint (the pair projection is
-    * released after the collect). Above the constant the rounds run as
-    * described, and the result retains the pair projection and the
-    * converged edge set, which the caller releases. */
-  def dedupClustersStar(pairs: DataFrame, aCol: String, bCol: String,
+    * is a fixpoint of both phases. `maxIters` bounds only this loop,
+    * and non-convergence throws rather than returning splintered
+    * clusters. The round path's result retains the pair projection and
+    * the converged edge set, which the caller releases. */
+  def dedupClusters(pairs: DataFrame, aCol: String, bCol: String,
       maxIters: Int = 30, reliable: Boolean = false): DataFrame =
-    dedupClustersStar(pairs, aCol, bCol, maxIters, reliable,
-      StarDriverPairs)
+    dedupClusters(pairs, aCol, bCol, maxIters, reliable, StarDriverPairs)
 
-  /** Largest pair count [[dedupClustersStar]] finishes on the driver. */
+  /** Largest pair count [[dedupClusters]] finishes on the driver. */
   private val StarDriverPairs = 1L << 18
 
   private val StarLabelSchema = StructType(Seq(
     StructField("id", LongType), StructField("cluster_id", LongType)))
 
-  /** [[dedupClustersStar]] with the driver-finish budget exposed, so
-    * tests can force the distributed loop (`driverPairs = 0`). */
-  private[graft] def dedupClustersStar(pairs: DataFrame, aCol: String,
+  /** [[dedupClusters]] with the driver-finish budget exposed, so tests
+    * can force the distributed loop (`driverPairs = 0`). */
+  private[graft] def dedupClusters(pairs: DataFrame, aCol: String,
       bCol: String, maxIters: Int, reliable: Boolean, driverPairs: Long)
       : DataFrame = {
     // Materialize the 16-byte edge projection ONCE: the pair-generation
@@ -1015,7 +939,7 @@ object DedupOps {
       round += 1
     }
     require(badNodes == 0L,
-      s"dedupClustersStar: not converged after $maxIters rounds")
+      s"dedupClusters: not converged after $maxIters star rounds")
     // converged edge set is star graphs: (center=u, satellite=v) in
     // canonical order since center = component min < satellite — the
     // loop criterion IS the star-forest property, so no separate exit
@@ -1024,9 +948,9 @@ object DedupOps {
       .withColumn("cluster_id", col("id"))
     val labeled = edges.select(col("v").as("id"), col("u").as("cluster_id"))
       .union(centers).distinct()
-    // contract parity with dedupClusters: every node appearing in the
-    // input gets a row — self-loop-only nodes (dropped by the no-self-
-    // loop canonicalization) label themselves
+    // every node appearing in the input gets a row, as on the driver
+    // finish — self-loop-only nodes (dropped by the no-self-loop
+    // canonicalization) label themselves
     val nodes = raw.select(col("u").as("id"))
       .union(raw.select(col("v").as("id"))).distinct()
     nodes.join(labeled, Seq("id"), "left")
@@ -1034,7 +958,7 @@ object DedupOps {
         coalesce(col("cluster_id"), col("id")).as("cluster_id"))
   }
 
-  /** The driver finish of [[dedupClustersStar]]: one (id, component
+  /** The driver finish of [[dedupClusters]]: one (id, component
     * min) row per distinct non-null endpoint, plus (null, null) when
     * any endpoint is null — the rows the distributed path's `nodes`
     * left join yields (a null endpoint adds no edge, so its partner
@@ -1088,15 +1012,14 @@ object DedupOps {
     * to avoid.
     *
     * Output: (id, cluster_id) for EVERY doc in `withRep` — unlike
-    * [[dedupClustersStar]] over the pair frame, which omits docs that
+    * [[dedupClusters]] over the pair frame, which omits docs that
     * pair with nothing; callers that coalesce missing labels to the
     * doc's own id get identical results from either form (singletons
     * label themselves here too). */
   private def clustersFromRepPairs(withRep: DataFrame,
       repPairs: DataFrame, maxIters: Int, reliable: Boolean)
       : DataFrame = {
-    val lbl = dedupClustersStar(repPairs, "doc_a", "doc_b", maxIters,
-      reliable)
+    val lbl = dedupClusters(repPairs, "doc_a", "doc_b", maxIters, reliable)
     withRep.select(col("doc_id").cast(LongType).as("id"),
         col("rep").cast(LongType).as("_rep"))
       .join(lbl.withColumnRenamed("id", "_rid"),
@@ -1106,7 +1029,7 @@ object DedupOps {
   }
 
   /** Near-dup component labels over 64-bit signatures — the fused
-    * [[simhashPairsFromSigs]] → [[dedupClustersStar]] canonical-
+    * [[simhashPairsFromSigs]] → [[dedupClusters]] canonical-
     * selection path that SKIPS the member-pair expansion: band-join
     * the distinct-signature reps, star-CC the rep graph, and attach
     * members by their rep (see [[clustersFromRepPairs]] for the
@@ -1142,7 +1065,7 @@ object DedupOps {
     * ([[Clustering.kmeansAssign]], deterministic lowest-id seeding),
     * exact pairwise cosine runs WITHIN each cell only, pairs at or
     * above `threshold` connect into components
-    * ([[dedupClustersStar]]), and the minimum id per component is the
+    * ([[dedupClusters]]), and the minimum id per component is the
     * kept representative. Output: one row per input vector —
     * (`vec_id`, `cluster` = k-means cell, `sem_cluster_id` =
     * component min or own id for singletons, `keep` = 1 iff the row
@@ -1233,7 +1156,7 @@ object DedupOps {
           col("nrm_a") * col("nrm_b")), lit(0.0)), 6))
       .filter(col("cos") >= threshold)
       .select("vec_a", "vec_b")
-    val comp = dedupClustersStar(pairs, "vec_a", "vec_b")
+    val comp = dedupClusters(pairs, "vec_a", "vec_b")
       .select(col("id").as("vec_id"), col("cluster_id").as("_sem"))
     asg.join(comp, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cluster"), col("dist"),
@@ -2052,7 +1975,7 @@ object DedupOps {
   }
 
   /** Containment-graph component labels over signature SETS — the
-    * fused [[containmentSetPairs]] → [[dedupClustersStar]] canonical-
+    * fused [[containmentSetPairs]] → [[dedupClusters]] canonical-
     * selection path that SKIPS the member-pair expansion (see
     * [[clustersFromRepPairs]] for the equality argument; the x257
     * reel-dedup fixture is where the expansion measured 4.6 M pair

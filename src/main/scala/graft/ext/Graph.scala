@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /** Iterative graph analytics beyond connected components
-  * ([[DedupOps.dedupClusters]] / [[DedupOps.dedupClustersStar]]): link
-  * analysis over graphs derived from corpus/warehouse tables.
+  * ([[DedupOps.dedupClusters]]): link analysis over graphs derived from
+  * corpus/warehouse tables.
   */
 object Graph {
 
@@ -43,7 +43,8 @@ object Graph {
     * it; gated x95). A 100 TB run sets `iters` as the hard budget and
     * `tol` as the expected stop.
     *
-    * Scale shape (the [[DedupOps.dedupClusters]] iterative discipline):
+    * Scale shape (the iterative discipline of [[DedupOps.dedupClusters]]'
+    * star rounds):
     * the edge list joined each round carries only (src, dst, outdeg) —
     * 24-byte rows, hash-partitioned ONCE on the join key and
     * `localCheckpoint`ed, so every round's join shuffles only the
@@ -485,7 +486,7 @@ object Graph {
     * rounds) and identical across engines, partitionings, and runs.
     * The community label that wins a region is its minimum seed id —
     * the same canonical-representative convention as
-    * [[DedupOps.dedupClusters]]' min-label components.
+    * [[DedupOps.dedupClusters]]' component labels.
     *
     * Input edges are canonicalized exactly as [[triangleCount]] /
     * [[kCore]]: undirected simple graph (self-loops, duplicate and

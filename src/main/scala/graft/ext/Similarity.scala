@@ -526,9 +526,9 @@ object Similarity {
     * the standard symmetrization that keeps hub nodes from fusing
     * unrelated regions). Composition: [[knnGraph]] (inverted-file
     * candidates, no N²) → mutual filter (one keyed self-join on the
-    * 16-byte edge pair) → [[DedupOps.dedupClustersStar]] (alternating
-    * star — mutual-kNN components CAN be chains, so the
-    * diameter-independent CC is the right one, not min-propagation).
+    * 16-byte edge pair) → [[DedupOps.dedupClusters]] (driver
+    * union-find on a small pair set, else alternating-star rounds —
+    * diameter-independent, and mutual-kNN components CAN be chains).
     * Every corpus vector gets a label; vectors with no mutual
     * neighbor are their own singleton cluster (the split-coverage
     * rule). Output: (vec_id, cluster_id = component min).
@@ -585,7 +585,7 @@ object Similarity {
       edges.select(col("dst").as("src"), col("src").as("dst"))
         .hint("SHUFFLE_HASH"),
       Seq("src", "dst"))
-    val labels = DedupOps.dedupClustersStar(mutual, "src", "dst",
+    val labels = DedupOps.dedupClusters(mutual, "src", "dst",
       reliable = reliable)
     val out = ids.join(labels, col("vec_id") === col("id"), "left")
       .select(col("vec_id"),

@@ -42,10 +42,7 @@ object BloomExprs {
 
   /** Register in the session (idempotent). */
   def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "built-in")
-    }
+    NativeFunctions.install(spark, builders)
 
   /** `bloomAgg(xxh64Col, items, bits)` → serialized filter (binary). */
   def bloomAgg(xxh64: Column, estimatedItems: Long, numBits: Long): Column =

@@ -112,13 +112,16 @@ object DecimalExprs {
       copy(child = c)
   }
 
+  /** name → builder, single source for both registration paths. */
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_dec_quantize" -> ((es: Seq[Expression]) =>
+      DecQuantize(es.head,
+        es(1).eval().asInstanceOf[Number].intValue(),
+        es(2).eval().asInstanceOf[Number].intValue())))
+
   /** Register in the session (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dec_quantize",
-      es => DecQuantize(es.head,
-        es(1).eval().asInstanceOf[Number].intValue(),
-        es(2).eval().asInstanceOf[Number].intValue()), "built-in")
+    NativeFunctions.install(spark, builders)
 
   def decQuantize(c: Column, precision: Int, scale: Int): Column =
     call_function("graft_dec_quantize", c,

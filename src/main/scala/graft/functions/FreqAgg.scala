@@ -157,10 +157,7 @@ object FreqAgg {
         AggBuilders.literalK("graft_misra_gries", es, arity = 2))))
 
   def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "built-in")
-    }
+    NativeFunctions.install(spark, builders)
 
   /** `misraGries(item, k)` → array<string>: candidate frequent items. */
   def misraGries(item: Column, k: Int): Column =

@@ -126,10 +126,7 @@ object ImageExprs {
 
   /** Register in the session (idempotent). */
   def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "built-in")
-    }
+    NativeFunctions.install(spark, builders)
 
   def imageHeaderMeta(payload: Column): Column =
     call_function("graft_image_header_meta", payload)

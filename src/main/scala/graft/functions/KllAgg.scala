@@ -248,10 +248,7 @@ object KllAgg {
         AggBuilders.literalK("graft_kll_sketch", es, arity = 2))))
 
   def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "built-in")
-    }
+    NativeFunctions.install(spark, builders)
 
   /** `kllSketch(value, k)` → array<struct<level:int, v:double>>: the
     * sketch's surviving weighted items (weight = 2^level). */

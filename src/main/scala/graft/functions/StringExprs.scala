@@ -265,10 +265,7 @@ object StringExprs {
   /** Register in the session (idempotent); required before the Column
     * wrappers below. */
   def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "built-in")
-    }
+    NativeFunctions.install(spark, builders)
 
   def maskedPosHashes(c: Column): Column =
     call_function("graft_masked_pos_hashes", c)

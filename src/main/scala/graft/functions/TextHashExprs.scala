@@ -228,10 +228,7 @@ object TextHashExprs {
   /** Register the functions in the session (idempotent); required before
     * using the Column wrappers below. */
   def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "built-in")
-    }
+    NativeFunctions.install(spark, builders)
 
   def shingleHashes(c: Column, n: Int): Column =
     call_function("graft_shingle_hashes", c,

@@ -125,10 +125,7 @@ object TopKAgg {
 
   /** Register in the session (idempotent). */
   def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "built-in")
-    }
+    NativeFunctions.install(spark, builders)
 
   /** `topKByScore(score, id, k)` → array<struct<score,id>> best-first. */
   def topKByScore(score: Column, id: Column, k: Int): Column =

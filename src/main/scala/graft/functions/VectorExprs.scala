@@ -72,10 +72,7 @@ object VectorExprs {
 
   /** Register in the session (idempotent). */
   def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "built-in")
-    }
+    NativeFunctions.install(spark, builders)
 
   def dotF64(a: Column, b: Column): Column =
     call_function("graft_dot_f64", a, b)

@@ -44,8 +44,8 @@ object ProbeR19 {
               Seq("src", "dst")), reliable = false)
         }
         println(s"[probe] mutual rows = ${mutual.count()}")
-        val labels = t("dedupClustersStar") {
-          val l = graft.ext.DedupOps.dedupClustersStar(mutual, "src", "dst")
+        val labels = t("dedupClusters") {
+          val l = graft.ext.DedupOps.dedupClusters(mutual, "src", "dst")
           graft.ext.Checkpoints.materialize(l, reliable = false)
         }
         t("label join + mat") {
@@ -117,7 +117,8 @@ object ProbeR19 {
         println(s"[probe] pins $pin1 $pin2")
 
       case "starcc" =>
-        // replicate dedupClustersStar round by round on x92's mutual graph
+        // replicate dedupClusters' star rounds one by one on x92's mutual
+        // graph
         val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
         val g = graft.ext.Similarity.knnGraph(emb, "vec_id", "embedding",
           k = 3, kCentroids = 8, iters = 2, nprobe = 2)
@@ -289,14 +290,14 @@ object ProbeR19 {
           if (dedup) canon.distinct() else canon
         }
         dump("starcc_round_before.txt",
-          "dedupClustersStar one-round plan BEFORE (pre-2659a98: " +
+          "dedupClusters star-round plan BEFORE (pre-2659a98: " +
             "large-star phase ends in its own distinct — an extra " +
             "full Exchange per round; the convergence signature ran " +
             "as a SECOND job over the materialized round)",
           phase(phase(edges, large = true, dedup = true),
             large = false, dedup = true))
         dump("starcc_round_after.txt",
-          "dedupClustersStar one-round plan AFTER (committed 2659a98: " +
+          "dedupClusters star-round plan AFTER (committed 2659a98: " +
             "no inner distinct; the star-forest convergence probe is " +
             "the round's materializing action — compare Exchange " +
             "counts)",

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+
+import graft.functions.NativeFunctionsSpec
 
 /** The suite JVM shares one SparkSession across suites, so
   * `.withExtensions` on getOrCreate would silently no-op when another
@@ -82,5 +85,16 @@ class GraftExtensionsSpec extends SparkSpec {
     val m = r.getAs[org.apache.spark.sql.Row]("m")
     assert(m.getString(0) == "gif" && m.getInt(1) == 320 && m.getInt(2) == 200)
     assert(r.isNullAt(1))
+  }
+
+  test("extension injects every native-function family's builders") {
+    applyExtensions()
+    val registry = spark.sessionState.functionRegistry
+    for ((family, _, builders) <- NativeFunctionsSpec.families;
+         (name, _) <- builders) {
+      val info = registry.lookupFunction(FunctionIdentifier(name))
+      assert(info.exists(_.getClassName == classOf[GraftExtensions].getName),
+        s"$family's $name does not resolve to the extension's entry: $info")
+    }
   }
 }

@@ -56,24 +56,13 @@ class CheckpointHygieneSpec extends SparkSpec {
     assert(persistedCount == 0)
   }
 
-  test("dedupClusters leaves only the returned labels persisted") {
-    clearAll()
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
-    val labels = DedupOps.dedupClusters(pairs, "a", "b")
-    assert(persistedCount == 1,
-      s"expected 1 persisted RDD (the labels), got $persistedCount")
-    assert(labels.count() == 5L)
-    Checkpoints.release(labels)
-    assert(persistedCount == 0)
-  }
-
-  test("dedupClustersStar retains the pair input and the converged " +
+  test("dedupClusters retains the pair input and the converged " +
       "edge set — nothing else") {
     clearAll()
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
       .toDF("a", "b")
     // budget 0 forces the distributed rounds on this small input
-    val labels = DedupOps.dedupClustersStar(pairs, "a", "b", 30,
+    val labels = DedupOps.dedupClusters(pairs, "a", "b", 30,
       reliable = false, driverPairs = 0L)
     // the returned plan reads two checkpoints: the materialized pair
     // projection (the trailing self-loop-only node sweep needs it —
@@ -86,14 +75,14 @@ class CheckpointHygieneSpec extends SparkSpec {
     clearAll()
     // the driver finish collects the pair projection and releases it:
     // the returned local frame holds no module checkpoint
-    val local = DedupOps.dedupClustersStar(pairs, "a", "b")
+    val local = DedupOps.dedupClusters(pairs, "a", "b")
     assert(persistedCount == 0,
       s"expected no persisted RDD on the driver path, got $persistedCount")
     assert(local.count() == 6L)
     clearAll()
   }
 
-  test("dedupClustersStar evaluates the pair-generation plan exactly " +
+  test("dedupClusters evaluates the pair-generation plan exactly " +
       "once — executing the returned labels never re-runs it") {
     assertTasksRunOnce()
     clearAll()
@@ -102,7 +91,7 @@ class CheckpointHygieneSpec extends SparkSpec {
       .as[(Long, Long)]
       .mapPartitions(_.map { p => evals.add(1L); p })
       .toDF("a", "b")
-    val labels = DedupOps.dedupClustersStar(pairs, "a", "b")
+    val labels = DedupOps.dedupClusters(pairs, "a", "b")
     val afterBuild = evals.value
     assert(afterBuild == 3L,
       s"pair input visited $afterBuild rows during the build — " +
@@ -173,18 +162,11 @@ class CheckpointHygieneSpec extends SparkSpec {
       val fastCc = DedupOps.dedupClusters(pairs, "a", "b")
         .orderBy("id").as[(Long, Long)].collect().toSeq
       clearAll()
-      val durableCc = DedupOps.dedupClusters(pairs, "a", "b",
-        reliable = true)
+      // budget 0 forces the rounds, which then checkpoint to the dir
+      val durableCc = DedupOps.dedupClusters(pairs, "a", "b", 30,
+        reliable = true, driverPairs = 0L)
       assert(durableCc.orderBy("id").as[(Long, Long)].collect().toSeq
         == fastCc)
-      clearAll()
-      val fastStar = DedupOps.dedupClustersStar(pairs, "a", "b")
-        .orderBy("id").as[(Long, Long)].collect().toSeq
-      clearAll()
-      val durableStar = DedupOps.dedupClustersStar(pairs, "a", "b",
-        reliable = true)
-      assert(durableStar.orderBy("id").as[(Long, Long)].collect().toSeq
-        == fastStar)
       clearAll()
     } finally {
       def rm(f: java.io.File): Unit = {

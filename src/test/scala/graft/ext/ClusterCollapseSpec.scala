@@ -18,7 +18,7 @@ class ClusterCollapseSpec extends SparkSpec {
     * singletons themselves (the x203/x244/x257 gate tail). */
   private def viaPairs(docs: DataFrame, pairs: DataFrame)
       : Map[Long, Long] = {
-    val lbl = DedupOps.dedupClustersStar(pairs, "doc_a", "doc_b")
+    val lbl = DedupOps.dedupClusters(pairs, "doc_a", "doc_b")
     docs.join(lbl, docs("doc_id") === lbl("id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
@@ -31,7 +31,7 @@ class ClusterCollapseSpec extends SparkSpec {
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
       .as[(Long, Long)].collect().toMap
 
-  test("simhashClusters == dedupClustersStar over simhashPairsFromSigs") {
+  test("simhashClusters == dedupClusters over simhashPairsFromSigs") {
     // duplicate-signature groups (1,2,3 | 4,5), a 1-bit neighbor chain
     // (6 links the 0x0F00 group to 0x0F01), isolated docs (7, 8), and
     // a null signature (9: pairs with nothing, labels itself)
@@ -60,7 +60,7 @@ class ClusterCollapseSpec extends SparkSpec {
     assert(expanded(9L) === 9L)
   }
 
-  test("containmentSetClusters == dedupClustersStar over containmentSetPairs") {
+  test("containmentSetClusters == dedupClusters over containmentSetPairs") {
     // identical-set group (1,2), containment chain 1⊃3 (C=1.0 on the
     // smaller side), partial overlap 3~4 (2/3 >= 0.5), isolated 5,
     // empty set 6 (no row from either form; labels itself via coalesce)

@@ -2375,58 +2375,46 @@ class ExtSpec extends SparkSpec {
   }
 
   test("dedupClusters: components get min-id labels; chains converge") {
-    // component {1,2,3} (path), component {7,9}, and a 10-node path
-    // 20-21-...-29 whose diameter forces multiple propagation rounds
-    val pairs = (Seq((1L, 2L), (2L, 3L), (9L, 7L)) ++
-      (20L until 29L).map(i => (i + 1, i))).toDF("a", "b")
-    val got = DedupOps.dedupClusters(pairs, "a", "b")
-      .as[(Long, Long)].collect().toMap
-    assert(got(1L) == 1L && got(2L) == 1L && got(3L) == 1L)
-    assert(got(7L) == 7L && got(9L) == 7L)
-    assert((20L to 29L).forall(got(_) == 20L))
-    assert(got.size == 15)
-    // non-convergence guard: the 10-node path needs 9 rounds
-    intercept[IllegalArgumentException] {
-      DedupOps.dedupClusters(
-        (20L until 29L).map(i => (i + 1, i)).toDF("a", "b"),
-        "a", "b", maxIters = 3)
-    }
-  }
-
-  test("dedupClustersStar: long chain converges in O(log n) rounds; " +
-      "self-loops label themselves") {
-    // a 40-node path has diameter 39 — min-label propagation needs 39
-    // rounds, the star variant must finish well inside maxIters = 12
+    // components {1,2,3} and {7,9}, a self-loop-only node 50, and a
+    // 40-node path 100-101-...-139: diameter 39, which the star rounds
+    // must finish well inside maxIters = 12 (O(log n) rounds)
     val chain = (100L until 139L).map(i => (i + 1, i))
-    val pairs = (chain ++ Seq((1L, 2L), (2L, 3L), (50L, 50L)))
+    val pairs = (chain ++ Seq((1L, 2L), (2L, 3L), (9L, 7L), (50L, 50L)))
       .toDF("a", "b")
     // the driver finish and the forced round loop
     for (budget <- Seq(Long.MaxValue, 0L)) {
-      val got = DedupOps.dedupClustersStar(pairs, "a", "b", maxIters = 12,
+      val got = DedupOps.dedupClusters(pairs, "a", "b", maxIters = 12,
         reliable = false, driverPairs = budget)
         .as[(Long, Long)].collect().toMap
       assert((100L to 139L).forall(got(_) == 100L), s"budget $budget")
       assert(got(1L) == 1L && got(2L) == 1L && got(3L) == 1L)
+      assert(got(7L) == 7L && got(9L) == 7L)
       assert(got(50L) == 50L) // self-loop-only node keeps its own label
-      assert(got.size == 44)
+      assert(got.size == 46)
+    }
+    // non-convergence guard: maxIters bounds only the round loop, and
+    // one round cannot turn the 40-node chain into a star forest
+    intercept[IllegalArgumentException] {
+      DedupOps.dedupClusters(chain.toDF("a", "b"), "a", "b", maxIters = 1,
+        reliable = false, driverPairs = 0L)
     }
   }
 
-  test("dedupClustersStar: a two-center satellite is not treated as " +
+  test("dedupClusters: a two-center satellite is not treated as " +
       "converged — the star-forest probe requires one edge per satellite") {
     // canonical edges {(1,3),(2,3)} have disjoint center/satellite id
     // sets but are NOT a star forest (3 hangs off two centers) — the
     // convergence probe must keep iterating until {(1,2),(1,3)}
     val pairs = Seq((1L, 3L), (2L, 3L)).toDF("a", "b")
     for (budget <- Seq(Long.MaxValue, 0L)) {
-      val got = DedupOps.dedupClustersStar(pairs, "a", "b", 30,
+      val got = DedupOps.dedupClusters(pairs, "a", "b", 30,
         reliable = false, driverPairs = budget)
         .as[(Long, Long)].collect().toMap
       assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L), s"budget $budget")
     }
   }
 
-  test("dedupClustersStar: a null id and a self-loop-only id get the " +
+  test("dedupClusters: a null id and a self-loop-only id get the " +
       "same rows on the driver finish and the round loop") {
     // (null, 5): a null endpoint adds no edge, so 5 labels itself and
     // the null id gets the (null, null) row of the node sweep's left
@@ -2437,7 +2425,7 @@ class ExtSpec extends SparkSpec {
     val want = Set[(java.lang.Long, java.lang.Long)](
       (1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (7L, 7L), (null, null))
     for (budget <- Seq(Long.MaxValue, 0L)) {
-      val got = DedupOps.dedupClustersStar(pairs, "a", "b", 30,
+      val got = DedupOps.dedupClusters(pairs, "a", "b", 30,
         reliable = false, driverPairs = budget)
       assert(got.schema.map(f => (f.name, f.dataType)) ==
         Seq("id", "cluster_id").map((_, org.apache.spark.sql.types.LongType)))
@@ -2548,11 +2536,6 @@ class ExtSpec extends SparkSpec {
       .map(r => r._1 -> ((r._2, r._3))).toMap
     assert(got(1L) == ((2L, 8L)))
     assert(got(2L) == ((2L, 8L)))
-  }
-
-  test("dedupClustersStar: empty pair set yields empty labels") {
-    val pairs = Seq.empty[(Long, Long)].toDF("a", "b")
-    assert(DedupOps.dedupClustersStar(pairs, "a", "b").count() == 0L)
   }
 
   test("dedupClusters: empty pair set yields empty labels") {
