@@ -2375,11 +2375,35 @@ class ExtSpec extends SparkSpec {
   }
 
   test("dedupClusters: components get min-id labels; chains converge") {
-    // components {1,2,3} and {7,9}, a self-loop-only node 50, and a
-    // 40-node path 100-101-...-139: diameter 39, which the star rounds
-    // must finish well inside maxIters = 12 (O(log n) rounds)
+    // component {1,2,3} (path), component {7,9}, and a 10-node path
+    // 20-21-...-29 whose diameter forces multiple rounds
+    val path = (20L until 29L).map(i => (i + 1, i))
+    val pairs = (Seq((1L, 2L), (2L, 3L), (9L, 7L)) ++ path).toDF("a", "b")
+    // the driver finish and the forced round loop
+    for (budget <- Seq(Long.MaxValue, 0L)) {
+      val got = DedupOps.dedupClusters(pairs, "a", "b", maxIters = 30,
+        reliable = false, driverPairs = budget)
+        .as[(Long, Long)].collect().toMap
+      assert(got(1L) == 1L && got(2L) == 1L && got(3L) == 1L,
+        s"budget $budget")
+      assert(got(7L) == 7L && got(9L) == 7L)
+      assert((20L to 29L).forall(got(_) == 20L))
+      assert(got.size == 15)
+    }
+    // non-convergence guard: maxIters bounds only the round loop, and
+    // one round cannot turn the 10-node path into a star forest
+    intercept[IllegalArgumentException] {
+      DedupOps.dedupClusters(path.toDF("a", "b"), "a", "b", maxIters = 1,
+        reliable = false, driverPairs = 0L)
+    }
+  }
+
+  test("dedupClustersStar: long chain converges in O(log n) rounds; " +
+      "self-loops label themselves") {
+    // a 40-node path has diameter 39 — min-label propagation would need
+    // 39 rounds, the star rounds must finish well inside maxIters = 12
     val chain = (100L until 139L).map(i => (i + 1, i))
-    val pairs = (chain ++ Seq((1L, 2L), (2L, 3L), (9L, 7L), (50L, 50L)))
+    val pairs = (chain ++ Seq((1L, 2L), (2L, 3L), (50L, 50L)))
       .toDF("a", "b")
     // the driver finish and the forced round loop
     for (budget <- Seq(Long.MaxValue, 0L)) {
@@ -2388,15 +2412,8 @@ class ExtSpec extends SparkSpec {
         .as[(Long, Long)].collect().toMap
       assert((100L to 139L).forall(got(_) == 100L), s"budget $budget")
       assert(got(1L) == 1L && got(2L) == 1L && got(3L) == 1L)
-      assert(got(7L) == 7L && got(9L) == 7L)
       assert(got(50L) == 50L) // self-loop-only node keeps its own label
-      assert(got.size == 46)
-    }
-    // non-convergence guard: maxIters bounds only the round loop, and
-    // one round cannot turn the 40-node chain into a star forest
-    intercept[IllegalArgumentException] {
-      DedupOps.dedupClusters(chain.toDF("a", "b"), "a", "b", maxIters = 1,
-        reliable = false, driverPairs = 0L)
+      assert(got.size == 44)
     }
   }
 
@@ -2536,6 +2553,14 @@ class ExtSpec extends SparkSpec {
       .map(r => r._1 -> ((r._2, r._3))).toMap
     assert(got(1L) == ((2L, 8L)))
     assert(got(2L) == ((2L, 8L)))
+  }
+
+  test("dedupClustersStar: empty pair set yields empty labels") {
+    // the forced round loop on an empty edge set: the first round's
+    // probe sees no edge and the node sweep adds no row
+    val pairs = Seq.empty[(Long, Long)].toDF("a", "b")
+    assert(DedupOps.dedupClusters(pairs, "a", "b", 30, reliable = false,
+      driverPairs = 0L).count() == 0L)
   }
 
   test("dedupClusters: empty pair set yields empty labels") {
