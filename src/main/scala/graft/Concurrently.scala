@@ -1,6 +1,11 @@
 package graft
 
-import java.util.concurrent.{Callable, ExecutionException, Executors}
+import java.util.concurrent.{CompletableFuture, ExecutionException,
+  Executors}
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Overlap INDEPENDENT driver-blocking work — an index build's table
   * writes, the two legs of a hybrid index, PQ subspace trainers. On
@@ -15,7 +20,14 @@ import java.util.concurrent.{Callable, ExecutionException, Executors}
   * writes), and a bounded pool could starve an outer call's threads
   * waiting on inner ones. Idle threads die after a minute. Callers whose
   * thunk count grows with the input bound their own window instead (see
-  * sinks.Compact.compactPartitioned). */
+  * sinks.Compact.compactPartitioned).
+  *
+  * A pool thread runs each thunk with its CALLER's Spark thread-locals
+  * (job group, SQL execution id and other local properties, the active
+  * session), set per call: a thread would otherwise keep the ones it
+  * inherited from whichever thread created it, so its jobs would carry
+  * another caller's job group and escape that caller's cancellation
+  * (a stopped stream could not cancel its legs' jobs). */
 object Concurrently {
 
   private lazy val pool = Executors.newCachedThreadPool { r =>
@@ -32,9 +44,13 @@ object Concurrently {
   def all[T](thunks: Seq[() => T]): Seq[T] =
     if (thunks.length <= 1) thunks.map(_())
     else {
-      val rest = thunks.tail.map(th => pool.submit(new Callable[T] {
-        def call(): T = th()
-      }))
+      val session = SparkSession.getActiveSession
+        .orElse(SparkSession.getDefaultSession)
+      val rest = thunks.tail.map(th => session match {
+        case Some(s: ClassicSession) =>
+          SQLExecution.withThreadLocalCaptured(s, pool)(th())
+        case _ => CompletableFuture.supplyAsync(() => th(), pool)
+      })
       val outcomes: Seq[Either[Throwable, T]] =
         attempt(thunks.head()) +: rest.map(f => attempt(
           try f.get()

@@ -218,11 +218,17 @@ object SparkEntry {
       maxShingleDF = Some(10000L), hotSampleMod = 20L)
 
   /** Cluster every document id by its near-dup connected component
-    * (x31/x37: one operator, one output contract, one oracle). */
-  private def clusteredDocIds(s: SparkSession, dir: String): DataFrame = {
+    * (x31/x37: one operator, one output contract, one oracle). A pair
+    * set of more than `driverPairs` pairs takes the distributed star
+    * rounds; the default is the operator's own budget. */
+  private def clusteredDocIds(s: SparkSession, dir: String,
+      driverPairs: Option[Long] = None): DataFrame = {
     val docs = T(s, dir, "documents")
-    val lbl = graft.ext.DedupOps.dedupClusters(
-      docNearDupPairs(docs), "doc_a", "doc_b")
+    val pairs = docNearDupPairs(docs)
+    val lbl = driverPairs.fold(
+      graft.ext.DedupOps.dedupClusters(pairs, "doc_a", "doc_b"))(budget =>
+      graft.ext.DedupOps.dedupClusters(pairs, "doc_a", "doc_b",
+        maxIters = 30, reliable = false, driverPairs = budget))
     docs.select(col("doc_id"))
       .join(lbl, docs("doc_id") === lbl("id"), "left")
       .select(col("doc_id"),
@@ -2130,11 +2136,13 @@ object SparkEntry {
           col("quality_score"))
     },
 
-    // x31 under its own gate name and oracle: the same connected-
-    // components operator (driver union-find on a small pair set,
-    // O(log n) alternating-star rounds on a large one), the same pair
-    // detection and (id, cluster_id) contract.
-    "x37_star_clusters" -> ((s, dir) => clusteredDocIds(s, dir)),
+    // x31 under its own gate name and oracle, forced onto the
+    // O(log n) alternating-star rounds (driverPairs = 0) that a large
+    // pair set takes: the same operator, pair detection and
+    // (id, cluster_id) contract as x31's driver union-find, so the two
+    // gates pin the two paths to one oracle.
+    "x37_star_clusters" -> ((s, dir) =>
+      clusteredDocIds(s, dir, driverPairs = Some(0L))),
 
     // asymmetric containment pairs: |A∩B|/min(|A|,|B|) ≥ 0.8 — catches
     // small docs quoted inside large ones (Jaccard-invisible).

@@ -1554,11 +1554,13 @@ object DedupOps {
     * materialized once (it anchors both anti-joins); the caller must
     * [[Checkpoints.release]] BOTH returned frames after its terminal
     * action (the admitted frame no longer embeds the signature
-    * checkpoint). */
+    * checkpoint). The third result is the index's `(bands, rows)`,
+    * which the append of the same signatures reuses instead of reading
+    * the `params` table again. */
   private[graft] def minhashAdmitWithSigs(
       spark: org.apache.spark.sql.SparkSession, path: String,
       newDocs: DataFrame, idCol: String, textCol: String,
-      threshold: Double): (DataFrame, DataFrame) = {
+      threshold: Double): (DataFrame, DataFrame, (Int, Int)) = {
     val snap = Segments.snapshot(spark, path)
     val p = Segments.scan(spark, path, snap, "params").head()
     val (n, bands, rows) =
@@ -1586,23 +1588,23 @@ object DedupOps {
       .select(col("in_doc").as(idCol)).distinct(), reliable = false)
     (newDocs.join(rejected, Seq(idCol), "left_anti"),
       inSig.join(rejected.select(col(idCol).as("doc_id")),
-        Seq("doc_id"), "left_anti"))
+        Seq("doc_id"), "left_anti"),
+      (bands, rows))
   }
 
   /** [[appendToMinhashIndex]] from the admit's PRECOMPUTED signatures
     * (doc_id, sig rows hashed with the index's pinned params) — skips
-    * the second shingle+minhash pass over the admitted docs. Same
-    * idempotence contract. */
+    * the second shingle+minhash pass over the admitted docs. `banding`
+    * is the `(bands, rows)` of those params, as
+    * [[minhashAdmitWithSigs]] returns it. Same idempotence contract. */
   private[graft] def appendToMinhashIndexSigs(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      sigs: DataFrame, batchId: String): Unit = {
+      sigs: DataFrame, banding: (Int, Int), batchId: String): Unit = {
     val snap = Segments.snapshot(spark, path)
     val seg = s"delta_$batchId"
     Segments.append(spark, path, snap, batchId, seg,
         Seq("sigs", "banded")) {
-      val p = Segments.scan(spark, path, snap, "params").head()
-      writeMinhashSegmentSigs(sigs, path, seg,
-        p.getAs[Int]("bands"), p.getAs[Int]("rows"))
+      writeMinhashSegmentSigs(sigs, path, seg, banding._1, banding._2)
     }
   }
 

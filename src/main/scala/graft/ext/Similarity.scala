@@ -731,7 +731,10 @@ object Similarity {
       path: String, snap: graft.sinks.IndexSnapshot): DataFrame = {
     val segs = snap.segs("corpus")
     require(segs.nonEmpty, s"index at $path has no corpus segments")
-    val base = spark.read.parquet(s"$path/corpus")
+    // the schema comes from a committed segment's footer: an orphaned
+    // (never-committed) batch dir cannot inject columns
+    val base = Segments.read(spark, Seq(s"$path/corpus"),
+        Some(s"$path/corpus/batch=${segs.head}"))
       .filter(col("batch").isin(segs: _*))
     // tombstone-aware: every index reader (serve, kNN, cell stats,
     // admission, compaction fold, retrain training set) sees the live
@@ -755,7 +758,7 @@ object Similarity {
     // contract and the cheapest listing
     val segs = snap.segs("corpus")
     require(segs.nonEmpty, s"index at $path has no corpus segments")
-    spark.read.parquet(s"$path/corpus/batch=${segs.head}")
+    Segments.read(spark, Seq(s"$path/corpus/batch=${segs.head}"))
       .schema.fieldNames.toSeq.filterNot(IvfCoreCols.contains)
   }
 
@@ -836,7 +839,7 @@ object Similarity {
     require(segs.length == 1,
       s"index at $path must have exactly one centroid generation " +
         s"(got $segs)")
-    spark.read.parquet(s"$path/centroids/${segs.head}")
+    Segments.scan(spark, path, snap, "centroids")
       .select(col("cluster_id"), col("centroid"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1).toSeq
   }
@@ -1052,7 +1055,7 @@ object Similarity {
             "retrain (appends compose); rerun retrainIvfIndex")
         val carrySeg = s"${seg}_carry_$b"
         Clustering.assignTo(
-            spark.read.parquet(s"$path/corpus/batch=$b")
+            Segments.read(spark, Seq(s"$path/corpus/batch=$b"))
               .select(col("vec_id") +: col("v").as("_v") +:
                 col("nrm") +: meta.map(col): _*),
             centroids)
@@ -1332,7 +1335,7 @@ object Similarity {
     require(segs.length == 1,
       s"index at $path must have exactly one codebook generation " +
         s"(got $segs)")
-    spark.read.parquet(s"$path/codebooks/${segs.head}")
+    Segments.scan(spark, path, snap, "codebooks")
       .select(col("subspace"), col("cluster_id"), col("centroid"))
       .as[(Int, Long, Seq[Double])].collect()
       .groupBy(_._1).toSeq.sortBy(_._1)

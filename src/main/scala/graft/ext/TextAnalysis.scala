@@ -1521,10 +1521,11 @@ object TextAnalysis {
     * query; a term matching nothing contributes nothing, a query
     * whose terms all miss yields no rows.
     *
-    * Driver contract: the batch's DISTINCT TERM UNION is collected to
-    * build the pushed `term IN (...)` scan filter (the same
-    * driver-bounded class as the k-row centroid reloads) — queries ×
-    * terms is serving-request metadata, never corpus-sized. */
+    * Driver contract: the batch's TERM UNION is collected (and
+    * de-duplicated on the driver) to build the pushed `term IN (...)`
+    * scan filter (the same driver-bounded class as the k-row centroid
+    * reloads) — queries × terms is serving-request metadata, never
+    * corpus-sized. */
   def queryBm25IndexBatch(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, queryIdCol: String,
       termsCol: String, k: Int = 10, k1: Double = 1.2,
@@ -1534,8 +1535,10 @@ object TextAnalysis {
         col(queryIdCol).cast(LongType).as("query_id"),
         explode(array_distinct(
           transform(col(termsCol), t => lower(t)))).as("term"))
-    val termList = q.select("term").distinct()
-      .collect().map(_.getString(0)).toSeq
+    // de-duplicated on the driver: the list is request metadata, and a
+    // `distinct` would cost a shuffle and a second job
+    val termList = q.select("term").collect().map(_.getString(0))
+      .distinct.toSeq
     require(termList.nonEmpty, "queries must carry at least one term")
     require(termList.forall(t => t != null && t.nonEmpty),
       "query terms must be non-null, non-empty strings " +

@@ -1,8 +1,15 @@
 package graft.sinks
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions.{col, regexp_extract}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The family-facing half of the [[IndexManifest]] protocol: every
   * persisted index, ledger and sketch (BM25, IVF/IVFPQ, MinHash,
@@ -69,7 +76,59 @@ private[graft] object Segments {
     val segs = snap.segs(table)
     require(segs.nonEmpty,
       s"snapshot v${snap.version} at $path has no '$table' segments")
-    spark.read.parquet(segs.map(s => s"$path/$table/$s"): _*)
+    read(spark, segs.map(s => s"$path/$table/$s"))
+  }
+
+  /** The one reader of committed segment directories: parquet `dirs`
+    * read under the Spark schema stored in ONE footer of `schemaDir`
+    * (default: the first listed dir), read on the driver. Without it,
+    * `spark.read.parquet` infers the schema by a Spark job that reads
+    * that same footer (parquet schema inference runs its footer reads
+    * as a job even when there is nothing to merge), so every index
+    * read paid one job before its plan existed. Only the data columns
+    * come from the footer: partition columns (the IVF corpus's
+    * `batch`/`bucket`) are still found by partition discovery, with
+    * the types it infers. A dir with no data file to read a footer
+    * from falls back to plain inference and its errors. */
+  def read(spark: SparkSession, dirs: Seq[String],
+      schemaDir: Option[String] = None): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    footerSchema(conf, new Path(schemaDir.getOrElse(dirs.head))) match {
+      case Some(schema) => spark.read.schema(schema).parquet(dirs: _*)
+      case None => spark.read.parquet(dirs: _*)
+    }
+  }
+
+  /** The Spark row schema Spark wrote into the footer of the first
+    * data file under `dir` (depth-first, hidden `_`/`.` names skipped
+    * as partition discovery skips them); None when there is no such
+    * file or the footer carries no Spark schema. */
+  private def footerSchema(conf: Configuration, dir: Path)
+      : Option[StructType] = {
+    val fs = dir.getFileSystem(conf)
+    def hidden(name: String) =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+    def firstFile(d: Path): Option[Path] = {
+      val (files, subdirs) = fs.listStatus(d)
+        .filterNot(st => hidden(st.getPath.getName)).partition(_.isFile)
+      files.headOption.map(_.getPath)
+        .orElse(subdirs.iterator.flatMap(st => firstFile(st.getPath))
+          .nextOption())
+    }
+    val file = if (fs.exists(dir)) firstFile(dir) else None
+    file.flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf),
+        HadoopReadOptions.builder(conf)
+          .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          .build())
+      val json =
+        try reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(ParquetReadSupport.SPARK_METADATA_KEY)
+        finally reader.close()
+      Option(json).map(DataType.fromJson).collect {
+        case s: StructType => s
+      }
+    }
   }
 
   /** The tombstone table of every family that deletes: rows scoping

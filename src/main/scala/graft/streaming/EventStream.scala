@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.sinks.Upsert
+import graft.sinks.{Segments, Upsert}
 
 /** Structured-Streaming restatement of the reference's incremental-batch
   * contract (SURVEY §2.11): the reference re-pulls a 3-hour window daily
@@ -41,9 +41,10 @@ object EventStream {
     * the source picks them up incrementally).
     *
     * Streaming sources need a declared schema, so we sniff the `ts`
-    * encoding from the directory's parquet footers with one driver-side
-    * batch-schema read (metadata only — no data scan), then declare the
-    * matching stream schema and normalize exactly as
+    * encoding from one of the directory's parquet footers, read on the
+    * driver ([[graft.sinks.Segments.read]] — metadata only, no data
+    * scan and no schema-inference job), then declare the matching
+    * stream schema and normalize exactly as
     * [[graft.sources.Tables.normalizeTs]] does for batch: nanos-long →
     * `div 1000` → micros; micros-NTZ → cast (UTC-pinned sessions).
     *
@@ -62,7 +63,7 @@ object EventStream {
       emptyDirTs: Option[DataType] = None): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val sniffed =
-      try Some(spark.read.parquet(eventsDir).schema)
+      try Some(Segments.read(spark, Seq(eventsDir)).schema)
       catch {
         case e: org.apache.spark.sql.AnalysisException
             if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -56,11 +57,10 @@ object StreamIndex {
     * (sum-combined so partition order cannot change the id; two
     * 64-bit hashes put an id collision between DIFFERENT batches at
     * ~2^-96, while a replay of the SAME batch reproduces it exactly —
-    * the property the idempotent appends key on). One cheap aggregate
-    * over the batch, driver reads a single row. Addends are bounded
-    * (crc32 is 32-bit, xxhash64 taken mod a 30-bit prime) so the
-    * ANSI-mode long sum cannot overflow below ~2^31 rows per
-    * micro-batch.
+    * the property the idempotent appends key on). One pass over the
+    * batch ([[countAndSums]]). Addends are bounded (crc32 is 32-bit,
+    * xxhash64 taken mod a 30-bit prime) so the long sums cannot
+    * overflow below ~2^31 rows per micro-batch.
     *
     * IDENTITY IS THE ID SET, not the payload: two batches carrying the
     * same ids with DIFFERENT values/text collide on batchId — by
@@ -71,16 +71,43 @@ object StreamIndex {
     * never admit, never land). Ingest pipelines assign fresh ids per
     * landed batch; a corrected document is a NEW id plus a ledger
     * delete of the old one. */
-  private def contentBatchId(batch: DataFrame, idCol: String)
+  private[streaming] def contentBatchId(batch: DataFrame, idCol: String)
       : (String, Long) = {
-    val r = batch.agg(
-      count(lit(1)),
-      coalesce(sum(crc32(col(idCol).cast("string"))), lit(0L)),
-      coalesce(sum(pmod(xxhash64(col(idCol).cast("string")),
-        lit(1073741789L))), lit(0L))).head()
-    (s"stream_c${r.getLong(0)}_" +
-      java.lang.Long.toHexString(r.getLong(1)) + "_" +
-      java.lang.Long.toHexString(r.getLong(2)), r.getLong(0))
+    val (n, Seq(crc, xx)) = countAndSums(batch, idHashes(col(idCol)): _*)
+    (s"stream_c${n}_" + java.lang.Long.toHexString(crc) + "_" +
+      java.lang.Long.toHexString(xx), n)
+  }
+
+  /** The two batch-id hash addends of one row key (see
+    * [[contentBatchId]]). */
+  private def idHashes(key: Column): Seq[Column] = {
+    val k = key.cast("string")
+    Seq(crc32(k), pmod(xxhash64(k), lit(1073741789L)))
+  }
+
+  /** The row count of `batch` and the sum of the non-null values of
+    * each long column in `cols`, in ONE Spark job: an RDD aggregate
+    * over the projected rows. A DataFrame `agg` over the persisted
+    * batch runs three (the cache fill, an AQE map stage and the
+    * result). An empty or all-null column sums to 0, as
+    * `coalesce(sum(c), 0)` does, and `Math.addExact` keeps the
+    * overflow failure of the ANSI `sum`. */
+  private def countAndSums(batch: DataFrame, cols: Column*)
+      : (Long, Seq[Long]) = {
+    val n = cols.length
+    val acc = batch.select(cols: _*).queryExecution.toRdd
+      .aggregate(new Array[Long](n + 1))(
+        (a, row) => {
+          a(0) += 1
+          for (i <- 0 until n if !row.isNullAt(i))
+            a(i + 1) = Math.addExact(a(i + 1), row.getLong(i))
+          a
+        },
+        (a, b) => {
+          for (i <- 0 to n) a(i) = Math.addExact(a(i), b(i))
+          a
+        })
+    (acc(0), acc.toSeq.tail)
   }
 
   /** The one landed-file driver under every writer: each parquet file
@@ -407,10 +434,11 @@ object StreamIndex {
       // the admission already computed instead of tokenizing the
       // admitted docs a second time; the sigs frame is the one that
       // still embeds the signature checkpoint, so it is released too
-      val (admitted, admittedSigs) = DedupOps.minhashAdmitWithSigs(s,
-        ledgerPath, b, idCol, textCol, threshold)
-      Landing(admitted,
-        DedupOps.appendToMinhashIndexSigs(s, ledgerPath, admittedSigs, _),
+      val (admitted, admittedSigs, banding) =
+        DedupOps.minhashAdmitWithSigs(s, ledgerPath, b, idCol, textCol,
+          threshold)
+      Landing(admitted, DedupOps.appendToMinhashIndexSigs(s, ledgerPath,
+          admittedSigs, banding, _),
         also = Seq(admittedSigs))
     }
 
@@ -521,34 +549,30 @@ object StreamIndex {
   /** One CDC micro-batch as its legs see it: the epoch-and-content
     * batchId, the two op counts, the id column, the ids every leg
     * tombstones and the upsert rows every leg re-lands. */
-  private final case class CdcBatch(bid: String, nDel: Long, nUp: Long,
-      idCol: String, ids: DataFrame, ups: DataFrame)
+  private[streaming] final case class CdcBatch(bid: String, nDel: Long,
+      nUp: Long, idCol: String, ids: DataFrame, ups: DataFrame)
 
-  /** The CDC micro-batch identity + validation: ONE aggregate pays
-    * for the epoch-and-content batchId, both op counts, and the
-    * op-domain check. `valueCols` are the payload columns (text for
-    * the lexical index, the vector for the IVF index, BOTH for the
-    * dual writer — the id must cover every payload a replay could
-    * diverge on). See [[bm25CdcWriter]] for why the EPOCH is part of
-    * the id. */
-  private def cdcBatch(batch: DataFrame, epoch: Long, idCol: String,
-      opCol: String, valueCols: Seq[String]): CdcBatch = {
+  /** The CDC micro-batch identity + validation: ONE pass
+    * ([[countAndSums]]) pays for the epoch-and-content batchId, both op
+    * counts, and the op-domain check. `valueCols` are the payload
+    * columns (text for the lexical index, the vector for the IVF index,
+    * BOTH for the dual writer — the id must cover every payload a
+    * replay could diverge on). See [[bm25CdcWriter]] for why the EPOCH
+    * is part of the id. */
+  private[streaming] def cdcBatch(batch: DataFrame, epoch: Long,
+      idCol: String, opCol: String, valueCols: Seq[String]): CdcBatch = {
     val key = concat_ws("|",
       (Seq(col(idCol).cast("string"), col(opCol)) ++
         valueCols.map(c => coalesce(col(c).cast("string"), lit("")))): _*)
-    val r = batch.agg(
-      count(lit(1)),
-      coalesce(sum(crc32(key)), lit(0L)),
-      coalesce(sum(pmod(xxhash64(key), lit(1073741789L))), lit(0L)),
-      count(when(col(opCol) === "delete", 1)),
-      count(when(col(opCol) === "upsert", 1))).head()
-    require(r.getLong(3) + r.getLong(4) == r.getLong(0),
+    val (n, Seq(crc, xx, nDel, nUp)) = countAndSums(batch,
+      idHashes(key) ++ Seq("delete", "upsert").map(op =>
+        when(col(opCol) === op, 1L)): _*)
+    require(nDel + nUp == n,
       s"cdc batch carries ops outside upsert|delete " +
-        s"(${r.getLong(0) - r.getLong(3) - r.getLong(4)} row(s))")
-    CdcBatch(s"cdc_e${epoch}_c${r.getLong(0)}_" +
-        java.lang.Long.toHexString(r.getLong(1)) + "_" +
-        java.lang.Long.toHexString(r.getLong(2)),
-      r.getLong(3), r.getLong(4), idCol, batch.select(col(idCol)),
+        s"(${n - nDel - nUp} row(s))")
+    CdcBatch(s"cdc_e${epoch}_c${n}_" + java.lang.Long.toHexString(crc) +
+        "_" + java.lang.Long.toHexString(xx),
+      nDel, nUp, idCol, batch.select(col(idCol)),
       batch.filter(col(opCol) === "upsert"))
   }
 

@@ -2,9 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.scalatest.funsuite.AnyFunSuite
-
-class ConcurrentlySpec extends AnyFunSuite {
+class ConcurrentlySpec extends SparkSpec {
 
   test("results come back in input order") {
     // later thunks finish first: order must follow the input, not
@@ -47,5 +45,24 @@ class ConcurrentlySpec extends AnyFunSuite {
       })).sum))
     assert(got == (0 until width).map(i =>
       (0 until width).map(i * width + _).sum))
+  }
+
+  test("pool thunks run with their caller's job group and session") {
+    val sc = spark.sparkContext
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    // what each thunk sees; the calling thread runs the first one
+    def seen(group: String): Seq[(String, Boolean)] = {
+      sc.setJobGroup(group, group)
+      try Concurrently.all((0 until 4).map(_ => () => {
+        Thread.sleep(20)
+        (sc.getLocalProperty("spark.jobGroup.id"),
+          org.apache.spark.sql.SparkSession.getActiveSession
+            .contains(spark))
+      }))
+      finally sc.clearJobGroup()
+    }
+    // the second call reuses the pool threads the first one ran on
+    for (g <- Seq("caller-a", "caller-b"))
+      assert(seen(g) == Seq.fill(4)((g, true)))
   }
 }

@@ -55,4 +55,16 @@ class SegmentsChokePointSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"name the tombstone table with Segments.Deletes: $offenders")
   }
+
+  test("ext/ and streaming/ read parquet only through Segments.read") {
+    // a bare `spark.read.parquet` infers its schema with a Spark job;
+    // Segments.read takes it from one footer on the driver
+    val offenders = for {
+      dir <- Seq("ext", "streaming")
+      (p, text) <- sources(main.resolve(dir))
+      if text.contains("read.parquet(")
+    } yield p.toString
+    assert(offenders.isEmpty,
+      s"read index tables with Segments.read or Segments.scan: $offenders")
+  }
 }

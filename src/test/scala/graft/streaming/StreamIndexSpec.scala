@@ -524,4 +524,61 @@ class StreamIndexSpec extends SparkSpec {
       }
     }
   }
+
+  test("micro-batch ids equal the DataFrame aggregate formula, in one " +
+      "job (null and repeated ids included)") {
+    // the ids are stored in `applied` records, so the one-pass sums
+    // must reproduce the aggregate they replaced bit for bit
+    val b0 = Seq[(java.lang.Long, String, String, String)](
+        (1L, "a", "upsert", "x"), (1L, "a", "upsert", "x"),
+        (null, "b", "delete", null), (7L, null, "upsert", "y"),
+        (null, null, "delete", null), (7L, "c", "delete", "y"))
+      .toDF("id", "text", "op", "tag")
+    // a landed micro-batch is a parquet scan: land the rows as 3 files
+    val landedDir = Files.createTempDirectory("graft-batchid-").toString
+    b0.repartition(3).write.mode("overwrite").parquet(landedDir)
+    val b = spark.read.schema(b0.schema).parquet(landedDir)
+    def hex(l: Long) = java.lang.Long.toHexString(l)
+    def sums(key: org.apache.spark.sql.Column) = {
+      val r = b.agg(count(lit(1)),
+        coalesce(sum(crc32(key)), lit(0L)),
+        coalesce(sum(pmod(xxhash64(key), lit(1073741789L))), lit(0L)),
+        count(when(col("op") === "delete", 1)),
+        count(when(col("op") === "upsert", 1))).head()
+      (0 until 5).map(r.getLong)
+    }
+    val Seq(n, c, x, _, _) = sums(col("id").cast("string"))
+    // persisted as the landed-file driver persists each micro-batch:
+    // the id pass is the batch's first action and fills the cache
+    val batch = b.persist(org.apache.spark.storage.StorageLevel
+      .MEMORY_AND_DISK)
+    try {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val got =
+        try StreamIndex.contentBatchId(batch, "id")
+        finally {
+          org.apache.spark.graft.BenchHygiene
+            .drainListenerBus(spark.sparkContext)
+          spark.sparkContext.removeSparkListener(listener)
+        }
+      assert(got == ((s"stream_c${n}_${hex(c)}_${hex(x)}", n)))
+      assert(jobs.get == 1, s"batch id ran ${jobs.get} jobs")
+
+      val key = concat_ws("|", col("id").cast("string"), col("op"),
+        coalesce(col("text").cast("string"), lit("")),
+        coalesce(col("tag").cast("string"), lit("")))
+      val Seq(m, kc, kx, nDel, nUp) = sums(key)
+      val cdc = StreamIndex.cdcBatch(batch, 3L, "id", "op",
+        Seq("text", "tag"))
+      assert(cdc.bid == s"cdc_e3_c${m}_${hex(kc)}_${hex(kx)}")
+      assert((cdc.nDel, cdc.nUp) == ((nDel, nUp)))
+      assert((nDel, nUp) == ((3L, 3L)))
+    } finally batch.unpersist()
+  }
 }
